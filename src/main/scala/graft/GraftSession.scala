@@ -5,12 +5,19 @@ import org.apache.spark.sql.SparkSession
 /** Canonical session factory: one place that wires the confs this
   * engine expects — shuffle parallelism sized to the machine (not
   * Spark's default 200), AQE for runtime re-planning and skew joins,
-  * UTC session time, the corpus's nano-timestamp read mode, and the
-  * graft SQL functions. `Bench`/`Verify` build through here; library
-  * users can instead call [[GraftExtensions.register]] /
-  * [[graft.sources.Tables.configure]] on an existing session.
+  * UTC session time, the RocksDB state store every keyed-state
+  * streaming op needs (`transformWithState` requires it), the corpus's
+  * nano-timestamp read mode, and the graft SQL functions.
+  * `Bench`/`Verify` build through here; library users can instead call
+  * [[GraftExtensions.register]] / [[graft.sources.Tables.configure]] on
+  * an existing session (and set the state store provider to
+  * [[RocksDbStateStore]] for the streaming ops).
   */
 object GraftSession {
+
+  /** The state store `transformWithState` requires. */
+  val RocksDbStateStore =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   def create(
       master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
@@ -31,6 +38,8 @@ object GraftSession {
       // hard broadcast() hint cannot do.
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        RocksDbStateStore)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions())
       .getOrCreate()

@@ -9,11 +9,10 @@ import graft.kernel.AnomalyzerConf
 import graft.streaming.{SeriesPoint, StreamingDetector, StreamingNearDup}
 
 /** Streaming throughput bench (VERDICT r11 #6): replays the sf corpus
-  * through the two flagship keyed-state operators on BOTH backends and
-  * prints ONE JSON line with rows/s, wall seconds, and state-store
-  * size, so the streaming story has recorded numbers next to its
-  * parity pins (TwsParitySpec pins WHAT the backends compute — this
-  * records HOW FAST).
+  * through the two flagship keyed-state operators and prints ONE JSON
+  * line with rows/s, wall seconds, and state-store size, so the
+  * streaming story has recorded numbers next to its stream==batch
+  * pins (the specs pin WHAT the ops compute — this records HOW FAST).
   *
   * Workloads:
   *  - detector: events.parquet → SeriesPoint(series = event_type #
@@ -23,12 +22,10 @@ import graft.streaming.{SeriesPoint, StreamingDetector, StreamingNearDup}
   *  - neardup: documents.parquet → MinHash-LSH band claims
   *    (16 band rows/doc of keyed first-claim state).
   *
-  * Both backends run on the RocksDB store (required by TWS, legal for
-  * FMGWS) so the measured axis is the API, plus one FMGWS row on the
-  * default HDFS-backed provider as the classic baseline. Each workload
-  * runs one untimed warmup feed (codegen + state-store init) before
-  * its timed feed — the numbers are steady-state micro-batch
-  * throughput, not first-batch compilation. A second, LARGE-batch
+  * Both run on the RocksDB store [[GraftSession.create]] configures.
+  * Each workload runs one untimed warmup feed (codegen + state-store
+  * init) before its timed feed — the numbers are steady-state
+  * micro-batch throughput, not first-batch compilation. A second, LARGE-batch
   * point (default 4 batches) rides along under "large_batch": small
   * batches measure micro-batch machinery (~0.8 s fixed per batch),
   * so the kernel-throughput regression signal lives here.
@@ -40,10 +37,6 @@ import graft.streaming.{SeriesPoint, StreamingDetector, StreamingNearDup}
   * empty stream cannot flatter the numbers.
   */
 object StreamBench {
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val conf = AnomalyzerConf(
     sensitivity = 0.1, upperBound = 100, lowerBound = Some(0),
@@ -68,37 +61,29 @@ object StreamBench {
     * the whole feed (addData + processAllAvailable per batch).
     */
   private def runStream[I: Encoder, O](spark: SparkSession,
-      batches: Seq[Seq[I]], provider: String)(
-      build: Dataset[I] => Dataset[O]): Run = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, provider)
+      batches: Seq[Seq[I]])(build: Dataset[I] => Dataset[O]): Run = {
+    sinkN += 1
+    val name = s"stream_bench_sink_$sinkN"
+    val input = MemoryStream[I](spark)
+    val q = build(input.toDS()).writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
     try {
-      sinkN += 1
-      val name = s"stream_bench_sink_$sinkN"
-      val input = MemoryStream[I](spark)
-      val q = build(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      try {
-        val t0 = System.nanoTime()
-        batches.foreach { b =>
-          input.addData(b)
-          q.processAllAvailable()
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val st = Option(q.lastProgress).toSeq
-          .flatMap(_.stateOperators.toSeq)
-        val outRows = spark.table(name).count()
-        // drop the memory sink's accumulated rows — nine feeds
-        // (warmups included) would otherwise retain every output row
-        // in driver memory for the process lifetime
-        spark.catalog.dropTempView(name)
-        Run(outRows, wall,
-          st.map(_.numRowsTotal).sum, st.map(_.memoryUsedBytes).sum)
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(ProviderKey, p)
-      case None => spark.conf.unset(ProviderKey)
-    }
+      val t0 = System.nanoTime()
+      batches.foreach { b =>
+        input.addData(b)
+        q.processAllAvailable()
+      }
+      val wall = (System.nanoTime() - t0) / 1e9
+      val st = Option(q.lastProgress).toSeq
+        .flatMap(_.stateOperators.toSeq)
+      val outRows = spark.table(name).count()
+      // drop the memory sink's accumulated rows — six feeds (warmups
+      // included) would otherwise retain every output row in driver
+      // memory for the process lifetime
+      spark.catalog.dropTempView(name)
+      Run(outRows, wall,
+        st.map(_.numRowsTotal).sum, st.map(_.memoryUsedBytes).sum)
+    } finally q.stop()
   }
 
   def main(args: Array[String]): Unit = {
@@ -136,16 +121,12 @@ object StreamBench {
       .map { case (id, text) =>
         (id, new Timestamp(1700000000000L + id), text) }
 
-    def detector(provider: String, tws: Boolean, batches: Int): Run =
-      runStream(spark, batched(pts, batches), provider)(ds =>
-        if (tws) StreamingDetector.scoreTws(ds, conf)
-        else StreamingDetector.score(ds, conf))
-    def neardup(provider: String, tws: Boolean, batches: Int): Run =
-      runStream(spark, batched(docRows, batches), provider) { ds =>
-        val df = ds.toDF("doc_id", "ts", "text")
-        if (tws) StreamingNearDup.bandHitsTws(df)(spark)
-        else StreamingNearDup.bandHits(df)(spark)
-      }
+    def detector(batches: Int): Run =
+      runStream(spark, batched(pts, batches))(ds =>
+        StreamingDetector.scoreTws(ds, conf))
+    def neardup(batches: Int): Run =
+      runStream(spark, batched(docRows, batches))(ds =>
+        StreamingNearDup.bandHitsTws(ds.toDF("doc_id", "ts", "text"))(spark))
 
     // every TIMED feed carries its own ambient probes (VERDICT r13 #3:
     // stream rows were the last measurement class without the calib
@@ -166,52 +147,31 @@ object StreamBench {
       r.copy(probe = p, diskProbe = dp)
     }
 
-    // warmup feed per workload+backend (codegen, state-provider init),
-    // then the timed feed on a fresh query — the HDFS-backed row warms
-    // its own provider so all three detector rows are comparable
-    val Hdfs =
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    detector(RocksDb, tws = false, nBatches)
-    detector(RocksDb, tws = true, nBatches)
-    detector(Hdfs, tws = false, nBatches)
-    val detFmgwsHdfs = probed(detector(Hdfs, tws = false, nBatches))
-    val detFmgws = probed(detector(RocksDb, tws = false, nBatches))
-    val detTws = probed(detector(RocksDb, tws = true, nBatches))
-    neardup(RocksDb, tws = false, nBatches)
-    neardup(RocksDb, tws = true, nBatches)
-    val ndFmgws = probed(neardup(RocksDb, tws = false, nBatches))
-    val ndTws = probed(neardup(RocksDb, tws = true, nBatches))
-    // large-batch point: state providers already warm from the rows
-    // above; one timed feed per workload + API on the RocksDB store
-    val detFmgwsL = probed(detector(RocksDb, tws = false, nLarge))
-    val detTwsL = probed(detector(RocksDb, tws = true, nLarge))
-    val ndFmgwsL = probed(neardup(RocksDb, tws = false, nLarge))
-    val ndTwsL = probed(neardup(RocksDb, tws = true, nLarge))
+    // warmup feed per workload (codegen, state-provider init), then
+    // the timed feed on a fresh query
+    detector(nBatches)
+    val det = probed(detector(nBatches))
+    neardup(nBatches)
+    val nd = probed(neardup(nBatches))
+    // large-batch point: state provider already warm from the rows above
+    val detL = probed(detector(nLarge))
+    val ndL = probed(neardup(nLarge))
 
-    require(detFmgws.rows == pts.length && detTws.rows == pts.length &&
-      detFmgwsL.rows == pts.length && detTwsL.rows == pts.length,
-      s"detector row mismatch: ${detFmgws.rows}/${detTws.rows}/" +
-        s"${detFmgwsL.rows}/${detTwsL.rows} vs ${pts.length}")
-    require(ndFmgws.rows == ndTws.rows && ndFmgws.rows > 0 &&
-      ndFmgwsL.rows == ndFmgws.rows && ndTwsL.rows == ndFmgws.rows,
-      s"neardup row mismatch: ${ndFmgws.rows}/${ndTws.rows}/" +
-        s"${ndFmgwsL.rows}/${ndTwsL.rows}")
+    require(det.rows == pts.length && detL.rows == pts.length,
+      s"detector row mismatch: ${det.rows}/${detL.rows} vs ${pts.length}")
+    require(nd.rows > 0 && ndL.rows == nd.rows,
+      s"neardup row mismatch: ${nd.rows}/${ndL.rows}")
 
     println(s"""{"metric":"stream_rows_per_sec",""" +
-      s""""value":${detTws.rowsPerSec.toLong},"unit":"rows/s",""" +
+      s""""value":${det.rowsPerSec.toLong},"unit":"rows/s",""" +
       s""""batches":$nBatches,"series":$nSeries,""" +
       s""""probe_ref":${AmbientProbe.ref},""" +
       s""""disk_ref":${AmbientProbe.diskRef},""" +
-      s""""detector_fmgws_hdfs":${detFmgwsHdfs.json},""" +
-      s""""detector_fmgws_rocksdb":${detFmgws.json},""" +
-      s""""detector_tws_rocksdb":${detTws.json},""" +
-      s""""neardup_fmgws_rocksdb":${ndFmgws.json},""" +
-      s""""neardup_tws_rocksdb":${ndTws.json},""" +
+      s""""detector_tws_rocksdb":${det.json},""" +
+      s""""neardup_tws_rocksdb":${nd.json},""" +
       s""""large_batch":{"batches":$nLarge,""" +
-      s""""detector_fmgws_rocksdb":${detFmgwsL.json},""" +
-      s""""detector_tws_rocksdb":${detTwsL.json},""" +
-      s""""neardup_fmgws_rocksdb":${ndFmgwsL.json},""" +
-      s""""neardup_tws_rocksdb":${ndTwsL.json}},""" +
+      s""""detector_tws_rocksdb":${detL.json},""" +
+      s""""neardup_tws_rocksdb":${ndL.json}},""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
   }

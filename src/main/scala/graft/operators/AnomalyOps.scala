@@ -74,7 +74,7 @@ object AnomalyOps {
 
   /** Typed facade, symmetric with the streaming API: the same
     * `Dataset[SeriesPoint] => Dataset[AnomalyScore]` shape as
-    * [[graft.streaming.StreamingDetector.score]], and — because all
+    * [[graft.streaming.StreamingDetector.scoreTws]], and — because all
     * paths share one seed derivation — the same probabilities.
     */
   def score(points: org.apache.spark.sql.Dataset[graft.streaming.SeriesPoint],

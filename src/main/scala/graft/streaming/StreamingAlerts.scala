@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** The paging layer over [[StreamingDetector]]: turn a score stream
   * into deduplicated ALERTS — fire on the upward crossing of the
@@ -42,8 +42,8 @@ object StreamingAlerts {
     else (s.copy(wasAbove = above), None)
   }
 
-  /** The per-series batch fold both backends share: apply [[step]] in
-    * the detector's within-batch total order.
+  /** The per-series batch fold: apply [[step]] in the detector's
+    * within-batch total order.
     */
   private def fold(threshold: Double, cooldownSec: Long)(
       key: String, prev: Option[AlertState],
@@ -61,29 +61,8 @@ object StreamingAlerts {
     (s, out.iterator)
   }
 
-  /** Legacy `flatMapGroupsWithState` twin of [[alertsTws]] — kept for
-    * HDFS-backed state stores and as TwsParitySpec's parity
-    * baseline; new pipelines should use [[alertsTws]] (Spark's
-    * forward path: native timers, RocksDB, state v2).
-    */
-  def alerts(scores: Dataset[AnomalyScore], threshold: Double,
-      cooldownSec: Long)(implicit
-      spark: SparkSession): Dataset[Alert] = {
-    import spark.implicits._
-    scores.groupByKey(_.series)
-      .flatMapGroupsWithState[AlertState, Alert](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state) =>
-          val (next, out) =
-            fold(threshold, cooldownSec)(key, state.getOption, rows)
-          state.update(next)
-          out
-      }
-  }
-
-  /** The DEFAULT streaming form of [[alerts]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same edge-trigger fold, same alerts.
+  /** Append-mode alert stream: the edge-trigger fold per series in
+    * keyed state.
     */
   def alertsTws(scores: Dataset[AnomalyScore], threshold: Double,
       cooldownSec: Long)(implicit
@@ -92,7 +71,6 @@ object StreamingAlerts {
     scores.groupByKey(_.series)
       .transformWithState(
         new Tws.FoldProcessor(fold(threshold, cooldownSec)),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.functions.{BloomParams, HashScheme => H, TextHashFunctions}
 
@@ -88,11 +88,8 @@ object StreamingCuration {
         col("flag_benchmark"))
   }
 
-  /** Update-mode decision stream with event-time idle TTL on the
-    * dup-claim state.
-    */
-  /** The per-content-hash batch fold both backends share: first
-    * arrival claims the hash, later ones are duplicates.
+  /** The per-content-hash batch fold: first arrival claims the hash,
+    * later ones are duplicates.
     */
   private def fold(key: Long, prev: Option[ClaimState],
       rows: Iterator[Flagged]): (ClaimState, Iterator[Decision]) = {
@@ -111,36 +108,9 @@ object StreamingCuration {
     (s, out.iterator)
   }
 
-  /** Legacy `flatMapGroupsWithState` twin of [[decisionsTws]] — kept for
-    * HDFS-backed state stores and as TwsParitySpec's parity
-    * baseline; new pipelines should use [[decisionsTws]] (Spark's
-    * forward path: native timers, RocksDB, state v2).
-    */
-  def decisions(docs: DataFrame, bitmap: DataFrame,
-      idleTtl: java.time.Duration, watermarkDelay: String = "0 seconds")(
-      implicit spark: SparkSession): Dataset[Decision] = {
-    import spark.implicits._
-    flagged(docs.withWatermark("ts", watermarkDelay), bitmap).as[Flagged]
-      .groupByKey(_.content_hash)
-      .flatMapGroupsWithState[ClaimState, Decision](OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) { case (key, rows, state) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val (s, out) = fold(key, state.getOption, rows)
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(s.act_ms + idleTtl.toMillis,
-            state.getCurrentWatermarkMs() + 1))
-          out
-        }
-      }
-  }
-
-  /** The DEFAULT streaming form of [[decisions]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same claim fold, same decisions,
-    * eviction via an event-time timer at the same high-water + TTL
-    * deadline.
+  /** Update-mode decision stream with event-time idle TTL on the
+    * dup-claim state ([[Tws.TtlFoldProcessor]]'s high-water + TTL
+    * deadline).
     */
   def decisionsTws(docs: DataFrame, bitmap: DataFrame,
       idleTtl: java.time.Duration, watermarkDelay: String = "0 seconds")(
@@ -151,7 +121,6 @@ object StreamingCuration {
       .transformWithState(
         new Tws.TtlFoldProcessor(fold, (s: ClaimState) => s.act_ms,
           idleTtl.toMillis),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update())
+        TimeMode.EventTime(), OutputMode.Update())
   }
 }

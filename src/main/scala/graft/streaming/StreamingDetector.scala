@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.kernel.{AnomalyzerConf, Ensemble}
 
@@ -17,13 +18,15 @@ case class AnomalyScore(series: String, ts: Timestamp, value: Double,
     prob: Double)
 
 /** Per-series streaming state: the bounded tail buffer (the reference's
-  * Update-truncated vector, anomalyze.go:127-131) plus a monotone push
-  * counter feeding the deterministic RNG seed.
+  * Update-truncated vector, anomalyze.go:127-131), a monotone push
+  * counter feeding the deterministic RNG seed, and the activity
+  * high-water (max event ms ever seen) the idle TTL evicts by.
   */
-case class SeriesState(buffer: Array[Double], pushed: Long)
+case class SeriesState(buffer: Array[Double], pushed: Long,
+    actMs: Long = Long.MinValue)
 
 /** Streaming anomaly detection: `readStream → groupByKey(series) →
-  * flatMapGroupsWithState(bounded buffer) → scores`.
+  * transformWithState(bounded buffer) → scores`.
   *
   * Semantics mirror the reference's streaming lifecycle exactly:
   * one output score per arriving point (`Push`), state truncated to
@@ -46,14 +49,14 @@ object StreamingDetector {
   def seriesHash(series: String): Long =
     graft.kernel.PermDraw.seriesHash60(series)
 
-  /** One micro-batch of one series through the bounded buffer: the
-    * shared state transition of both streaming backends.
-    */
-  private def applyBatch(series: String, prev: SeriesState,
-      rows: Iterator[SeriesPoint],
-      conf: AnomalyzerConf): (SeriesState, Array[AnomalyScore]) = {
-    var buf = prev.buffer
-    var pushed = prev.pushed
+  /** One micro-batch of one series through the bounded buffer. */
+  private def applyBatch(conf: AnomalyzerConf)(series: String,
+      prev: Option[SeriesState],
+      rows: Iterator[SeriesPoint]): (SeriesState, Iterator[AnomalyScore]) = {
+    val s = prev.getOrElse(SeriesState(Array.empty, 0L))
+    var buf = s.buffer
+    var pushed = s.pushed
+    var actMs = s.actMs
     val sh = seriesHash(series)
     // within-batch total order (the stream's ts is the clock); order by
     // full timestamp precision — getTime alone truncates to ms and
@@ -63,87 +66,51 @@ object StreamingDetector {
     val out = ordered.map { p =>
       buf = (buf :+ p.value).takeRight(conf.windowSize)
       pushed += 1
+      actMs = math.max(actMs, p.ts.getTime)
       val prob = Ensemble.eval(buf, conf,
         new graft.kernel.PermDraw(sh, pushed))
       AnomalyScore(series, p.ts, p.value, prob)
     }
-    (SeriesState(buf, pushed), out)
+    (SeriesState(buf, pushed, actMs), out.iterator)
   }
 
-  /** Legacy `flatMapGroupsWithState` form — kept for HDFS-backed
-    * state stores and as TwsParitySpec's parity baseline; new
-    * pipelines should use [[scoreTws]] (Spark's forward path: native
-    * timers, RocksDB, state v2).
-    */
-  def score(points: Dataset[SeriesPoint], conf0: AnomalyzerConf)
-      : Dataset[AnomalyScore] = {
-    val conf = AnomalyzerConf.validated(conf0)
-    implicit val stateEnc = Encoders.product[SeriesState]
-    implicit val outEnc = Encoders.product[AnomalyScore]
-    implicit val keyEnc = Encoders.STRING
-
-    points.groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (series: String, rows: Iterator[SeriesPoint],
-         state: GroupState[SeriesState]) => {
-          val prev = state.getOption.getOrElse(SeriesState(Array.empty, 0L))
-          val (next, out) = applyBatch(series, prev, rows, conf)
-          state.update(next)
-          out.iterator
-        })
-  }
-
-  /** The DEFAULT streaming form of [[score]] — the modern
-    * arbitrary-state API (`transformWithState`,
-    * Spark 4.x): same semantics, same probabilities, but state lives in
-    * the RocksDB state store (required by this API) with fine-grained
-    * per-key ValueState — the operationally preferred backend for large
-    * key cardinalities. Run queries with
-    * `spark.sql.streaming.stateStore.providerClass =
-    * ...RocksDBStateStoreProvider`.
-    */
-  /** `idleTtl`: evict a series' buffer after that much processing-time
-    * inactivity (the TWS state-TTL contract: TTL requires
-    * `TimeMode.ProcessingTime`). Unbounded key-cardinality streams need
-    * this — per-series state is O(window), but the number of series
-    * ever seen is not bounded without eviction. An evicted series that
-    * re-arrives warms up from an empty buffer exactly like a new one
-    * (the kernel's Delay gate holds its scores down until the window
-    * refills), so expiry degrades to cold-start, never to wrong state.
+  /** Scores every arriving point; per-series state lives in the RocksDB
+    * store as one [[SeriesState]] row.
+    *
+    * `idleTtl`: evict a series' state once the watermark passes its
+    * activity high-water plus `idleTtl` — the event-time contract of
+    * every TTL state op ([[Tws.TtlFoldProcessor]]), so eviction is
+    * watermark-driven and deterministic. The caller must define the
+    * watermark upstream (`withWatermark("ts", ...)`); a TTL query
+    * without one is rejected here. Unbounded key-cardinality streams
+    * need this — per-series state is O(window), but the number of
+    * series ever seen is not bounded without eviction. An evicted
+    * series that re-arrives warms up from an empty buffer exactly like
+    * a new one (the kernel's Delay gate holds its scores down until the
+    * window refills), so expiry degrades to cold-start, never to wrong
+    * state.
     */
   def scoreTws(points: Dataset[SeriesPoint], conf0: AnomalyzerConf,
       idleTtl: Option[java.time.Duration] = None)
       : Dataset[AnomalyScore] = {
     val conf = AnomalyzerConf.validated(conf0)
+    implicit val stateEnc = Encoders.product[SeriesState]
     implicit val outEnc = Encoders.product[AnomalyScore]
     implicit val keyEnc = Encoders.STRING
-
-    val timeMode =
-      if (idleTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    points.groupByKey(_.series)
-      .transformWithState(new DetectorProcessor(conf, idleTtl), timeMode,
-        OutputMode.Append())
-  }
-
-  /** Per-series bounded-buffer processor for [[scoreTws]]. */
-  class DetectorProcessor(conf: AnomalyzerConf,
-      idleTtl: Option[java.time.Duration] = None)
-      extends StatefulProcessor[String, SeriesPoint, AnomalyScore] {
-    @transient private var state: ValueState[SeriesState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SeriesState]("buf",
-        Encoders.product[SeriesState],
-        idleTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(series: String,
-        rows: Iterator[SeriesPoint],
-        timerValues: TimerValues): Iterator[AnomalyScore] = {
-      val prev = if (state.exists()) state.get()
-        else SeriesState(Array.empty, 0L)
-      val (next, out) = applyBatch(series, prev, rows, conf)
-      state.update(next)
-      out.iterator
+    val grouped = points.groupByKey(_.series)
+    idleTtl match {
+      case None =>
+        grouped.transformWithState(new Tws.FoldProcessor(applyBatch(conf)),
+          TimeMode.None(), OutputMode.Append())
+      case Some(ttl) =>
+        require(points.queryExecution.logical.exists(
+            _.isInstanceOf[EventTimeWatermark]),
+          "scoreTws(idleTtl) expires on event time: define a watermark " +
+            "upstream (withWatermark(\"ts\", ...))")
+        grouped.transformWithState(
+          new Tws.TtlFoldProcessor(applyBatch(conf),
+            (s: SeriesState) => s.actMs, ttl.toMillis),
+          TimeMode.EventTime(), OutputMode.Append())
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.functions.{HashScheme => H, HllSketch => Hll}
 
@@ -43,10 +43,7 @@ object StreamingDistinctHll {
           .otherwise(lit(55L) - length(bin(col("w"))).cast("long")))
       .select("source", "bucket", "rho")
 
-  /** Update-mode stream over a (source STRING, t STRING) token stream:
-    * one RegisterUpdate per touched (source, bucket) per micro-batch.
-    */
-  /** The per-register fold both backends share: element-wise max. */
+  /** The per-register fold: element-wise max. */
   private def fold(key: (String, Long), prev: Option[Long],
       rows: Iterator[(String, Long, Long)])
       : (Long, Iterator[RegisterUpdate]) = {
@@ -55,27 +52,8 @@ object StreamingDistinctHll {
     (m, Iterator.single(RegisterUpdate(key._1, key._2, m)))
   }
 
-  /** Legacy `flatMapGroupsWithState` twin of [[registersTws]] — kept for
-    * HDFS-backed state stores and as TwsParitySpec's parity
-    * baseline; new pipelines should use [[registersTws]] (Spark's
-    * forward path: native timers, RocksDB, state v2).
-    */
-  def registers(tokens: DataFrame)(implicit
-      spark: SparkSession): Dataset[RegisterUpdate] = {
-    import spark.implicits._
-    rhos(tokens)
-      .as[(String, Long, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .mapGroupsWithState[Long, RegisterUpdate](GroupStateTimeout.NoTimeout) {
-        case (key, rows, state) =>
-          val (m, out) = fold(key, state.getOption, rows)
-          state.update(m)
-          out.next()
-      }
-  }
-
-  /** The DEFAULT streaming form of [[registers]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same fold, same registers.
+  /** Update-mode stream over a (source STRING, t STRING) token stream:
+    * one RegisterUpdate per touched (source, bucket) per micro-batch.
     */
   def registersTws(tokens: DataFrame)(implicit
       spark: SparkSession): Dataset[RegisterUpdate] = {
@@ -84,8 +62,7 @@ object StreamingDistinctHll {
       .as[(String, Long, Long)]
       .groupByKey(r => (r._1, r._2))
       .transformWithState(new Tws.FoldProcessor(fold),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
+        TimeMode.None(), OutputMode.Update())
   }
 
   /** Per-source cardinality estimates from a materialized register

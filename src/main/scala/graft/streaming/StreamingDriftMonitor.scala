@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming distribution-drift monitor — the online twin of the p83
   * total-variation fold: watch a (source, token) stream and emit, per
@@ -36,13 +36,8 @@ object StreamingDriftMonitor {
     */
   final case class St(n: Long, counts: Map[String, Long])
 
-  /** Update-mode stream over a (source STRING, t STRING) token stream:
-    * one Drift row per touched source per micro-batch, carrying the
-    * running-distribution TV against `reference` (token -> count; must
-    * be non-empty).
-    */
-  /** The per-source batch fold both backends share: advance the
-    * running counts on the reference support, emit the refreshed TV.
+  /** The per-source batch fold: advance the running counts on the
+    * reference support, emit the refreshed TV.
     */
   private def fold(reference: Map[String, Long], m: Long)(
       source: String, prev: Option[St],
@@ -82,29 +77,10 @@ object StreamingDriftMonitor {
     m
   }
 
-  /** Legacy `flatMapGroupsWithState` twin of [[driftTws]] — kept for
-    * HDFS-backed state stores and as TwsParitySpec's parity
-    * baseline; new pipelines should use [[driftTws]] (Spark's
-    * forward path: native timers, RocksDB, state v2).
-    */
-  def drift(tokens: DataFrame, reference: Map[String, Long])(implicit
-      spark: SparkSession): Dataset[Drift] = {
-    import spark.implicits._
-    val m = validated(reference)
-    tokens.select("source", "t").as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[St, Drift](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[(String, String)],
-         state: GroupState[St]) =>
-          val (next, out) = fold(reference, m)(source, state.getOption, rows)
-          state.update(next)
-          out
-      }
-  }
-
-  /** The DEFAULT streaming form of [[drift]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same fold, same TV values.
+  /** Update-mode stream over a (source STRING, t STRING) token stream:
+    * one Drift row per touched source per micro-batch, carrying the
+    * running-distribution TV against `reference` (token -> count; must
+    * be non-empty).
     */
   def driftTws(tokens: DataFrame, reference: Map[String, Long])(implicit
       spark: SparkSession): Dataset[Drift] = {
@@ -113,6 +89,6 @@ object StreamingDriftMonitor {
     tokens.select("source", "t").as[(String, String)]
       .groupByKey(_._1)
       .transformWithState(new Tws.FoldProcessor(fold(reference, m)),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+        TimeMode.None(), OutputMode.Update())
   }
 }

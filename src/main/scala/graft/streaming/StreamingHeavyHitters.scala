@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** SpaceSaving heavy hitters (Metwally et al. 2005) as keyed streaming
   * state — the deterministic bounded-state top-k that completes the
@@ -29,12 +29,8 @@ object StreamingHeavyHitters {
   /** Keyed state: the m-counter summary. Public for state-row codegen. */
   final case class Summary(entries: Map[String, (Long, Long)])
 
-  /** Update-mode stream over (source STRING, seq LONG, t STRING):
-    * after each micro-batch, emits the source's full current summary
-    * (<= m rows per source per batch).
-    */
-  /** The per-source batch fold both backends share: SpaceSaving in
-    * explicit `seq` order, then re-emit the full summary.
+  /** The per-source batch fold: SpaceSaving in explicit `seq` order,
+    * then re-emit the full summary.
     */
   private def fold(m: Int)(source: String, prev: Option[Summary],
       rows: Iterator[(String, Long, String)])
@@ -60,29 +56,9 @@ object StreamingHeavyHitters {
       cur.iterator.map { case (t, (c, e)) => Hitter(source, t, c, e) })
   }
 
-  /** Legacy `flatMapGroupsWithState` twin of [[hittersTws]] — kept for
-    * HDFS-backed state stores and as TwsParitySpec's parity
-    * baseline; new pipelines should use [[hittersTws]] (Spark's
-    * forward path: native timers, RocksDB, state v2).
-    */
-  def hitters(tokens: DataFrame, m: Int)(implicit
-      spark: SparkSession): Dataset[Hitter] = {
-    import spark.implicits._
-    require(m > 0, "summary capacity must be positive")
-    tokens.select("source", "seq", "t").as[(String, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Summary, Hitter](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[(String, Long, String)],
-         state: GroupState[Summary]) =>
-          val (next, out) = fold(m)(source, state.getOption, rows)
-          state.update(next)
-          out
-      }
-  }
-
-  /** The DEFAULT streaming form of [[hitters]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same fold, same summaries.
+  /** Update-mode stream over (source STRING, seq LONG, t STRING):
+    * after each micro-batch, emits the source's full current summary
+    * (<= m rows per source per batch).
     */
   def hittersTws(tokens: DataFrame, m: Int)(implicit
       spark: SparkSession): Dataset[Hitter] = {
@@ -91,6 +67,6 @@ object StreamingHeavyHitters {
     tokens.select("source", "seq", "t").as[(String, Long, String)]
       .groupByKey(_._1)
       .transformWithState(new Tws.FoldProcessor(fold(m)),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+        TimeMode.None(), OutputMode.Update())
   }
 }

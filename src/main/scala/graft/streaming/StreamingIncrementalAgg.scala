@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming twin of q46's incremental-aggregate maintenance: the
   * materialized view lives as per-group state — exact row count and
@@ -24,11 +24,11 @@ object StreamingIncrementalAgg {
 
   case class MeasureIn(flag: String, status: String, qty2: Long)
 
-  /** [[MeasureIn]] plus the event time the TTL variant evicts by. */
+  /** [[MeasureIn]] plus the event time [[maintainTtlTws]] evicts by. */
   case class MeasureTsIn(flag: String, status: String, qty2: Long,
       ts: java.sql.Timestamp)
 
-  /** `actMs` = activity high-water (max event ms) for the TTL variant;
+  /** `actMs` = activity high-water (max event ms) for [[maintainTtlTws]];
     * see [[StreamingLatestState.KeyState]] on why the eviction deadline
     * must come from the high-water, not the current batch.
     */
@@ -45,11 +45,8 @@ object StreamingIncrementalAgg {
     ViewOut(flag, status, s.n, s.q2 / 100.0,
       ((s.q2 * 10000L + s.n / 2) / s.n).toDouble / 1e6)
 
-  /** Update-mode stream: one refreshed view row per touched group per
-    * micro-batch.
-    */
-  /** The per-group batch fold both backends share: the micro-batch's
-    * partial aggregate, then the ⊎ merge — both pure integer addition.
+  /** The per-group batch fold: the micro-batch's partial aggregate,
+    * then the ⊎ merge — both pure integer addition.
     */
   private def fold(key: (String, String), prev: Option[AggState],
       batch: Iterator[MeasureIn]): (AggState, Iterator[ViewOut]) = {
@@ -62,7 +59,7 @@ object StreamingIncrementalAgg {
   }
 
   /** [[fold]] over the timestamped input, advancing the activity
-    * high-water the TTL variants evict by.
+    * high-water [[maintainTtlTws]] evicts by.
     */
   private def foldTs(key: (String, String), prev: Option[AggState],
       batch: Iterator[MeasureTsIn]): (AggState, Iterator[ViewOut]) = {
@@ -78,26 +75,8 @@ object StreamingIncrementalAgg {
     (merged, Iterator.single(emit(key._1, key._2, merged)))
   }
 
-  /** Legacy `flatMapGroupsWithState` twin of [[maintainTws]] — kept for
-    * HDFS-backed state stores and as TwsParitySpec's parity
-    * baseline; new pipelines should use [[maintainTws]] (Spark's
-    * forward path: native timers, RocksDB, state v2).
-    */
-  def maintain(rows: DataFrame)(implicit
-      spark: SparkSession): Dataset[ViewOut] = {
-    import spark.implicits._
-    rows.as[MeasureIn]
-      .groupByKey(r => (r.flag, r.status))
-      .mapGroupsWithState[AggState, ViewOut](GroupStateTimeout.NoTimeout) {
-        case (key, batch, state) =>
-          val (merged, out) = fold(key, state.getOption, batch)
-          state.update(merged)
-          out.next()
-      }
-  }
-
-  /** The DEFAULT streaming form of [[maintain]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same fold, same view rows.
+  /** Update-mode stream: one refreshed view row per touched group per
+    * micro-batch.
     */
   def maintainTws(rows: DataFrame)(implicit
       spark: SparkSession): Dataset[ViewOut] = {
@@ -105,11 +84,15 @@ object StreamingIncrementalAgg {
     rows.as[MeasureIn]
       .groupByKey(r => (r.flag, r.status))
       .transformWithState(new Tws.FoldProcessor(fold),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+        TimeMode.None(), OutputMode.Update())
   }
 
-  /** [[maintainTtl]] on the v2 API: same fold, eviction via an
-    * event-time timer at the same high-water + TTL deadline.
+  /** [[maintainTws]] with event-time idle eviction — the unbounded-
+    * group-cardinality knob ([[StreamingLatestState.latestStateTtlTws]]'s
+    * contract): a group quiet for more than `idleTtl` of event time is
+    * dropped from the store; if it re-arrives, its view restarts from
+    * the new rows alone. Same deterministic watermark-driven expiry,
+    * pinned in StreamingStateTtlSpec.
     */
   def maintainTtlTws(rows: DataFrame, idleTtl: java.time.Duration,
       watermarkDelay: String = "0 seconds")(implicit
@@ -120,36 +103,6 @@ object StreamingIncrementalAgg {
       .transformWithState(
         new Tws.TtlFoldProcessor(foldTs, (s: AggState) => s.actMs,
           idleTtl.toMillis),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update())
-  }
-
-  /** [[maintain]] with event-time idle eviction — the unbounded-group-
-    * cardinality knob ([[StreamingLatestState.latestStateTtl]]'s
-    * contract): a group quiet for more than `idleTtl` of event time is
-    * dropped from the store; if it re-arrives, its view restarts from
-    * the new rows alone. Same deterministic watermark-driven expiry,
-    * pinned in StreamingStateTtlSpec.
-    */
-  def maintainTtl(rows: DataFrame, idleTtl: java.time.Duration,
-      watermarkDelay: String = "0 seconds")(implicit
-      spark: SparkSession): Dataset[ViewOut] = {
-    import spark.implicits._
-    rows.withWatermark("ts", watermarkDelay).as[MeasureTsIn]
-      .groupByKey(r => (r.flag, r.status))
-      .flatMapGroupsWithState[AggState, ViewOut](OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        case (key, batch, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val (merged, out) = foldTs(key, state.getOption, batch)
-            state.update(merged)
-            // deadline from the activity high-water, never the batch
-            state.setTimeoutTimestamp(math.max(
-              merged.actMs + idleTtl.toMillis,
-              state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
+        TimeMode.EventTime(), OutputMode.Update())
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming twin of the q34 latest-state compaction
   * ([[graft.queries.Relational.latestState]]): maintain the current
@@ -10,9 +10,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   *
   * Shape at scale: the state store holds exactly ONE fixed-size record
   * per live key — the state IS the output table, so memory is bounded
-  * by key cardinality, not stream length (run it on the RocksDB state
-  * backend when keys outgrow the heap, as StreamingDetectorSpec does
-  * for the detector). Arrival order never matters: each event folds in
+  * by key cardinality, not stream length (the RocksDB store keeps it
+  * off the heap). Arrival order never matters: each event folds in
   * with the same (ts, event_id) total order the batch window sorts by,
   * so a late event can only win if it is genuinely newer — streaming
   * output converges to the batch compaction of the same log.
@@ -22,8 +21,8 @@ object StreamingLatestState {
   case class EventIn(event_id: Long, ts: java.sql.Timestamp,
       user_id: Long, event_type: String, value: Double)
 
-  /** `act_ms` is the TTL variant's activity HIGH-WATER mark (max event
-    * time ever seen for the key, ms) — distinct from `last_ts`, which
+  /** `act_ms` is [[latestStateTtlTws]]'s activity HIGH-WATER mark (max
+    * event time ever seen for the key, ms) — distinct from `last_ts`, which
     * is floor-seconds of the last WINNING event. The eviction deadline
     * must come from the high-water, not the current batch: an
     * in-allowance out-of-order batch would otherwise pull the deadline
@@ -46,8 +45,8 @@ object StreamingLatestState {
     else s.copy(n_events = s.n_events + 1)
   }
 
-  /** The per-key batch fold both backends share; `trackAct` additionally
-    * advances the TTL variants' activity high-water.
+  /** The per-key batch fold; `trackAct` additionally advances the TTL
+    * variant's activity high-water.
     */
   private def foldBatch(trackAct: Boolean)(key: (Long, String),
       prev: Option[KeyState],
@@ -66,29 +65,7 @@ object StreamingLatestState {
       s.last_event_id, s.last_value, s.n_events)))
   }
 
-  /** Update-mode stream: one StateOut per touched key per micro-batch. *
-    * Legacy `flatMapGroupsWithState` form — kept for HDFS-backed
-    * state stores and as TwsParitySpec's parity baseline; new
-    * pipelines should use [[latestStateTws]].
-    */
-  def latestState(events: DataFrame)(implicit
-      spark: SparkSession): Dataset[StateOut] = {
-    import spark.implicits._
-    events.as[EventIn]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .mapGroupsWithState[KeyState, StateOut](GroupStateTimeout.NoTimeout) {
-        case (key, rows, state) =>
-          val (s, out) = foldBatch(trackAct = false)(key,
-            state.getOption, rows)
-          state.update(s)
-          out.next()
-      }
-  }
-
-  /** The DEFAULT streaming form of [[latestState]] — the arbitrary-state v2 API
-    * (`transformWithState`, RocksDB store required) — same fold, same
-    * compaction.
-    */
+  /** Update-mode stream: one StateOut per touched key per micro-batch. */
   def latestStateTws(events: DataFrame)(implicit
       spark: SparkSession): Dataset[StateOut] = {
     import spark.implicits._
@@ -96,27 +73,10 @@ object StreamingLatestState {
       .groupByKey(e => (e.user_id, e.event_type))
       .transformWithState(
         new Tws.FoldProcessor(foldBatch(trackAct = false)),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
+        TimeMode.None(), OutputMode.Update())
   }
 
-  /** [[latestStateTtl]] on the v2 API: same fold, eviction via an
-    * event-time timer at the same high-water + TTL deadline.
-    */
-  def latestStateTtlTws(events: DataFrame, idleTtl: java.time.Duration,
-      watermarkDelay: String = "0 seconds")(implicit
-      spark: SparkSession): Dataset[StateOut] = {
-    import spark.implicits._
-    events.withWatermark("ts", watermarkDelay).as[EventIn]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .transformWithState(
-        new Tws.TtlFoldProcessor(foldBatch(trackAct = true),
-          (s: KeyState) => s.act_ms, idleTtl.toMillis),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update())
-  }
-
-  /** [[latestState]] with EVENT-TIME idle expiry: a key whose last
+  /** [[latestStateTws]] with EVENT-TIME idle expiry: a key whose last
     * activity sits more than `idleTtl` behind the stream's watermark is
     * evicted from the state store. This is the knob that makes the
     * "state = one record per LIVE key" bound hold under unbounded key
@@ -134,33 +94,17 @@ object StreamingLatestState {
     *
     * `watermarkDelay` is the usual out-of-orderness allowance; a late
     * event inside the allowance still folds into live state exactly as
-    * in [[latestState]].
+    * in [[latestStateTws]].
     */
-  def latestStateTtl(events: DataFrame, idleTtl: java.time.Duration,
+  def latestStateTtlTws(events: DataFrame, idleTtl: java.time.Duration,
       watermarkDelay: String = "0 seconds")(implicit
       spark: SparkSession): Dataset[StateOut] = {
     import spark.implicits._
     events.withWatermark("ts", watermarkDelay).as[EventIn]
       .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[KeyState, StateOut](OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        case ((user, etype), rows, state) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (s, out) = foldBatch(trackAct = true)((user, etype),
-              state.getOption, rows)
-            state.update(s)
-            // evict when the watermark passes the key's activity
-            // HIGH-WATER + TTL (an out-of-order batch must never pull
-            // the deadline backwards); the watermark guard keeps the
-            // timeout legal when even the high-water is already behind
-            // the watermark
-            state.setTimeoutTimestamp(math.max(s.act_ms + idleTtl.toMillis,
-              state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
+      .transformWithState(
+        new Tws.TtlFoldProcessor(foldBatch(trackAct = true),
+          (s: KeyState) => s.act_ms, idleTtl.toMillis),
+        TimeMode.EventTime(), OutputMode.Update())
   }
 }

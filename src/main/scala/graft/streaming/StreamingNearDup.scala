@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.functions.TextHashFunctions
 
@@ -27,9 +27,9 @@ import graft.functions.TextHashFunctions
   *
   * State at scale: one fixed-size record per OCCUPIED bucket. Bucket
   * cardinality grows with corpus novelty, so for unbounded streams use
-  * [[bandHitsTtl]] — a bucket idle longer than the TTL is forgotten
+  * [[bandHitsTtlTws]] — a bucket idle longer than the TTL is forgotten
   * (the same event-time high-water discipline as
-  * [[StreamingLatestState.latestStateTtl]]), bounding state by the
+  * [[StreamingLatestState.latestStateTtlTws]]), bounding state by the
   * buckets touched inside one horizon.
   */
 object StreamingNearDup {
@@ -88,26 +88,6 @@ object StreamingNearDup {
 
   /** Append-mode stream of per-(doc, band) claims/hits; state lives
     * forever (bounded corpora / bounded bucket spaces).
-    *
-    * Legacy `flatMapGroupsWithState` form — kept for HDFS-backed
-    * state stores and as TwsParitySpec's parity baseline; new
-    * pipelines should use [[bandHitsTws]].
-    */
-  def bandHits(docs: DataFrame)(implicit
-      spark: SparkSession): Dataset[BandHit] = {
-    import spark.implicits._
-    banded(docs).as[BandRow]
-      .groupByKey(_.bucket_key)
-      .flatMapGroupsWithState[BucketState, BandHit](OutputMode.Append,
-        GroupStateTimeout.NoTimeout) { case (_, rows, state) =>
-        val (next, out) = claim(rows, state.getOption)
-        state.update(next)
-        out
-      }
-  }
-
-  /** The DEFAULT streaming form of [[bandHits]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same claim fold, same hits.
     */
   def bandHitsTws(docs: DataFrame)(implicit
       spark: SparkSession): Dataset[BandHit] = {
@@ -117,12 +97,14 @@ object StreamingNearDup {
       .transformWithState(
         new Tws.FoldProcessor((_: String, prev: Option[BucketState],
             rows: Iterator[BandRow]) => claim(rows, prev)),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+        TimeMode.None(), OutputMode.Append())
   }
 
-  /** [[bandHitsTtl]] on the v2 API: same claim fold, eviction via an
-    * event-time timer at the same high-water + TTL deadline.
+  /** [[bandHitsTws]] with event-time idle expiry: a bucket whose last
+    * activity sits more than `idleTtl` behind the watermark is
+    * forgotten — a later arrival re-claims it fresh. Deterministic
+    * (event-time, high-water deadline), pinned in
+    * StreamingNearDupSpec.
     */
   def bandHitsTtlTws(docs: DataFrame, idleTtl: java.time.Duration,
       watermarkDelay: String = "0 seconds")(implicit
@@ -134,34 +116,6 @@ object StreamingNearDup {
         new Tws.TtlFoldProcessor((_: String, prev: Option[BucketState],
             rows: Iterator[BandRow]) => claim(rows, prev),
           (s: BucketState) => s.act_ms, idleTtl.toMillis),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  /** [[bandHits]] with event-time idle expiry: a bucket whose last
-    * activity sits more than `idleTtl` behind the watermark is
-    * forgotten — a later arrival re-claims it fresh. Deterministic
-    * (event-time, high-water deadline), pinned in
-    * StreamingStateTtlSpec's discipline.
-    */
-  def bandHitsTtl(docs: DataFrame, idleTtl: java.time.Duration,
-      watermarkDelay: String = "0 seconds")(implicit
-      spark: SparkSession): Dataset[BandHit] = {
-    import spark.implicits._
-    banded(docs.withWatermark("ts", watermarkDelay)).as[BandRow]
-      .groupByKey(_.bucket_key)
-      .flatMapGroupsWithState[BucketState, BandHit](OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) { case (_, rows, state) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val (next, out) = claim(rows, state.getOption)
-          state.update(next)
-          state.setTimeoutTimestamp(math.max(next.act_ms + idleTtl.toMillis,
-            state.getCurrentWatermarkMs() + 1))
-          out
-        }
-      }
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }

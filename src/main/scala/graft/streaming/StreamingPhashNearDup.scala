@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.multimodal.MultiModal
 
@@ -142,28 +142,8 @@ object StreamingPhashNearDup {
     (s, out.iterator)
   }
 
-  /** Append-mode stream of per-(doc, band) claims/hits on the legacy
-    * `flatMapGroupsWithState` API — kept as the parity baseline; new
-    * pipelines should use [[bandHitsTws]]. State needs no TTL: the
-    * key space is 2048 buckets by construction.
-    */
-  def bandHits(docs: DataFrame)(implicit
-      spark: SparkSession): Dataset[PhashHit] = {
-    import spark.implicits._
-    bandRows(docs)
-      .groupByKey(r => r.band_idx * 256 + r.bv)
-      .flatMapGroupsWithState[PhashBucketState, PhashHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (_, rows, state) =>
-          val (next, out) = claim(rows, state.getOption)
-          state.update(next)
-          out
-      }
-  }
-
-  /** The DEFAULT streaming form — the arbitrary-state v2 API
-    * (`transformWithState`, RocksDB store required) — same claim
-    * fold, same hits.
+  /** Append-mode stream of per-(doc, band) claims/hits. State needs no
+    * TTL: the key space is 2048 buckets by construction.
     */
   def bandHitsTws(docs: DataFrame)(implicit
       spark: SparkSession): Dataset[PhashHit] = {
@@ -173,7 +153,6 @@ object StreamingPhashNearDup {
       .transformWithState(
         new Tws.FoldProcessor((_: Int, prev: Option[PhashBucketState],
             rows: Iterator[PhashBandRow]) => claim(rows, prev)),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+        TimeMode.None(), OutputMode.Append())
   }
 }

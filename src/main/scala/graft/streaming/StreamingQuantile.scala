@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming twin of a42's mergeable log2-bucket quantile sketch: the
-  * sketch lives as per-series state — a bucket→count map, ≤64 entries
+  * sketch lives as per-series state — bucket→count, ≤64 entries
   * no matter how long the stream runs — and every micro-batch's
   * partial bucket counts merge in by plain addition, the same ⊎ the
   * batch query's map-side combine performs. Each touched series
@@ -23,15 +23,18 @@ object StreamingQuantile {
 
   case class ObsIn(event_type: String, micro: Long)
 
-  /** [[ObsIn]] plus the event time the TTL variant evicts by. */
+  /** [[ObsIn]] plus the event time [[maintainTtlTws]] evicts by. */
   case class ObsTsIn(event_type: String, micro: Long,
       ts: java.sql.Timestamp)
 
-  /** `actMs` = activity high-water (max event ms) for the TTL variant;
-    * see [[StreamingLatestState.KeyState]] on why the eviction deadline
-    * must come from the high-water, not the current batch.
+  /** The per-series sketch as parallel arrays, sorted by bucket so the
+    * state bytes are deterministic (the RocksDB state codec supports
+    * only STRING-keyed maps). `actMs` = activity high-water (max event
+    * ms) for [[maintainTtlTws]]; see [[StreamingLatestState.KeyState]]
+    * on why the eviction deadline must come from the high-water, not
+    * the current batch. Public for Spark's state-row codegen.
     */
-  case class SketchState(counts: Map[Int, Long],
+  case class SketchState(buckets: Array[Int], counts: Array[Long],
       actMs: Long = Long.MinValue)
 
   case class QOut(event_type: String, q: Long, n: Long, q_bucket: Long,
@@ -43,13 +46,13 @@ object StreamingQuantile {
   private[streaming] def bucket(micro: Long): Int =
     if (micro <= 0L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(micro)
 
-  /** a42's extraction rule over a sketch: for each percentile q, the
-    * first bucket whose cumulative count reaches rank ceil(n·q/100),
-    * bracketed by the bucket edges.
+  /** a42's extraction rule over a sketch of (bucket, count) pairs: for
+    * each percentile q, the first bucket whose cumulative count reaches
+    * rank ceil(n·q/100), bracketed by the bucket edges.
     */
-  private[streaming] def extract(et: String, counts: Map[Int, Long],
+  private[streaming] def extract(et: String, counts: Iterable[(Int, Long)],
       qs: Seq[Int]): Seq[QOut] = {
-    val n = counts.valuesIterator.sum
+    val n = counts.iterator.map(_._2).sum
     val sorted = counts.toSeq.sortBy(_._1)
     qs.map { q =>
       val rank = (n * q + 99) / 100
@@ -65,31 +68,30 @@ object StreamingQuantile {
     }
   }
 
-  /** Update-mode stream: refreshed percentile rows per touched series
-    * per micro-batch.
+  /** The per-series batch fold: the micro-batch's bucket counts merged
+    * into the sketch — pure integer addition. `actMs` advances only on
+    * the timestamped (TTL) input.
     */
-  /** The per-series batch fold both backends share: the micro-batch's
-    * partial sketch, then the ⊎ merge — both pure integer bucket-count
-    * addition. `actMs` advances only on the timestamped (TTL) input.
-    */
-  private def foldCounts(prev: Option[SketchState],
-      deltas: Iterator[(Int, Long)], maxMs: Long): SketchState = {
-    val delta = collection.mutable.Map.empty[Int, Long]
-    deltas.foreach { case (b, c) =>
-      delta.update(b, delta.getOrElse(b, 0L) + c)
+  private def foldBuckets(qs: Seq[Int])(et: String,
+      prev: Option[SketchState], batch: Iterator[Int],
+      maxMs: Long): (SketchState, Iterator[QOut]) = {
+    // bucket(micro) is in [0, 63]: index by bucket, read back in order
+    val acc = new Array[Long](64)
+    var act = maxMs
+    prev.foreach { p =>
+      p.buckets.indices.foreach(i => acc(p.buckets(i)) += p.counts(i))
+      act = math.max(act, p.actMs)
     }
-    val p = prev.getOrElse(SketchState(Map.empty))
-    val merged = (p.counts.keySet ++ delta.keySet).map(b =>
-      b -> (p.counts.getOrElse(b, 0L) + delta.getOrElse(b, 0L))).toMap
-    SketchState(merged, math.max(p.actMs, maxMs))
+    batch.foreach(b => acc(b) += 1L)
+    val buckets = acc.indices.filter(acc(_) > 0L).toArray
+    val next = SketchState(buckets, buckets.map(acc(_)), act)
+    (next, extract(et, buckets.map(b => b -> acc(b)).toSeq, qs).iterator)
   }
 
   private def fold(qs: Seq[Int])(et: String, prev: Option[SketchState],
-      batch: Iterator[ObsIn]): (SketchState, Iterator[QOut]) = {
-    val next = foldCounts(prev,
-      batch.map(r => bucket(r.micro) -> 1L), Long.MinValue)
-    (next, extract(et, next.counts, qs).iterator)
-  }
+      batch: Iterator[ObsIn]): (SketchState, Iterator[QOut]) =
+    foldBuckets(qs)(et, prev, batch.map(r => bucket(r.micro)),
+      Long.MinValue)
 
   private def foldTs(qs: Seq[Int])(et: String, prev: Option[SketchState],
       batch: Iterator[ObsTsIn]): (SketchState, Iterator[QOut]) = {
@@ -97,69 +99,28 @@ object StreamingQuantile {
     val rows = batch.toArray
     val maxMs = rows.foldLeft(Long.MinValue)((m, r) =>
       math.max(m, r.ts.getTime))
-    val next = foldCounts(prev,
-      rows.iterator.map(r => bucket(r.micro) -> 1L), maxMs)
-    (next, extract(et, next.counts, qs).iterator)
+    foldBuckets(qs)(et, prev, rows.iterator.map(r => bucket(r.micro)),
+      maxMs)
   }
 
-  /** Legacy `flatMapGroupsWithState` twin of [[maintainTws]] — kept for
-    * HDFS-backed state stores and as TwsParitySpec's parity
-    * baseline; new pipelines should use [[maintainTws]] (Spark's
-    * forward path: native timers, RocksDB, state v2).
-    */
-  def maintain(rows: DataFrame, qs: Seq[Int])(implicit
-      spark: SparkSession): Dataset[QOut] = {
-    import spark.implicits._
-    rows.as[ObsIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[SketchState, QOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (et, batch, state) =>
-          val (next, out) = fold(qs)(et, state.getOption, batch)
-          state.update(next)
-          out
-      }
-  }
-
-  /** TWS state twin of [[SketchState]]: the RocksDB state codec's Avro
-    * schema supports only STRING-keyed maps, so the Int-keyed bucket
-    * map flattens to parallel arrays (sorted by bucket — deterministic
-    * state bytes). Public for Spark's state-row codegen.
-    */
-  case class SketchStateArr(buckets: Array[Int], counts: Array[Long],
-      actMs: Long)
-
-  private def toArr(s: SketchState): SketchStateArr = {
-    val sorted = s.counts.toArray.sortBy(_._1)
-    SketchStateArr(sorted.map(_._1), sorted.map(_._2), s.actMs)
-  }
-
-  private def fromArr(v: SketchStateArr): SketchState =
-    SketchState(v.buckets.zip(v.counts).toMap, v.actMs)
-
-  /** Lifts a [[SketchState]] fold to the array-backed TWS state. */
-  private def arrFold[I](f: (String, Option[SketchState], Iterator[I]) =>
-      (SketchState, Iterator[QOut]))(et: String,
-      prev: Option[SketchStateArr],
-      batch: Iterator[I]): (SketchStateArr, Iterator[QOut]) = {
-    val (next, out) = f(et, prev.map(fromArr), batch)
-    (toArr(next), out)
-  }
-
-  /** The DEFAULT streaming form of [[maintain]] — the arbitrary-state v2 API (`transformWithState`,
-    * RocksDB store required) — same fold, same percentile rows.
+  /** Update-mode stream: refreshed percentile rows per touched series
+    * per micro-batch.
     */
   def maintainTws(rows: DataFrame, qs: Seq[Int])(implicit
       spark: SparkSession): Dataset[QOut] = {
     import spark.implicits._
     rows.as[ObsIn]
       .groupByKey(_.event_type)
-      .transformWithState(new Tws.FoldProcessor(arrFold(fold(qs))),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      .transformWithState(new Tws.FoldProcessor(fold(qs)),
+        TimeMode.None(), OutputMode.Update())
   }
 
-  /** [[maintainTtl]] on the v2 API: same fold, eviction via an
-    * event-time timer at the same high-water + TTL deadline.
+  /** [[maintainTws]] with event-time idle eviction (the shared TTL
+    * contract of the per-key state ops, see
+    * [[StreamingLatestState.latestStateTtlTws]]): a series quiet past
+    * `idleTtl` of event time drops its sketch; a re-arriving series
+    * rebuilds from the new observations alone. Sketch merge semantics
+    * inside the horizon are unchanged.
     */
   def maintainTtlTws(rows: DataFrame, qs: Seq[Int],
       idleTtl: java.time.Duration,
@@ -169,39 +130,8 @@ object StreamingQuantile {
     rows.withWatermark("ts", watermarkDelay).as[ObsTsIn]
       .groupByKey(_.event_type)
       .transformWithState(
-        new Tws.TtlFoldProcessor(arrFold(foldTs(qs)),
-          (s: SketchStateArr) => s.actMs, idleTtl.toMillis),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update())
-  }
-
-  /** [[maintain]] with event-time idle eviction (the shared TTL
-    * contract of the per-key state ops, see
-    * [[StreamingLatestState.latestStateTtl]]): a series quiet past
-    * `idleTtl` of event time drops its sketch; a re-arriving series
-    * rebuilds from the new observations alone. Sketch merge semantics
-    * inside the horizon are unchanged.
-    */
-  def maintainTtl(rows: DataFrame, qs: Seq[Int],
-      idleTtl: java.time.Duration,
-      watermarkDelay: String = "0 seconds")(implicit
-      spark: SparkSession): Dataset[QOut] = {
-    import spark.implicits._
-    rows.withWatermark("ts", watermarkDelay).as[ObsTsIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[SketchState, QOut](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        case (et, batch, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val (next, out) = foldTs(qs)(et, state.getOption, batch)
-            state.update(next)
-            // deadline from the activity high-water, never the batch
-            state.setTimeoutTimestamp(math.max(
-              next.actMs + idleTtl.toMillis,
-              state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
+        new Tws.TtlFoldProcessor(foldTs(qs),
+          (s: SketchState) => s.actMs, idleTtl.toMillis),
+        TimeMode.EventTime(), OutputMode.Update())
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.functions.{HashScheme => H}
 
@@ -39,7 +39,7 @@ object StreamingSketch {
       .withColumn("r", explode(sequence(lit(0), lit(Depth - 1))))
       .withColumn("b", expr(s"(h1 + r * h2) % $Width"))
 
-  /** The per-bucket fold both backends share: counter += batch size. */
+  /** The per-bucket fold: counter += batch size. */
   private def fold(key: (Int, Long), prev: Option[Long],
       rows: Iterator[(Int, Long)]): (Long, Iterator[BucketUpdate]) = {
     val cnt = prev.getOrElse(0L) + rows.size
@@ -48,29 +48,6 @@ object StreamingSketch {
 
   /** Update-mode stream over a one-column (`t` STRING) token stream:
     * one BucketUpdate per touched (r, b) per micro-batch.
-    *
-    * Legacy `flatMapGroupsWithState` form — kept for HDFS-backed
-    * state stores and as TwsParitySpec's parity baseline; new
-    * pipelines should use [[cmsBucketsTws]].
-    */
-  def cmsBuckets(tokens: DataFrame)(implicit
-      spark: SparkSession): Dataset[BucketUpdate] = {
-    import spark.implicits._
-    probed(tokens)
-      .select(col("r"), col("b"))
-      .as[(Int, Long)]
-      .groupByKey(identity)
-      .mapGroupsWithState[Long, BucketUpdate](GroupStateTimeout.NoTimeout) {
-        case (key, rows, state) =>
-          val (cnt, out) = fold(key, state.getOption, rows)
-          state.update(cnt)
-          out.next()
-      }
-  }
-
-  /** The DEFAULT streaming form of [[cmsBuckets]] — the arbitrary-state v2 API
-    * (`transformWithState`, RocksDB store required) — same fold, same
-    * counters; see [[Tws]] for why this is the forward path.
     */
   def cmsBucketsTws(tokens: DataFrame)(implicit
       spark: SparkSession): Dataset[BucketUpdate] = {
@@ -80,8 +57,7 @@ object StreamingSketch {
       .as[(Int, Long)]
       .groupByKey(identity)
       .transformWithState(new Tws.FoldProcessor(fold),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
+        TimeMode.None(), OutputMode.Update())
   }
 
   /** Point estimates for query tokens against a materialized sketch

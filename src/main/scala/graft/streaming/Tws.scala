@@ -7,29 +7,24 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   *
   * Every graft streaming state op is a per-key BATCH FOLD — pure
   * function (key, previous state, micro-batch rows) → (next state,
-  * output rows) — so the migration from `flatMapGroupsWithState` to
-  * the arbitrary-state v2 API is one shared shim, not ten bespoke
-  * processors. Each operator factors its fold out of the FMGWS
-  * closure and feeds the SAME function to both backends; the
-  * stream==batch pins then hold for TWS structurally, and the per-op
-  * parity specs pin it empirically.
+  * output rows) — so the whole state layer is one shared shim, not
+  * twelve bespoke processors; the stream==batch pins then hold for
+  * every op through the same two processors below.
   *
-  * Why TWS is the forward path (VERDICT r9 #6): one API for value/
-  * list/map state, native per-state TTL, timers decoupled from state
-  * rows, and the RocksDB store required by the API is the backend a
-  * large-cardinality deployment runs anyway. The FMGWS forms remain
-  * for checkpoint compatibility with existing queries (the two APIs
-  * cannot share a checkpoint).
+  * State lives in the RocksDB store the API requires
+  * ([[graft.GraftSession.create]] sets it): one API for value/list/map
+  * state, timers decoupled from state rows, and the backend a
+  * large-cardinality deployment runs anyway.
   *
-  * Eviction parity: the FMGWS TTL forms arm
-  * `setTimeoutTimestamp(max(act_hw + ttl, watermark + 1))` — fire
-  * when the watermark passes the key's activity HIGH-WATER plus the
-  * idle TTL. [[TtlFoldProcessor]] arms a TWS event-time timer at the
-  * same instant, deleting the stale timer on every re-arm (TWS timers
-  * are not replaced implicitly the way setTimeoutTimestamp is), and
+  * Eviction: [[TtlFoldProcessor]] arms an event-time timer at
+  * `max(act_hw + ttl, watermark + 1)` — fire when the watermark passes
+  * the key's activity HIGH-WATER plus the idle TTL — deleting the stale
+  * timer on every re-arm (TWS timers are registered cumulatively), and
   * clears the key's state when it fires: expiry forgets the key
   * entirely, a re-arrival starts fresh — the contract
-  * StreamingStateTtlSpec pins.
+  * StreamingStateTtlSpec pins. Spark fires a key's expired timer
+  * before that micro-batch's rows for the key fold, so rows arriving
+  * in the batch whose watermark passed the deadline start fresh too.
   */
 object Tws {
 
@@ -58,9 +53,9 @@ object Tws {
   /** [[FoldProcessor]] plus event-time idle eviction: the state type
     * carries its activity high-water (max event ms ever seen for the
     * key, extracted by `actMsOf`), and the key is forgotten when the
-    * watermark passes high-water + `idleTtlMs`. Deterministic like the
-    * FMGWS forms: eviction depends only on data timestamps and
-    * configured delays, never wall clock.
+    * watermark passes high-water + `idleTtlMs`. Deterministic:
+    * eviction depends only on data timestamps and configured delays,
+    * never wall clock.
     */
   class TtlFoldProcessor[K, I, S, O](
       fold: (K, Option[S], Iterator[I]) => (S, Iterator[O]),

@@ -20,7 +20,7 @@ object WindowedRollup {
 
   /** Tumbling-window mean per series; output rows are [[SeriesPoint]]s
     * timestamped at the window end, ready for
-    * [[StreamingDetector.score]] (run as a second query over the rollup
+    * [[StreamingDetector.scoreTws]] (run as a second query over the rollup
     * sink — Spark disallows stateful-over-stateful in one query plan).
     */
   def rollup(

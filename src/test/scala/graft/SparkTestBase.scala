@@ -18,6 +18,8 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        GraftSession.RocksDbStateStore)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

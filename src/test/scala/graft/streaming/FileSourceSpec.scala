@@ -37,7 +37,7 @@ class FileSourceSpec extends AnyFunSuite with SparkTestBase {
 
     val stream = spark.readStream.schema(schema).parquet(staged.toString)
       .as[SeriesPoint]
-    val query = StreamingDetector.score(stream, conf)
+    val query = StreamingDetector.scoreTws(stream, conf)
       .writeStream.format("memory").queryName("file_sink")
       .outputMode("append").start()
     try {

@@ -30,7 +30,7 @@ class StreamingAlertsSpec extends AnyFunSuite with SparkTestBase {
     implicit val s = sparkSession
     val input = MemoryStream[AnomalyScore](sparkSession)
     val name = s"alerts_${System.nanoTime()}"
-    val query = StreamingAlerts.alerts(input.toDS(), threshold, cooldown)
+    val query = StreamingAlerts.alertsTws(input.toDS(), threshold, cooldown)
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {

@@ -31,7 +31,7 @@ class StreamingCurationSpec extends AnyFunSuite with SparkTestBase {
 
     val input = MemoryStream[(Long, Timestamp, String, String)](sparkSession)
     val query = StreamingCuration
-      .decisions(input.toDF().toDF("doc_id", "ts", "source", "text"),
+      .decisionsTws(input.toDF().toDF("doc_id", "ts", "source", "text"),
         bitmap, java.time.Duration.ofDays(365))
       .writeStream.format("memory").queryName("cur_sink")
       .outputMode("update").start()

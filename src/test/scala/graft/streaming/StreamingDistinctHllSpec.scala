@@ -40,7 +40,7 @@ class StreamingDistinctHllSpec extends AnyFunSuite with SparkTestBase {
 
     val input = MemoryStream[(String, String)](sparkSession)
     val query = StreamingDistinctHll
-      .registers(input.toDF().toDF("source", "t"))
+      .registersTws(input.toDF().toDF("source", "t"))
       .writeStream.format("memory").queryName("hll_sink")
       .outputMode("update").start()
     try {

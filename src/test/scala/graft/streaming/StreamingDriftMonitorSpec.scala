@@ -33,7 +33,7 @@ class StreamingDriftMonitorSpec extends AnyFunSuite with SparkTestBase {
 
     val input = MemoryStream[(String, String)](sparkSession)
     val query = StreamingDriftMonitor
-      .drift(input.toDF().toDF("source", "t"), ref)
+      .driftTws(input.toDF().toDF("source", "t"), ref)
       .writeStream.format("memory").queryName("drift_sink")
       .outputMode("update").start()
     try {

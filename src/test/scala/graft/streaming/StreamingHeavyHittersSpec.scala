@@ -21,7 +21,7 @@ class StreamingHeavyHittersSpec extends AnyFunSuite with SparkTestBase {
     implicit val s = sparkSession
     val input = MemoryStream[(String, Long, String)](sparkSession)
     val query = StreamingHeavyHitters
-      .hitters(input.toDF().toDF("source", "seq", "t"), m)
+      .hittersTws(input.toDF().toDF("source", "seq", "t"), m)
       .writeStream.format("memory").queryName(sink)
       .outputMode("update").start()
     try {

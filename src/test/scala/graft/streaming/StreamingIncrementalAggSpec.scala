@@ -36,7 +36,7 @@ class StreamingIncrementalAggSpec extends AnyFunSuite with SparkTestBase {
     val (b1, b2) = rows.splitAt(rows.length / 3)
 
     val input = MemoryStream[MeasureIn](sparkSession)
-    val query = StreamingIncrementalAgg.maintain(input.toDF())
+    val query = StreamingIncrementalAgg.maintainTws(input.toDF())
       .writeStream.format("memory").queryName("ia_sink")
       .outputMode("update").start()
     try {
@@ -70,7 +70,7 @@ class StreamingIncrementalAggSpec extends AnyFunSuite with SparkTestBase {
     implicit val s = sparkSession
 
     val input = MemoryStream[MeasureIn](sparkSession)
-    val query = StreamingIncrementalAgg.maintain(input.toDF())
+    val query = StreamingIncrementalAgg.maintainTws(input.toDF())
       .writeStream.format("memory").queryName("ia_touch_sink")
       .outputMode("update").start()
     try {

@@ -32,7 +32,7 @@ class StreamingLatestStateSpec extends AnyFunSuite with SparkTestBase {
     implicit val s = sparkSession
 
     val input = MemoryStream[EventIn](sparkSession)
-    val query = StreamingLatestState.latestState(input.toDF())
+    val query = StreamingLatestState.latestStateTws(input.toDF())
       .writeStream.format("memory").queryName("ls_sink")
       .outputMode("update").start()
     try {
@@ -72,7 +72,7 @@ class StreamingLatestStateSpec extends AnyFunSuite with SparkTestBase {
       ev(7, 90000, 1, "click", 7.5))
 
     val input = MemoryStream[EventIn](sparkSession)
-    val query = StreamingLatestState.latestState(input.toDF())
+    val query = StreamingLatestState.latestStateTws(input.toDF())
       .writeStream.format("memory").queryName("ls_parity_sink")
       .outputMode("update").start()
     try {

@@ -23,7 +23,7 @@ class StreamingNearDupSpec extends AnyFunSuite with SparkTestBase {
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val input = MemoryStream[StreamingNearDup.DocIn](sparkSession)
-    val hits = StreamingNearDup.bandHits(input.toDF())(sparkSession)
+    val hits = StreamingNearDup.bandHitsTws(input.toDF())(sparkSession)
     val query = hits.writeStream
       .format("memory").queryName("neardup_sink")
       .outputMode("append").start()
@@ -63,7 +63,7 @@ class StreamingNearDupSpec extends AnyFunSuite with SparkTestBase {
     def doc(id: Long, sec: Long, t: String) =
       StreamingNearDup.DocIn(id, new Timestamp(sec * 1000L), t)
     val input = MemoryStream[StreamingNearDup.DocIn](sparkSession)
-    val hits = StreamingNearDup.bandHitsTtl(input.toDF(),
+    val hits = StreamingNearDup.bandHitsTtlTws(input.toDF(),
       java.time.Duration.ofSeconds(60))(sparkSession)
     val query = hits.writeStream
       .format("memory").queryName("neardup_ttl_sink")

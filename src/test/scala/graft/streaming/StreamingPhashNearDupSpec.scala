@@ -19,8 +19,7 @@ import graft.queries.Catalog
   *     with a constructed exact duplicate (Hamming 0) and a SEARCHED
   *     imperfect variant (0 < Hamming <= 7 — by pigeonhole such a
   *     pair always shares a band, so it must hit);
-  *  2. FMGWS == TWS bit-for-bit, across different micro-batch
-  *     slicings (the shared-fold structural claim, verified);
+  *  2. the same output under different micro-batch slicings;
   *  3. containment in the batch p101 pair census at sf0.01 (where the
   *     corpus has a real imperfect pair): every non-first hit is one
   *     of p101's (doc_a < doc_b) pairs with the identical Hamming
@@ -30,43 +29,25 @@ import graft.queries.Catalog
   */
 class StreamingPhashNearDupSpec extends AnyFunSuite with SparkTestBase {
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[T](f: => T): T = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(p) => spark.conf.set(ProviderKey, p)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   private def runStream(
       docs: Seq[StreamingPhashNearDup.DocIn], nBatches: Int,
-      tws: Boolean, sinkName: String)
-      : Map[(Long, Int), (Long, Int, Boolean)] = {
+      sinkName: String): Map[(Long, Int), (Long, Int, Boolean)] = {
     val sparkSession = spark
     import sparkSession.implicits._
-    def go(): Map[(Long, Int), (Long, Int, Boolean)] = {
-      val input = MemoryStream[StreamingPhashNearDup.DocIn](sparkSession)
-      val hits =
-        if (tws) StreamingPhashNearDup.bandHitsTws(input.toDF())(sparkSession)
-        else StreamingPhashNearDup.bandHits(input.toDF())(sparkSession)
-      val query = hits.writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").start()
-      try {
-        val per = math.max(1, (docs.length + nBatches - 1) / nBatches)
-        docs.grouped(per).foreach { b =>
-          input.addData(b)
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-      spark.table(sinkName).collect()
-        .map(r => (r.getLong(0), r.getInt(1)) ->
-          ((r.getLong(2), r.getInt(3), r.getBoolean(4)))).toMap
-    }
-    if (tws) withRocksDb(go()) else go()
+    val input = MemoryStream[StreamingPhashNearDup.DocIn](sparkSession)
+    val query = StreamingPhashNearDup.bandHitsTws(input.toDF())(sparkSession)
+      .writeStream.format("memory").queryName(sinkName)
+      .outputMode("append").start()
+    try {
+      val per = math.max(1, (docs.length + nBatches - 1) / nBatches)
+      docs.grouped(per).foreach { b =>
+        input.addData(b)
+        query.processAllAvailable()
+      }
+    } finally query.stop()
+    spark.table(sinkName).collect()
+      .map(r => (r.getLong(0), r.getInt(1)) ->
+        ((r.getLong(2), r.getInt(3), r.getBoolean(4)))).toMap
   }
 
   private def corpusAt(dir: String): Seq[StreamingPhashNearDup.DocIn] =
@@ -112,8 +93,8 @@ class StreamingPhashNearDupSpec extends AnyFunSuite with SparkTestBase {
     cands.next()
   }
 
-  test("stream == independent sequential first-claim recompute; " +
-    "TWS == FMGWS across micro-batch slicings") {
+  test("stream == independent sequential first-claim recompute " +
+    "across micro-batch slicings") {
     val sparkSession = spark
     import sparkSession.implicits._
 
@@ -151,8 +132,8 @@ class StreamingPhashNearDupSpec extends AnyFunSuite with SparkTestBase {
         Seq(claim) ++ hits
     }.toMap
 
-    val fmgws = runStream(feed, nBatches = 2, tws = false, "phash_fmgws")
-    assert(fmgws === expected)
+    val two = runStream(feed, nBatches = 2, "phash_2")
+    assert(two === expected)
     // the augmented docs guarantee both hit classes exist
     assert(expected.values.exists(v => !v._3 && v._2 == 0),
       "exact duplicate must produce a Hamming-0 hit")
@@ -160,16 +141,15 @@ class StreamingPhashNearDupSpec extends AnyFunSuite with SparkTestBase {
       s"imperfect variant (searched Hamming $varH vs its base " +
         s"'${origText.take(30)}...') must produce a hit")
 
-    val tws3 = runStream(feed, nBatches = 3, tws = true, "phash_tws")
-    assert(tws3 === expected,
-      "TWS under a different batch slicing must equal the same fold")
+    val three = runStream(feed, nBatches = 3, "phash_3")
+    assert(three === expected,
+      "a different batch slicing must equal the same fold")
   }
 
   test("every non-first hit is a p101 pair with the identical Hamming " +
     "distance (sf0.01, the corpus with a real imperfect pair)") {
     val dir = "/root/testdata/sf0.01"
-    val stream = runStream(corpusAt(dir), nBatches = 2, tws = false,
-      "phash_p101")
+    val stream = runStream(corpusAt(dir), nBatches = 2, "phash_p101")
     val batchPairs = Catalog.queries("p101_image_phash_neardup")(
       spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -188,7 +168,7 @@ class StreamingPhashNearDupSpec extends AnyFunSuite with SparkTestBase {
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = (1L to 70L).map(id =>
       StreamingPhashNearDup.DocIn(id, new Timestamp(id * 1000L), text))
-    val out = runStream(docs, nBatches = 4, tws = true, "phash_cap")
+    val out = runStream(docs, nBatches = 4, "phash_cap")
     // identical text -> identical signature -> all 8 band buckets hold
     // all 70 docs; per bucket: doc 1 claims, docs 2..64 hit (hamming
     // 0), docs 65..70 are silent

@@ -25,7 +25,7 @@ class StreamingQuantileSpec extends AnyFunSuite with SparkTestBase {
 
     val input = MemoryStream[ObsIn](sparkSession)
     val query = StreamingQuantile
-      .maintain(input.toDF(), graft.queries.Anomaly.SketchQs)
+      .maintainTws(input.toDF(), graft.queries.Anomaly.SketchQs)
       .writeStream.format("memory").queryName("sq_sink")
       .outputMode("update").start()
     try {

@@ -31,7 +31,7 @@ class StreamingSketchSpec extends AnyFunSuite with SparkTestBase {
     val (first, second) = toks.splitAt(toks.length / 3)
 
     val input = MemoryStream[String](sparkSession)
-    val query = StreamingSketch.cmsBuckets(input.toDF().toDF("t"))
+    val query = StreamingSketch.cmsBucketsTws(input.toDF().toDF("t"))
       .writeStream.format("memory").queryName("cms_sink")
       .outputMode("update").start()
     try {

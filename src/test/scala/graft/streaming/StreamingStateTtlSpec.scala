@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkTestBase
 import graft.streaming.StreamingLatestState.EventIn
@@ -16,7 +20,8 @@ import graft.streaming.StreamingLatestState.EventIn
   * event-time properties (watermark-driven), so the pins are
   * deterministic: no sleeps, no wall-clock.
   */
-class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase {
+class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase
+    with TimeLimits {
 
   private def ev(id: Long, tMs: Long, user: Long, etype: String,
       value: Double) = EventIn(id, new Timestamp(tMs), user, etype, value)
@@ -30,7 +35,7 @@ class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase {
     implicit val s = sparkSession
 
     val input = MemoryStream[EventIn](sparkSession)
-    val query = StreamingLatestState.latestStateTtl(input.toDF(), ttl)
+    val query = StreamingLatestState.latestStateTtlTws(input.toDF(), ttl)
       .writeStream.format("memory").queryName("ttl_churn_sink")
       .outputMode("update").start()
     try {
@@ -74,11 +79,11 @@ class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase {
     }
 
     val inTtl = MemoryStream[EventIn](sparkSession)
-    val qTtl = StreamingLatestState.latestStateTtl(inTtl.toDF(), ttl)
+    val qTtl = StreamingLatestState.latestStateTtlTws(inTtl.toDF(), ttl)
       .writeStream.format("memory").queryName("ttl_expiry_sink")
       .outputMode("update").start()
     val inPlain = MemoryStream[EventIn](sparkSession)
-    val qPlain = StreamingLatestState.latestState(inPlain.toDF())
+    val qPlain = StreamingLatestState.latestStateTws(inPlain.toDF())
       .writeStream.format("memory").queryName("ttl_expiry_plain_sink")
       .outputMode("update").start()
     try {
@@ -108,7 +113,7 @@ class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase {
     val input = MemoryStream[EventIn](sparkSession)
     // generous allowance so the late event is in-allowance
     val query = StreamingLatestState
-      .latestStateTtl(input.toDF(), ttl, watermarkDelay = "10 minutes")
+      .latestStateTtlTws(input.toDF(), ttl, watermarkDelay = "10 minutes")
       .writeStream.format("memory").queryName("ttl_ooo_sink")
       .outputMode("update").start()
     try {
@@ -153,11 +158,11 @@ class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase {
     def t(ms: Long) = new Timestamp(ms)
 
     val aggIn = MemoryStream[MeasureTsIn](sparkSession)
-    val qAgg = StreamingIncrementalAgg.maintainTtl(aggIn.toDF(), ttl)
+    val qAgg = StreamingIncrementalAgg.maintainTtlTws(aggIn.toDF(), ttl)
       .writeStream.format("memory").queryName("ttl_agg_sink")
       .outputMode("update").start()
     val skIn = MemoryStream[ObsTsIn](sparkSession)
-    val qSk = StreamingQuantile.maintainTtl(skIn.toDF(), Seq(50), ttl)
+    val qSk = StreamingQuantile.maintainTtlTws(skIn.toDF(), Seq(50), ttl)
       .writeStream.format("memory").queryName("ttl_sk_sink")
       .outputMode("update").start()
     try {
@@ -211,7 +216,7 @@ class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase {
       .benchBloomBitmap(Seq((0L, text)).toDF("doc_id", "text"))
     val input = MemoryStream[(Long, Timestamp, String, String)](sparkSession)
     val query = StreamingCuration
-      .decisions(input.toDF().toDF("doc_id", "ts", "source", "text"),
+      .decisionsTws(input.toDF().toDF("doc_id", "ts", "source", "text"),
         bitmap, java.time.Duration.ofSeconds(30))
       .writeStream.format("memory").queryName("cur_ttl_sink")
       .outputMode("update").start()
@@ -234,5 +239,173 @@ class StreamingStateTtlSpec extends AnyFunSuite with SparkTestBase {
       assert(!dupById(3L),
         "post-TTL arrival is a re-ingest and must claim fresh")
     } finally query.stop()
+  }
+
+  /** Runs `build` over a MemoryStream fed `batches`, one micro-batch
+    * each; returns the sink's rows rendered and sorted.
+    */
+  private def runFeed[I: Encoder, O](sink: String, batches: Seq[Seq[I]])(
+      build: Dataset[I] => Dataset[O]): Seq[String] = {
+    val input = MemoryStream[I](spark)
+    val q = build(input.toDS()).writeStream.format("memory")
+      .queryName(sink).outputMode("update").start()
+    try batches.foreach { b =>
+      input.addData(b)
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.table(sink).collect().map(_.toString).sorted.toSeq
+  }
+
+  test("a key re-arriving in the batch whose watermark passed its " +
+    "deadline restarts fresh: explicit outputs per TTL op") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    implicit val s = sparkSession
+    import StreamingIncrementalAgg.MeasureTsIn
+    import StreamingQuantile.ObsTsIn
+    def t(ms: Long) = new Timestamp(ms)
+    // every feed: key K at 1 s, a watermark driver at 200 s, K again
+    // at 300 s (an event AT the initial zero watermark would count as
+    // late and drop). The third batch runs at watermark 200 s, past K's
+    // 31 s deadline: K's timer fires before its new rows fold, so K
+    // restarts from those rows alone
+    assert(runFeed("ttl_rearm_agg", Seq(
+        Seq(MeasureTsIn("N", "O", 100L, t(1000L))),
+        Seq(MeasureTsIn("ZZ", "O", 1L, t(200000L))),
+        Seq(MeasureTsIn("N", "O", 700L, t(300000L))))) { ds =>
+      StreamingIncrementalAgg.maintainTtlTws(ds.toDF(), ttl)
+    } === Seq("[N,O,1,1.0,1.0]", "[N,O,1,7.0,7.0]", "[ZZ,O,1,0.01,0.01]"))
+    assert(runFeed("ttl_rearm_latest", Seq(
+        Seq(ev(1, 1000L, 7, "click", 1.0)),
+        Seq(ev(2, 200000L, 99, "wm", 0.0)),
+        Seq(ev(3, 300000L, 7, "click", 2.0)))) { ds =>
+      StreamingLatestState.latestStateTtlTws(ds.toDF(), ttl)
+    } === Seq("[7,click,1,1,1.0,1]", "[7,click,300,3,2.0,1]",
+      "[99,wm,200,2,0.0,1]"))
+    assert(runFeed("ttl_rearm_quantile", Seq(
+        Seq(ObsTsIn("click", 100L, t(1000L))),
+        Seq(ObsTsIn("wm", 1L, t(200000L))),
+        Seq(ObsTsIn("click", 900L, t(300000L))))) { ds =>
+      StreamingQuantile.maintainTtlTws(ds.toDF(), Seq(50, 95), ttl)
+    } === Seq("[click,50,1,10,512,1023,5.12E-4]",
+      "[click,50,1,7,64,127,6.4E-5]", "[click,95,1,10,512,1023,5.12E-4]",
+      "[click,95,1,7,64,127,6.4E-5]", "[wm,50,1,1,1,1,1.0E-6]",
+      "[wm,95,1,1,1,1,1.0E-6]"))
+    val text = "w1 w2 w3 w4 w5 w6 w7 w8"
+    val hits = runFeed("ttl_rearm_neardup", Seq(
+        Seq((1L, t(1000L), text)),
+        Seq((9L, t(200000L), "q1 q2 q3 q4 q5 q6 q7 q8")),
+        Seq((3L, t(300000L), text)))) { ds =>
+      StreamingNearDup.bandHitsTtlTws(ds.toDF("doc_id", "ts", "text"), ttl)
+    }
+    assert(hits === (0 until 16).flatMap(b => Seq(s"[1,$b,1,true]",
+      s"[3,$b,3,true]", s"[9,$b,9,true]")).sorted)
+  }
+
+  private val detConf = graft.kernel.AnomalyzerConf(delay = true,
+    sensitivity = 0.1, upperBound = 100, lowerBound = Some(0),
+    activeSize = 1, nSeasons = 4,
+    methods = Seq("magnitude", "fence", "cdf", "highrank"), permCount = 50)
+
+  private def pt(series: String, tMs: Long, v: Double) =
+    SeriesPoint(series, new Timestamp(tMs), v)
+
+  /** scoreTws(idleTtl) over a watermarked MemoryStream. */
+  private def startDetector(input: MemoryStream[SeriesPoint], sink: String,
+      idle: java.time.Duration) = {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    StreamingDetector.scoreTws(input.toDS().withWatermark("ts", "0 seconds"),
+        detConf, Some(idle))
+      .writeStream.format("memory").queryName(sink)
+      .outputMode("append").start()
+  }
+
+  private implicit val signaler: Signaler = ThreadSignaler
+
+  /** processAllAvailable, bounded: a query whose TTL runs on processing
+    * time keeps scheduling batches and never drains.
+    */
+  private def drain(q: StreamingQuery): Unit =
+    failAfter(2.minutes)(q.processAllAvailable())
+
+  // event time spans hours while the test runs for seconds: only an
+  // event-time TTL can evict here
+  private val detTtl = java.time.Duration.ofMinutes(10)
+  private val hourMs = 3600000L
+
+  test("scoreTws(idleTtl) expires on event time: series churn keeps " +
+    "state rows at the live set") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val input = MemoryStream[SeriesPoint](sparkSession)
+    val query = startDetector(input, "det_ttl_churn", detTtl)
+    try {
+      // 3 generations of 20 one-shot series, an hour of event time
+      // apart; the second batch per generation advances the watermark
+      // past the previous generation's high-water + TTL
+      val rowsAfter = (0 until 3).map { gen =>
+        val base = (gen + 1) * hourMs
+        input.addData((0 until 20).map(k =>
+          pt(s"g$gen-$k", base, k.toDouble)): _*)
+        drain(query)
+        input.addData(pt("wm", base + 1000L, 0.0))
+        drain(query)
+        query.lastProgress.stateOperators.head.numRowsTotal
+      }
+      assert(spark.table("det_ttl_churn").count() === 63L)
+      // live set each time: one generation's 20 series + "wm"; without
+      // eviction the store would hold 41 then 61 series
+      assert(rowsAfter.head > 0 && rowsAfter.distinct.size === 1,
+        s"state rows per generation $rowsAfter: dead series not evicted")
+    } finally query.stop()
+  }
+
+  test("scoreTws(idleTtl): an expired series re-arrives cold, its " +
+    "first scores Delay-gated exactly like a new series") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val input = MemoryStream[SeriesPoint](sparkSession)
+    val query = startDetector(input, "det_ttl_cold", detTtl)
+    val warmVals = Seq(1.0, 1.2, 0.9, 1.1, 1.0, 1.05)
+    val backVals = Seq(80.0, 85.0, 1.0, 90.0, 88.0, 2.0)
+    val backAt = 2 * hourMs
+    try {
+      input.addData(warmVals.zipWithIndex.map { case (v, i) =>
+        pt("s", (i + 1) * 1000L, v) }: _*)
+      drain(query)
+      // watermark driver: the next batch runs at watermark 1 h, far
+      // past s's high-water (6 s) + TTL, so s's timer fires there
+      input.addData(pt("wm", hourMs, 0.0))
+      drain(query)
+      input.addData(pt("wm", hourMs + 1000L, 0.0))
+      drain(query)
+      input.addData(backVals.zipWithIndex.map { case (v, i) =>
+        pt("s", backAt + i * 1000L, v) }: _*)
+      drain(query)
+    } finally query.stop()
+    val got = spark.table("det_ttl_cold").as[AnomalyScore].collect()
+      .filter(a => a.series == "s" && a.ts.getTime >= backAt)
+      .sortBy(_.ts.getTime).map(_.prob).toSeq
+    val fresh = new graft.kernel.Anomalyzer(detConf,
+      StreamingDetector.seriesHash("s"))
+    val cold = backVals.map(fresh.push)
+    val continued = new graft.kernel.Anomalyzer(detConf,
+      StreamingDetector.seriesHash("s"))
+    warmVals.foreach(continued.push)
+    val warm = backVals.map(continued.push)
+    assert(cold.take(detConf.windowSize - 1).forall(_ == 0.0),
+      "Delay gates a new series until its window fills")
+    assert(warm !== cold, "the feed must tell cold from warm")
+    assert(got === cold, "an expired series must restart cold")
+  }
+
+  test("scoreTws(idleTtl) without an upstream watermark fails loudly") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val input = MemoryStream[SeriesPoint](sparkSession)
+    val e = intercept[IllegalArgumentException](
+      StreamingDetector.scoreTws(input.toDS(), detConf, Some(detTtl)))
+    assert(e.getMessage.contains("watermark"))
   }
 }
