@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -92,6 +92,41 @@ case class AnomalyProbsByTest(window: Expression, seriesHash: Expression,
     copy(window = newFirst, seriesHash = newSecond, rowKey = newThird)
 }
 
+/** The ensemble probability of a per-test map column ([[AnomalyProbsByTest]]'s
+  * output) and its window's length: the Delay gate plus
+  * [[graft.kernel.Ensemble.combine]], so a query that wants both columns
+  * runs the kernel once per row. Bit-identical to [[AnomalyProb]] over
+  * the same window: `combine` sums in map iteration order, and the map is
+  * rebuilt by inserting its entries in stored order, which reproduces
+  * that order (insertion order up to four keys, the hash trie's
+  * canonical order from five).
+  */
+case class AnomalyProbOfTests(probs: Expression, windowLength: Expression,
+    conf: AnomalyzerConf) extends BinaryExpression with CodegenFallback {
+  override def left: Expression = probs
+  override def right: Expression = windowLength
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "anomaly_prob_of_tests"
+  override protected def nullSafeEval(m: Any, n: Any): Any = {
+    if (Ensemble.delayed(n.asInstanceOf[Int], conf)) 0.0
+    else {
+      val md = m.asInstanceOf[MapData]
+      val ks = md.keyArray()
+      val vs = md.valueArray()
+      var probmap = Map.empty[String, Double]
+      var i = 0
+      while (i < md.numElements()) {
+        probmap = probmap.updated(ks.getUTF8String(i).toString, vs.getDouble(i))
+        i += 1
+      }
+      Ensemble.combine(probmap, conf)
+    }
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(probs = newLeft, windowLength = newRight)
+}
+
 object AnomalyFunctions {
   import org.apache.spark.sql.graft.shims.{column, expression}
 
@@ -106,4 +141,12 @@ object AnomalyFunctions {
       rowKey: Column, conf: AnomalyzerConf): Column =
     column(AnomalyProbsByTest(expression(window), expression(seriesHash),
       expression(rowKey), AnomalyzerConf.validated(conf)))
+
+  /** Ensemble probability of an `anomaly_probs_by_test` map column,
+    * given the length of the window it was computed over.
+    */
+  private[graft] def anomaly_prob_of_tests(probs: Column, windowLength: Column,
+      conf: AnomalyzerConf): Column =
+    column(AnomalyProbOfTests(expression(probs), expression(windowLength),
+      AnomalyzerConf.validated(conf)))
 }

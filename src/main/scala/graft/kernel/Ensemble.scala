@@ -5,6 +5,14 @@ package graft.kernel
   * weighted mean, with the reference's exact fine print — cap to [0,1],
   * NA drop, highrank/lowrank folded to max under "rank", magnitude
   * sensitivity short-circuit, NaN→0 guard.
+  *
+  * [[eval]] applies the sensitivity short-circuit BEFORE running the
+  * other tests: when the capped magnitude alone already decides a 0,
+  * the permutation bootstraps are skipped. The result is bit-identical
+  * to `combine(evalByTest(...))` because both sides share
+  * [[belowSensitivity]], the tests are pure, and [[PermDraw]] addresses
+  * draws per family and position, so skipping a family shifts no other
+  * family's draws. [[evalByTest]] still runs every test.
   * Reference: /root/reference/anomalyze.go:142-241.
   */
 object Ensemble {
@@ -39,24 +47,41 @@ object Ensemble {
   def weights(probmap: Map[String, Double]): Map[String, Double] =
     probmap.map { case (m, p) => m -> getWeight(m, p) }
 
+  /** The sensitivity short-circuit (anomalyze.go:173-175): a capped
+    * magnitude probability below `sensitivity` zeroes the ensemble.
+    * NaN never fires it. The one rule [[combine]] and [[eval]] share.
+    */
+  def belowSensitivity(cappedMagnitude: Double, conf: AnomalyzerConf): Boolean =
+    cappedMagnitude < conf.sensitivity
+
   /** Combine a probmap into the final probability (anomalyze.go:169-191):
     * magnitude sensitivity short-circuit, weighted mean, NaN→0.
     */
   def combine(probmap: Map[String, Double], conf: AnomalyzerConf): Double = {
-    probmap.get("magnitude") match {
-      case Some(p) if p < conf.sensitivity => return 0.0
-      case _ =>
-    }
+    if (probmap.get("magnitude").exists(belowSensitivity(_, conf))) return 0.0
     val probs = probmap.values.toArray
     val ws = probmap.map { case (m, p) => getWeight(m, p) }.toArray
     val weighted = if (probs.isEmpty) Double.NaN else Vec.weightedMean(probs, ws)
     if (weighted.isNaN) 0.0 else weighted
   }
 
-  /** Full evaluation incl. the Delay gate (anomalyze.go:145-192). */
+  /** The Delay gate (anomalyze.go:146-149): a buffer shorter than
+    * reference+active scores 0 when `delay` is set.
+    */
+  def delayed(n: Int, conf: AnomalyzerConf): Boolean =
+    conf.delay && n < conf.windowSize
+
+  /** Full evaluation incl. the Delay gate (anomalyze.go:145-192).
+    * Equal, bit for bit, to `combine(evalByTest(data, conf, draw), conf)`
+    * after the Delay gate, but magnitude runs first: when it is present,
+    * defined and [[belowSensitivity]], the result is 0 and no other test
+    * (in particular no permutation bootstrap) runs.
+    */
   def eval(data: Array[Double], conf: AnomalyzerConf,
       draw: PermDraw): Double = {
-    if (conf.delay && data.length < conf.windowSize) return 0.0
+    if (delayed(data.length, conf)) return 0.0
+    if (conf.methods.contains("magnitude") && Tests.magnitude(data, conf)
+        .exists(p => belowSensitivity(Vec.cap(p, 0, 1), conf))) return 0.0
     combine(evalByTest(data, conf, draw), conf)
   }
 }

@@ -187,7 +187,10 @@ object Tests {
     * the active window as a uniform Floyd subset (the reference window
     * = a uniform subset of the remainder; the whole remainder in the
     * pooled case — see [[PermDraw.subsetAt]]) is
-    * distribution-identical and skips the full shuffle.
+    * distribution-identical and skips the full shuffle. Cost per row:
+    * one [[ksCore]] plus, per permutation, O(n2) work when the pool is
+    * the two windows ([[pooledKsLoop]]) and one full [[ksCore]] over
+    * fresh copies otherwise ([[generalKsLoop]]).
     */
   def bootstrapKs(v: Array[Double], conf: AnomalyzerConf,
       rng: PermDraw): Option[Double] =
@@ -212,23 +215,116 @@ object Tests {
     * [lo, hi] grid AND the total <=-count at every grid point — is
     * permutation-invariant, so per permutation only the n2 ACTIVE
     * elements' counts change: count_ref(<=g) = total(<=g) −
-    * count_act(<=g). Replaces two sorts + two ECDF closures + O(n·grid)
-    * evaluations per permutation with O(n2·grid) comparisons and zero
-    * allocation, consuming the RNG identically and producing the exact
-    * same counts/divisions as [[ksCore]] — outputs are bit-identical
-    * (pinned by TestsSpec's fast==general test).
+    * count_act(<=g).
+    *
+    * On a non-decreasing, NaN-free grid (what [[Vec.interpolate]] builds
+    * from finite bounds) each value's `v(k) <= grid(g)` set is a suffix
+    * of the grid starting at `first(k)`, found once per row. A draw's n2
+    * sorted `first` indices split the grid into n2+1 runs of constant
+    * active count c, and on a run `c/n2 − (total(<=g) − c)/n1` is
+    * non-increasing in g, in floating point too (the int count is
+    * monotone, and IEEE division and subtraction are monotone), so its
+    * largest |·| sits at a run endpoint. Each draw therefore costs O(n2)
+    * work — a Floyd subset, a sort of n2 ints and 2(n2+1) evaluations
+    * of the same expression — instead of O(n2·grid) comparisons, and the
+    * max is the same double. Any other grid (a ±Inf bound makes NaN
+    * steps) takes [[perGridKsLoop]]. Either way the RNG is consumed
+    * identically and the counts and divisions are [[ksCore]]'s, so the
+    * p-values are bit-identical (pinned by KsParityProps).
     */
-  private def pooledKsLoop(v: Array[Double], ref0: Array[Double],
+  private[kernel] def pooledKsLoop(v: Array[Double], ref0: Array[Double],
       act0: Array[Double], dist: Double, conf: AnomalyzerConf,
       draw: PermDraw): Int = {
-    val n1 = ref0.length
     val n2 = act0.length
+    val grid = poolGrid(ref0, act0)
+    if (!nonDecreasing(grid))
+      return perGridKsLoop(v, grid, n2, dist, conf, draw)
     val n = v.length
-    // identical lo/hi to ksCore's: the pool equals ref ∪ active in
-    // every permutation, so the original split's min/max IS the pool's
-    val lo = math.min(ref0.min, act0.min)
-    val hi = math.max(ref0.max, act0.max)
-    val grid = Vec.interpolate(lo, hi, n1 + n2)
+    val n1d = (n - n2).toDouble
+    val n2d = n2.toDouble
+    val gn = grid.length
+    // first(k): the first grid index with v(k) <= grid(g) (gn if none,
+    // e.g. NaN), by bisection on that monotone predicate
+    val first = new Array[Int](n)
+    val totalLe = new Array[Int](gn + 1)
+    var k = 0
+    while (k < n) {
+      var lo = 0
+      var hi = gn
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (v(k) <= grid(mid)) hi = mid else lo = mid + 1
+      }
+      first(k) = lo
+      totalLe(lo) += 1
+      k += 1
+    }
+    var g = 1
+    while (g < gn) { totalLe(g) += totalLe(g - 1); g += 1 }
+    val pick = new Array[Int](n2)
+    val fs = new Array[Int](n2)
+    var significant = 0
+    var i = 0
+    while (i < conf.permCount) {
+      // the permuted ACTIVE window = values at a uniform Floyd
+      // n2-subset; the reference window is the complement — the same
+      // split the general loop produces when the pool is exactly the
+      // two windows (pinned by KsParityProps)
+      draw.subsetAt(draw.permBase(PermDraw.KsFamily, i), n, n2, pick)
+      var m = 0
+      while (m < n2) {
+        val f = first(pick(m))
+        var j = m
+        while (j > 0 && fs(j - 1) > f) { fs(j) = fs(j - 1); j -= 1 }
+        fs(j) = f
+        m += 1
+      }
+      var d = 0.0
+      var c = 0
+      while (c <= n2) {
+        // run c: grid points where exactly c active values are <= g
+        val start = if (c == 0) 0 else fs(c - 1)
+        val end = if (c == n2) gn else fs(c)
+        if (start < end) {
+          d = maxAbs(d, c / n2d - (totalLe(start) - c) / n1d)
+          d = maxAbs(d, c / n2d - (totalLe(end - 1) - c) / n1d)
+        }
+        c += 1
+      }
+      if (d < dist) significant += 1
+      i += 1
+    }
+    significant
+  }
+
+  /** The KS grid of the pooled loops: identical lo/hi to ksCore's (the
+    * pool equals ref ∪ active in every permutation, so the original
+    * split's min/max IS the pool's).
+    */
+  private[kernel] def poolGrid(ref0: Array[Double],
+      act0: Array[Double]): Array[Double] =
+    Vec.interpolate(math.min(ref0.min, act0.min),
+      math.max(ref0.max, act0.max), ref0.length + act0.length)
+
+  private def nonDecreasing(grid: Array[Double]): Boolean = {
+    var ok = grid.isEmpty || !grid(0).isNaN
+    var g = 1
+    while (ok && g < grid.length) { ok = grid(g - 1) <= grid(g); g += 1 }
+    ok
+  }
+
+  @inline private def maxAbs(d: Double, diff: Double): Double = {
+    val ad = if (diff < 0) -diff else diff
+    if (ad > d) ad else d
+  }
+
+  /** The pooled loop for a grid that is not monotone: evaluates every
+    * grid point per draw, O(n2·grid) comparisons, same counts and
+    * divisions as [[ksCore]].
+    */
+  private[kernel] def perGridKsLoop(v: Array[Double], grid: Array[Double],
+      n2: Int, dist: Double, conf: AnomalyzerConf, draw: PermDraw): Int = {
+    val n = v.length
     val totalLe = new Array[Int](grid.length)
     var g = 0
     while (g < grid.length) {
@@ -238,17 +334,13 @@ object Tests {
       totalLe(g) = c
       g += 1
     }
-    val n1d = n1.toDouble
+    val n1d = (n - n2).toDouble
     val n2d = n2.toDouble
     val pick = new Array[Int](n2)
     val act = new Array[Double](n2)
     var significant = 0
     var i = 0
     while (i < conf.permCount) {
-      // the permuted ACTIVE window = values at a uniform Floyd
-      // n2-subset; the reference window is the complement — the same
-      // split the general loop produces when the pool is exactly the
-      // two windows (pinned by KsParitySpec)
       draw.subsetAt(draw.permBase(PermDraw.KsFamily, i), n, n2, pick)
       var m = 0
       while (m < n2) { act(m) = v(pick(m)); m += 1 }
@@ -258,9 +350,7 @@ object Tests {
         var ca = 0
         var k = 0
         while (k < n2) { if (act(k) <= grid(g)) ca += 1; k += 1 }
-        val diff = ca / n2d - (totalLe(g) - ca) / n1d
-        val ad = if (diff < 0) -diff else diff
-        if (ad > d) d = ad
+        d = maxAbs(d, ca / n2d - (totalLe(g) - ca) / n1d)
         g += 1
       }
       if (d < dist) significant += 1

@@ -63,14 +63,28 @@ object AnomalyOps {
     val rowKey = row_number().over(w).cast("long")
     val windowed = df
       .withColumn("window", collect_list(value.cast("double")).over(frame))
-      .withColumn("anomaly_prob",
-        AnomalyFunctions.anomaly_prob(col("window"), sHash, rowKey, c))
-    val result =
-      if (byTest) windowed.withColumn("anomaly_probs",
-        AnomalyFunctions.anomaly_probs_by_test(col("window"), sHash, rowKey, c))
-      else windowed
-    result.drop("window")
+    scoreWindows(windowed, sHash, rowKey, c, byTest).drop("window")
   }
+
+  /** Appends `anomaly_prob` (and, with `byTest`, `anomaly_probs`) scored
+    * over the `window` column. With `byTest` the kernel still runs once
+    * per row: `anomaly_prob` is derived from the per-test map through the
+    * Delay gate and `Ensemble.combine` ([[AnomalyFunctions.anomaly_prob_of_tests]]),
+    * which equals `Ensemble.eval` bit for bit. The map is referenced
+    * twice above its projection, so CollapseProject cannot inline the
+    * kernel into both columns (pinned in AnomalyOpsSpec).
+    */
+  private def scoreWindows(windowed: DataFrame, sHash: Column,
+      rowKey: Column, c: AnomalyzerConf, byTest: Boolean): DataFrame =
+    if (!byTest) windowed.withColumn("anomaly_prob",
+      AnomalyFunctions.anomaly_prob(col("window"), sHash, rowKey, c))
+    else windowed
+      .withColumn("__probs",
+        AnomalyFunctions.anomaly_probs_by_test(col("window"), sHash, rowKey, c))
+      .withColumn("anomaly_prob", AnomalyFunctions.anomaly_prob_of_tests(
+        col("__probs"), size(col("window")), c))
+      .withColumn("anomaly_probs", col("__probs"))
+      .drop("__probs")
 
   /** Typed facade, symmetric with the streaming API: the same
     * `Dataset[SeriesPoint] => Dataset[AnomalyScore]` shape as
@@ -159,13 +173,7 @@ object AnomalyOps {
       .withColumn("window", collect_list(value.cast("double")).over(frame))
       .filter(!col("__warm"))
       .repartition(evalN)
-      .withColumn("anomaly_prob",
-        AnomalyFunctions.anomaly_prob(col("window"), sHash, col("__rn"), c))
-    val scored =
-      if (byTest) windowed.withColumn("anomaly_probs",
-        AnomalyFunctions.anomaly_probs_by_test(col("window"), sHash,
-          col("__rn"), c))
-      else windowed
-    scored.drop("window", "__chunk", "__warm", "__rn")
+    scoreWindows(windowed, sHash, col("__rn"), c, byTest)
+      .drop("window", "__chunk", "__warm", "__rn")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.functions.AnomalyExpressionBase
 import graft.kernel.{AnomalyzerConf, Ensemble}
 
 class AnomalyOpsSpec extends AnyFunSuite with SparkTestBase {
@@ -114,5 +115,40 @@ class AnomalyOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(row.nonEmpty)
     val m = row.last.getMap[String, Double](0)
     assert(m.keys.forall(Set("magnitude", "fence", "cdf").contains))
+  }
+
+  test("byTest runs the kernel once per row; its anomaly_prob == eval bitwise") {
+    // 3 keys (insertion-ordered map) with the Delay gate, and all seven
+    // tests (6 keys, hash-ordered map): combine sums in map order
+    val allConf = detConf.copy(permCount = 40,
+      methods = AnomalyzerConf.SupportedMethods)
+    val events = graft.sources.Tables.events(spark, sfDir)
+      .filter(col("event_id") < 400)
+    def kernelExprs(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect { case e: AnomalyExpressionBase => e }.size).sum
+      }.sum
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    for ((conf, keys) <- Seq(detConf.copy(delay = true) -> 3, allConf -> 6);
+         chunked <- Seq(false, true)) {
+      def run(byTest: Boolean) =
+        if (chunked) AnomalyOps.withAnomalyProbsChunked(events,
+          col("event_type"), col("ts"), col("value"), conf,
+          tieBreak = Seq(col("event_id")), chunkSize = 16, byTest = byTest)
+        else AnomalyOps.withAnomalyProbs(events, col("event_type"),
+          col("ts"), col("value"), conf, tieBreak = Seq(col("event_id")),
+          byTest = byTest)
+      val both = run(byTest = true)
+      assert(kernelExprs(both) === 1, both.queryExecution.optimizedPlan)
+      val got = both.select("event_id", "anomaly_prob", "anomaly_probs")
+        .collect().map(r => r.getLong(0) ->
+          (bits(r.getDouble(1)), r.getMap[String, Double](2).size)).toMap
+      val expected = run(byTest = false).select("event_id", "anomaly_prob")
+        .collect().map(r => r.getLong(0) -> bits(r.getDouble(1))).toMap
+      assert(got.view.mapValues(_._1).toMap === expected,
+        s"conf=$conf chunked=$chunked")
+      assert(got.values.map(_._2).max === keys)
+      assert(got.values.exists(_._1 != bits(0.0)))
+    }
   }
 }
