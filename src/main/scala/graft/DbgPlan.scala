@@ -4,7 +4,10 @@ package graft
   * formatted physical plan of each named catalog query against the
   * sf0.001 corpus — the fast way to audit scans/exchanges/broadcasts
   * per query while iterating (pair with the plan pins in
-  * ScalePropertiesSpec for the load-bearing guarantees).
+  * ScalePropertiesSpec for the load-bearing guarantees). With no
+  * arguments it prints every catalog entry in catalog order, so a
+  * refactor's no-plan-change proof is a diff of two runs (README,
+  * Verification).
   */
 object DbgPlan {
   def main(args: Array[String]): Unit = {
@@ -15,9 +18,14 @@ object DbgPlan {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .flatMap(_.toIntOption).getOrElse(8)
     val spark = GraftSession.create(s"local[$cpus]", cpus, "dbg-plan")
-    for (n <- args) {
+    val names = if (args.isEmpty) queries.Catalog.all.map(_.name) else args.toSeq
+    for (n <- names) {
       println(s"===== $n =====")
       queries.Catalog.queries(n)(spark, sfDir).explain("formatted")
+      // entries persist intermediates while building; drop them per
+      // entry as Verify does, so a whole-catalog run stays flat
+      operators.EntryCaches.releaseAll()
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

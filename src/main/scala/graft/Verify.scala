@@ -4,6 +4,42 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Money-domain guard: the relational layer casts every
+    * money column to DECIMAL(8,2), and a value that cast cannot hold
+    * becomes NULL under non-ANSI evaluation and silently vanishes from
+    * every money sum — a wrong answer, not an error. A column violates
+    * when a non-null value does not survive the cast (this includes
+    * [999999.995, 1e6), which HALF_UP rounds past 999999.99) or when
+    * its max |v| reaches its bound: prices 1e6 (the cast range),
+    * quantities/discounts 1e3 (the moneySumSmall single-long-sum
+    * budget — see Relational's headroom comments). Returns one message
+    * per violation; `table` resolves lineitem and orders.
+    */
+  private[graft] def moneyViolations(
+      table: String => org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions._
+    val money = Seq(
+      "lineitem" -> Seq("l_extendedprice" -> 1e6, "l_quantity" -> 1e3,
+        "l_discount" -> 1e3),
+      "orders" -> Seq("o_totalprice" -> 1e6))
+    money.flatMap { case (tbl, cols) =>
+      val aggs = cols.flatMap { case (c, _) =>
+        Seq(max(abs(col(c).cast("double"))),
+          count(when(col(c).isNotNull &&
+            expr(s"try_cast($c AS DECIMAL(8,2))").isNull, 1)))
+      }
+      val row = table(tbl).agg(aggs.head, aggs.tail: _*).head
+      cols.zipWithIndex.flatMap { case ((c, bound), i) =>
+        val over = Option.when(!row.isNullAt(2 * i) &&
+            row.getDouble(2 * i) >= bound)(
+          s"$tbl.$c max |v| = ${row.getDouble(2 * i)} (bound $bound)")
+        val lost = row.getLong(2 * i + 1)
+        over.toSeq ++ Option.when(lost > 0)(
+          s"$tbl.$c: $lost value(s) overflow DECIMAL(8,2)")
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -52,37 +88,13 @@ object Verify {
         .foreach(t =>
           graft.sources.Tables.table(spark, sfDir, t).limit(1).count())
     } catch { case e if scala.util.control.NonFatal(e) => () }
-    // Money-domain guard (ADVICE r14): the relational layer's
-    // DECIMAL(8,2) money casts assume |value| < 1e6. The session runs
-    // non-ANSI, so a violating row would cast to NULL and silently
-    // vanish from every money sum — a wrong answer, not an error.
-    // Assert the bound ONCE per verification run and fail loudly; NOT
-    // wrapped in the warmup's swallow-all (a guard that can't fail
-    // guards nothing).
-    {
-      import org.apache.spark.sql.functions._
-      // per-column bounds: prices < 1e6 (the DECIMAL(8,2) cast range),
-      // quantities/discounts < 1e3 (the moneySumSmall single-long-sum
-      // budget — see Relational's headroom comments)
-      val money = Seq(
-        "lineitem" -> Seq("l_extendedprice" -> 1e6, "l_quantity" -> 1e3,
-          "l_discount" -> 1e3),
-        "orders" -> Seq("o_totalprice" -> 1e6))
-      val bad = money.flatMap { case (tbl, cols) =>
-        val row = graft.sources.Tables.table(spark, sfDir, tbl)
-          .agg(max(abs(col(cols.head._1).cast("double"))),
-            cols.tail.map(c => max(abs(col(c._1).cast("double")))): _*).head
-        cols.zipWithIndex.collect {
-          case ((c, bound), i) if !row.isNullAt(i) &&
-              row.getDouble(i) >= bound =>
-            s"$tbl.$c max |v| = ${row.getDouble(i)} (bound $bound)"
-        }
-      }
-      require(bad.isEmpty,
-        "money-domain violation (out-of-bound values would silently " +
-          s"NULL out of the DECIMAL(8,2) money casts or overflow the " +
-          s"single-long small sums): ${bad.mkString("; ")}")
-    }
+    // Money-domain guard: NOT wrapped in the warmup's swallow-all (a
+    // guard that can't fail guards nothing).
+    val bad = moneyViolations(graft.sources.Tables.table(spark, sfDir, _))
+    require(bad.isEmpty,
+      "money-domain violation (out-of-bound values would silently " +
+        s"NULL out of the DECIMAL(8,2) money casts or overflow the " +
+        s"single-long small sums): ${bad.mkString("; ")}")
     val t0 = System.nanoTime()
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     // Ambient probe samples (the calib discipline Verify lacked, round

@@ -128,31 +128,14 @@ object AnomalyOps {
       conf: AnomalyzerConf,
       tieBreak: Seq[Column] = Nil,
       chunkSize: Int = 8192,
-      byTest: Boolean = false,
-      evalPartitions: Int = 0): DataFrame = {
+      byTest: Boolean = false): DataFrame = {
     val c = AnomalyzerConf.validated(conf)
     require(chunkSize >= c.windowSize,
       s"chunkSize ($chunkSize) must be >= windowSize (${c.windowSize})")
     val ord = ts +: tieBreak
-    val w = Window.partitionBy(series).orderBy(ord: _*)
-    // one cheap pass to pin each row's position in its series, then
-    // chunk assignment + warm-up replication in the SAME pass: each of
-    // the last windowSize-1 rows of a chunk explodes into two copies
-    // (its own chunk, and the next chunk as warm-up history). A
-    // union-of-two-branches formulation would scan and shuffle the
-    // input twice; the explode keeps it to one scan + one exchange.
-    val base = df.withColumn("__rn", row_number().over(w).cast("long"))
-    val chunk0 = ((col("__rn") - 1) / chunkSize).cast("long")
-    val isTail =
-      ((col("__rn") - 1) % chunkSize) >= (chunkSize - (c.windowSize - 1))
-    val one = array(struct(chunk0.as("c"), lit(false).as("w")))
-    val two = array(struct(chunk0.as("c"), lit(false).as("w")),
-      struct((chunk0 + 1).as("c"), lit(true).as("w")))
-    val assigned = base
-      .withColumn("__cw", explode(when(isTail, two).otherwise(one)))
-      .withColumn("__chunk", col("__cw.c"))
-      .withColumn("__warm", col("__cw.w"))
-      .drop("__cw")
+    val assigned = Detectors.assignChunks(df, "__rn",
+      row_number().over(Window.partitionBy(series).orderBy(ord: _*))
+        .cast("long"), chunkSize, c.windowSize)
     val cw = Window.partitionBy(series, col("__chunk")).orderBy(ord: _*)
     val frame = cw.rowsBetween(-(c.windowSize - 1), 0)
     val sHash = seriesHash60(series)
@@ -166,13 +149,10 @@ object AnomalyOps {
     // permCount=500: 29s coalesced vs 5s balanced on 32 cores). Warm-up
     // rows are dropped BEFORE the eval so none of their kernel work is
     // thrown away.
-    val evalN =
-      if (evalPartitions > 0) evalPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
     val windowed = assigned
       .withColumn("window", collect_list(value.cast("double")).over(frame))
       .filter(!col("__warm"))
-      .repartition(evalN)
+      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
     scoreWindows(windowed, sHash, col("__rn"), c, byTest)
       .drop("window", "__chunk", "__warm", "__rn")
   }

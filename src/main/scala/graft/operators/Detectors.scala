@@ -68,26 +68,36 @@ object Detectors {
     require(chunkSize >= spec.windowSize,
       s"chunkSize ($chunkSize) must be >= windowSize (${spec.windowSize})")
     val ord = ts +: tieBreak
-    val w0 = Window.partitionBy(series).orderBy(ord: _*)
-    // chunk assignment + warm-up replication in one pass: tail rows
-    // explode into (own chunk, next chunk as warm-up) instead of a
-    // union of two branches, which would scan and shuffle the input
-    // twice. See AnomalyOps.withAnomalyProbsChunked for the same shape.
-    val base = df.withColumn("rn", row_number().over(w0))
-    val chunk0 = ((col("rn") - 1) / chunkSize).cast("long")
+    val assigned = assignChunks(df, "rn",
+      row_number().over(Window.partitionBy(series).orderBy(ord: _*)),
+      chunkSize, spec.windowSize)
+    addProbs(assigned, Seq(series, col("__chunk")), ord, value, spec)
+      .filter(!col("__warm"))
+      .drop("__chunk", "__warm")
+  }
+
+  /** Chunk assignment for the chunked evaluators ([[withProbsChunked]],
+    * [[AnomalyOps.withAnomalyProbsChunked]]): pin each row's series
+    * position `position` as column `rn`, then split the series into
+    * `chunkSize`-row chunks (`__chunk`) in the SAME pass — each of the
+    * last windowSize-1 rows of a chunk explodes into two copies (its
+    * own chunk, and the next chunk as warm-up history, `__warm`). A
+    * union-of-two-branches formulation would scan and shuffle the
+    * input twice; the explode keeps it to one scan + one exchange.
+    */
+  private[operators] def assignChunks(df: DataFrame, rn: String,
+      position: Column, chunkSize: Int, windowSize: Int): DataFrame = {
+    val chunk0 = ((col(rn) - 1) / chunkSize).cast("long")
     val isTail =
-      ((col("rn") - 1) % chunkSize) >= (chunkSize - (spec.windowSize - 1))
+      ((col(rn) - 1) % chunkSize) >= (chunkSize - (windowSize - 1))
     val one = array(struct(chunk0.as("c"), lit(false).as("w")))
     val two = array(struct(chunk0.as("c"), lit(false).as("w")),
       struct((chunk0 + 1).as("c"), lit(true).as("w")))
-    val assigned = base
+    df.withColumn(rn, position)
       .withColumn("__cw", explode(when(isTail, two).otherwise(one)))
       .withColumn("__chunk", col("__cw.c"))
       .withColumn("__warm", col("__cw.w"))
       .drop("__cw")
-    addProbs(assigned, Seq(series, col("__chunk")), ord, value, spec)
-      .filter(!col("__warm"))
-      .drop("__chunk", "__warm")
   }
 
   /** Same columns as [[withProbs]] computed by the fused single-pass

@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.kernel.AnomalyzerConf
 import graft.operators.{AnomalyOps, Detectors}
@@ -69,6 +70,77 @@ object Anomaly {
         col("ts"), Seq(col("event_id")), col("value"), spec)
       .filter(col("rn") >= spec.windowSize)
 
+  /** Exact wide integer arithmetic: sums and products of micro values
+    * in DECIMAL(38,0), never an int64 that could wrap.
+    */
+  private def dec(c: Column): Column = c.cast("decimal(38,0)")
+
+  /** Series order: each event_type's rows by (ts, event_id). */
+  private def seriesOrder: WindowSpec =
+    Window.partitionBy("event_type").orderBy(col("ts"), col("event_id"))
+
+  /** The w-row trailing frame of [[seriesOrder]], current row last. */
+  private def trailingFrame(w: Int): WindowSpec =
+    seriesOrder.rowsBetween(-(w - 1), 0)
+
+  /** The trailing window per series: `rn` (1-based position in
+    * [[seriesOrder]]) and `arr`, the last `w` values of column `v`,
+    * oldest first. Rows with rn < w carry a partial window.
+    */
+  private def withTrailing(df: DataFrame, v: String, w: Int,
+      arr: String = "arr"): DataFrame =
+    df.withColumn("rn", row_number().over(seriesOrder))
+      .withColumn(arr, collect_list(col(v)).over(trailingFrame(w)))
+
+  /** [[withTrailing]] keeping the full windows only (rn >= w). */
+  private def trailing(df: DataFrame, v: String, w: Int): DataFrame =
+    withTrailing(df, v, w).filter(col("rn") >= w)
+
+  /** [[trailing]]'s DuckDB twin over `events`: the selected `cols`,
+    * `rn` and the trailing `arr` of `v` (partial windows included).
+    */
+  private def trailingSql(cols: String, v: String, w: Int): String =
+    s"""SELECT $cols,
+               row_number() OVER win AS rn,
+               array_agg($v) OVER (win ROWS BETWEEN ${w - 1}
+                 PRECEDING AND CURRENT ROW) AS arr
+        FROM events
+        WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)"""
+
+  /** [[trailing]] over the micro-fixed value ([[Micro]]) in DuckDB:
+    * CTEs `e` (with v6) and `win` (event_type, event_id, rn, arr).
+    */
+  private def trailingMicroSql(w: Int): String =
+    s"""e AS (SELECT event_type, event_id, ts,
+                   ${Micro.sql("value")} AS v6 FROM events),
+      win AS (SELECT event_type, event_id,
+                row_number() OVER w AS rn,
+                array_agg(v6) OVER (w ROWS BETWEEN ${w - 1} PRECEDING
+                  AND CURRENT ROW) AS arr
+              FROM e
+              WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id))"""
+
+  /** Hourly series: each event_type's hour buckets (hour_id = epoch
+    * seconds) with `w`, the HALF_UP integer mean of the micro-fixed
+    * values — the input of the a50/a51 hourly decompositions.
+    */
+  private def hourlyMicro(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("tsh"))
+      .agg(count(lit(1)).as("cnt"), sum(Micro.of("value")).as("s6"))
+      .select(col("event_type"), col("tsh").cast("long").as("hour_id"),
+        expr("(s6 + cnt div 2) div cnt").as("w"))
+
+  /** [[hourlyMicro]]'s DuckDB twin: CTE `hourly`. */
+  private def hourlyMicroSql: String =
+    s"""hourly AS (
+        SELECT event_type,
+               CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT)
+                 AS hour_id,
+               (sum(${Micro.sql("value")})
+                 + count(*) // 2) // count(*) AS w
+        FROM events GROUP BY 1, 2)"""
+
   /** DuckDB SQL computing the same prob columns; kept as one CTE chain
     * shared by all deterministic anomaly oracles. `src` is the source
     * relation — `events` for the raw-series oracles, a derived-series
@@ -110,9 +182,9 @@ object Anomaly {
       FROM diffs
     ), micro AS (
       SELECT *,
-        CAST(round(prob_magnitude * 1e6) AS BIGINT) AS pm6,
-        CAST(round(prob_fence * 1e6) AS BIGINT) AS pf6,
-        CAST(round(prob_cdf * 1e6) AS BIGINT) AS pc6,
+        ${Micro.sql("prob_magnitude")} AS pm6,
+        ${Micro.sql("prob_fence")} AS pf6,
+        ${Micro.sql("prob_cdf")} AS pc6,
         (CASE WHEN round(prob_magnitude * 1e6) > 800000 THEN 10 ELSE 1 END) AS wm,
         (CASE WHEN round(prob_fence * 1e6) > 800000 THEN 10 ELSE 1 END) AS wf
       FROM probs
@@ -415,7 +487,7 @@ object Anomaly {
       )
       SELECT a.event_type, c.c_mktsegment,
              count(*) AS n_anomalies,
-             floor((2*sum(CAST(round(a.prob_ensemble * 1e6) AS BIGINT)) + count(*))
+             floor((2*sum(${Micro.sql("a.prob_ensemble")}) + count(*))
                    / (2.0*count(*))) / 1e6 AS avg_prob
       FROM anomalous a JOIN customer c ON a.user_id = c.c_custkey
       GROUP BY a.event_type, c.c_mktsegment""")),
@@ -461,13 +533,8 @@ object Anomaly {
     Entry("a09_anomaly_rank_stats", (s, dir) => {
       val a = spec.activeSize // 2
       val w = spec.windowSize // 10
-      val wBase = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-      val frame = wBase.rowsBetween(-(w - 1), 0)
       Tables.events(s, dir)
-        .withColumn("rn", row_number().over(wBase))
-        .withColumn("arr", collect_list(col("value")).over(frame))
-        .filter(col("rn") >= w)
+        .transform(trailing(_, "value", w))
         .withColumn("act", expr(s"slice(arr, ${w - a + 1}, $a)"))
         // zero-divisor guard: ANSI Spark ERRORS on x/0 (sf0.1 has zero
         // values — sf0.01 does not, so the driver gate alone would
@@ -498,12 +565,7 @@ object Anomaly {
             .as("active_reldiff_rank_sum"))
     }, Some(s"""
       WITH base AS (
-        SELECT event_type, event_id,
-               row_number() OVER win AS rn,
-               array_agg(value) OVER (win ROWS BETWEEN ${spec.windowSize - 1}
-                 PRECEDING AND CURRENT ROW) AS arr
-        FROM events
-        WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)
+        ${trailingSql("event_type, event_id", "value", spec.windowSize)}
       ), full_w AS (
         SELECT event_type, event_id, arr,
                arr[${spec.windowSize - spec.activeSize + 1}:${spec.windowSize}] AS act,
@@ -538,13 +600,8 @@ object Anomaly {
       val n1 = w - a // reference window (8)
       val n2 = a // active window (2)
       val L = KsGrid.lcm(n1, n2) // 8
-      val wBase = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-      val frame = wBase.rowsBetween(-(w - 1), 0)
       Tables.events(s, dir)
-        .withColumn("rn", row_number().over(wBase))
-        .withColumn("arr", collect_list(col("value")).over(frame))
-        .filter(col("rn") >= w)
+        .transform(trailing(_, "value", w))
         // native kernel — same cumulative-fold grid (each point =
         // previous + step, bit-identical to the reference kernel and
         // the oracle's list_reduce) and the same counts, in one loop
@@ -564,12 +621,7 @@ object Anomaly {
       val mRef = L / n1
       s"""
       WITH base AS (
-        SELECT event_type, event_id,
-               row_number() OVER win AS rn,
-               array_agg(value) OVER (win ROWS BETWEEN ${w - 1}
-                 PRECEDING AND CURRENT ROW) AS arr
-        FROM events
-        WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)
+        ${trailingSql("event_type, event_id", "value", w)}
       ), full_w AS (
         SELECT event_type, event_id, arr,
                list_min(arr) AS lo,
@@ -628,8 +680,7 @@ object Anomaly {
         upperBound = spec.upperBound, lowerBound = spec.lowerBound,
         sensitivity = spec.sensitivity,
         methods = Seq("magnitude", "fence", "cdf"))
-      val wBase = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
+      val wBase = seriesOrder
       val base = Tables.events(s, dir)
         .withColumn("rn", row_number().over(wBase))
       val probs = col("anomaly_probs")
@@ -710,7 +761,7 @@ object Anomaly {
     Entry("a14_moment_drift", (s, dir) => {
       Tables.events(s, dir)
         .select(col("event_type"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .groupBy("event_type")
         .agg(count(lit(1)).cast("double").as("n"),
           sum(col("v6").cast("decimal(38,0)")).cast("double").as("s1"),
@@ -729,9 +780,9 @@ object Anomaly {
           "round(((ex3 - ((3.0 * m1) * ex2)) + ((2.0 * (m1 * m1)) * m1))" +
             " / ((ex2 - (m1 * m1)) * sqrt(ex2 - (m1 * m1))), 6)" +
             " AS skew_v")
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       sums AS (SELECT event_type,
                  CAST(count(*) AS DOUBLE) AS n,
                  CAST(sum(CAST(v6 AS HUGEINT)) AS DOUBLE) AS s1,
@@ -765,17 +816,10 @@ object Anomaly {
           .toPlainString)
       val norm = new java.math.BigDecimal(2.0 - math.pow(2.0, -15.0))
         .toPlainString
-      val frame = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-(w - 1), 0)
-      val wRn = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
-        .withColumn("rn", row_number().over(wRn))
-        .withColumn("arr", collect_list(col("v6")).over(frame))
-        .filter(col("rn") >= w)
+          Micro.of("value").as("v6"))
+        .transform(trailing(_, "v6", w))
         .select(col("event_type"), col("event_id"),
           expr(s"round(aggregate(zip_with(arr, " +
             s"array(${weights.mkString("D, ")}D), (x, y) -> x * y), 0D, " +
@@ -791,7 +835,7 @@ object Anomaly {
       WITH base AS (
         SELECT event_type, event_id,
                row_number() OVER win AS rn,
-               array_agg(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               array_agg(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW) AS arr
         FROM events
         WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id))
@@ -825,7 +869,7 @@ object Anomaly {
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
           hour(col("ts")).cast("long").as("hod"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .withColumn("n_prior", count(lit(1)).over(wB))
         .withColumn("s_prior", sum("v6").over(wB))
         .select(col("event_type"), col("event_id"), col("hod"),
@@ -833,10 +877,10 @@ object Anomaly {
           ((col("v6") -
             (col("s_prior").cast("double") / col("n_prior").cast("double")))
             / lit(1e6)).as("resid_v"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, event_id, ts,
                    CAST(hour(ts) AS BIGINT) AS hod,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       t AS (SELECT event_type, event_id, hod, v6,
               count(*) OVER w AS n_prior,
               CAST(sum(v6) OVER w AS BIGINT) AS s_prior
@@ -864,17 +908,10 @@ object Anomaly {
     // integer addition is order-exact.
     Entry("a17_cusum_shift", (s, dir) => {
       val w = 20
-      val frame = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-(w - 1), 0)
-      val wRn = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
-        .withColumn("rn", row_number().over(wRn))
-        .withColumn("arr", collect_list(col("v6")).over(frame))
-        .filter(col("rn") >= w)
+          Micro.of("value").as("v6"))
+        .transform(trailing(_, "v6", w))
         // one-pass kernel: the interpreted aggregate/array_append fold
         // allocated a fresh boxed prefix array per step (O(w²) copies
         // per row); same exact int64 statistic (see CusumMaxAbs)
@@ -882,11 +919,11 @@ object Anomaly {
           .cusum_max_abs(col("arr")))
         .select(col("event_type"), col("event_id"), col("cusum_num"),
           round(col("cusum_num") / lit(20000000.0), 6).as("cusum_v"))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
         SELECT event_type, event_id,
                row_number() OVER win AS rn,
-               array_agg(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               array_agg(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS arr
         FROM events
         WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
@@ -917,7 +954,7 @@ object Anomaly {
       val hourly = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "view"))
         .select(col("event_type"), date_trunc("hour", col("ts")).as("hr"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .groupBy("event_type", "hr").agg(sum("v6").as("s6"))
       val j = hourly.filter(col("event_type") === "click")
         .select(col("hr"), col("s6").as("x6"))
@@ -927,7 +964,6 @@ object Anomaly {
       val wp = org.apache.spark.sql.expressions.Window
         .partitionBy("pair").orderBy("hr")
       val wf = wp.rowsBetween(-(wdw - 1), 0)
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       j.withColumn("rn", row_number().over(wp))
         .withColumn("sx", sum(dec(col("x6"))).over(wf))
         .withColumn("sy", sum(dec(col("y6"))).over(wf))
@@ -942,10 +978,10 @@ object Anomaly {
               .cast("double")) *
               sqrt((lit(wdw) * col("syy") - col("sy") * col("sy"))
                 .cast("double"))), 6).as("corr_24h"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type,
                    CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hr,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6
+                   ${Micro.sql("value")} AS v6
                  FROM events WHERE event_type IN ('click', 'view')),
       h AS (SELECT event_type, hr, CAST(sum(v6) AS BIGINT) AS s6
             FROM e GROUP BY 1, 2),
@@ -978,15 +1014,10 @@ object Anomaly {
     // all). O(w log w) per row inside codegen; one series-key shuffle.
     Entry("a19_rolling_median", (s, dir) => {
       val w = 25
-      val wRn = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val frame = wRn.rowsBetween(-(w - 1), 0)
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
           col("value"))
-        .withColumn("rn", row_number().over(wRn))
-        .withColumn("arr", collect_list(col("value")).over(frame))
-        .filter(col("rn") >= w)
+        .transform(trailing(_, "value", w))
         // kernel sort-pick: array_sort's comparator is an interpreted
         // lambda per COMPARISON, and the expression appeared twice
         // (two sorts per row); RobustWindowStats picks the identical
@@ -997,14 +1028,9 @@ object Anomaly {
         .select(col("event_type"), col("event_id"),
           col("rs.med").as("median_v"),
           round(col("value") - col("rs.med"), 6).as("spike_v"))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
-        SELECT event_type, event_id, value,
-               row_number() OVER win AS rn,
-               array_agg(value) OVER (win ROWS BETWEEN 24
-                 PRECEDING AND CURRENT ROW) AS arr
-        FROM events
-        WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id))
+        ${trailingSql("event_type, event_id, value", "value", 25)})
       SELECT event_type, event_id,
              list_sort(arr)[13] AS median_v,
              round(value - list_sort(arr)[13], 6) AS spike_v
@@ -1028,15 +1054,10 @@ object Anomaly {
     Entry("a20_mad_zscore", (s, dir) => {
       val w = 25
       val mid = (w + 1) / 2
-      val wRn = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val frame = wRn.rowsBetween(-(w - 1), 0)
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
           col("value"))
-        .withColumn("rn", row_number().over(wRn))
-        .withColumn("arr", collect_list(col("value")).over(frame))
-        .filter(col("rn") >= w)
+        .transform(trailing(_, "value", w))
         // fused med+mad kernel pass (the scorecardFlags rule; same
         // sort-pick bit-parity)
         .withColumn("rs", graft.functions.SeriesKernelFunctions
@@ -1045,14 +1066,9 @@ object Anomaly {
           col("rs.mad").as("mad_v"),
           ((lit(0.6745) * (col("value") - col("rs.med"))) / col("rs.mad"))
             .as("robust_z"))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
-        SELECT event_type, event_id, value,
-               row_number() OVER win AS rn,
-               array_agg(value) OVER (win ROWS BETWEEN 24
-                 PRECEDING AND CURRENT ROW) AS arr
-        FROM events
-        WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
+        ${trailingSql("event_type, event_id, value", "value", 25)}),
       m AS (SELECT event_type, event_id, value, arr,
               list_sort(arr)[13] AS med
             FROM base WHERE rn >= 25),
@@ -1078,15 +1094,10 @@ object Anomaly {
     // per row inside codegen.
     Entry("a21_iqr_fence", (s, dir) => {
       val w = 25
-      val wRn = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val frame = wRn.rowsBetween(-(w - 1), 0)
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
           col("value"))
-        .withColumn("rn", row_number().over(wRn))
-        .withColumn("arr", collect_list(col("value")).over(frame))
-        .filter(col("rn") >= w)
+        .transform(trailing(_, "value", w))
         // quartile sort-picks via the fused kernel, AFTER the warm-up
         // filter (the old form sorted every pre-window row too)
         .withColumn("rs", graft.functions.SeriesKernelFunctions
@@ -1127,13 +1138,11 @@ object Anomaly {
     // integer predicate (exact on both engines, no NaN compare).
     Entry("a22_autocorr", (s, dir) => {
       val m = 9
-      val wS = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
+      val wS = seriesOrder
       val wf = wS.rowsBetween(-(m - 1), 0)
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("x6"))
+          Micro.of("value").as("x6"))
         .withColumn("l6", lag(col("x6"), 1).over(wS))
         .withColumn("rn", row_number().over(wS))
         .withColumn("sx", sum(dec(col("l6"))).over(wf))
@@ -1151,10 +1160,10 @@ object Anomaly {
               .cast("double")) *
               sqrt((lit(m) * col("syy") - col("sy") * col("sy"))
                 .cast("double"))), 6).as("autocorr_lag1"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, event_id, ts,
-                   CAST(round(value * 1e6) AS BIGINT) AS x6,
-                   lag(CAST(round(value * 1e6) AS BIGINT)) OVER win AS l6,
+                   ${Micro.sql("value")} AS x6,
+                   lag(${Micro.sql("value")}) OVER win AS l6,
                    row_number() OVER win AS rn
                  FROM events
                  WINDOW win AS (PARTITION BY event_type
@@ -1191,15 +1200,13 @@ object Anomaly {
     // predicate. Scale shape: one series-key shuffle shared by all
     // four window sums — identical plan skeleton to a22.
     Entry("a23_varratio", (s, dir) => {
-      val wS = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
+      val wS = seriesOrder
       val wA = wS.rowsBetween(-1, 0)
       val wR = wS.rowsBetween(-9, -2)
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
           col("value"),
-          expr("cast(round(value * 1e6) as bigint)").as("x6"))
+          Micro.of("value").as("x6"))
         .withColumn("rn", row_number().over(wS))
         .withColumn("sa", sum(dec(col("x6"))).over(wA))
         .withColumn("saa", sum(dec(col("x6")) * col("x6")).over(wA))
@@ -1218,9 +1225,9 @@ object Anomaly {
         .select(col("event_type"), col("event_id"), col("value"),
           col("vol_ratio"),
           (col("vol_ratio") > 4.0).as("is_vol_spike"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, event_id, ts, value,
-                   CAST(round(value * 1e6) AS BIGINT) AS x6,
+                   ${Micro.sql("value")} AS x6,
                    row_number() OVER win AS rn
                  FROM events
                  WINDOW win AS (PARTITION BY event_type
@@ -1264,13 +1271,12 @@ object Anomaly {
     Entry("a24_holt_resid", (s, dir) => {
       val h = HoltHorizon
       val cs = holtCoefs.map(_.toPlainString)
-      val wS = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
+      val wS = seriesOrder
       val frame = wS.rowsBetween(-h, -1)
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
           col("value"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .withColumn("rn", row_number().over(wS))
         .withColumn("arr", collect_list(col("v6")).over(frame))
         .filter(col("rn") >= h + 1)
@@ -1292,7 +1298,7 @@ object Anomaly {
       WITH base AS (
         SELECT event_type, event_id, value,
                row_number() OVER win AS rn,
-               array_agg(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               array_agg(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN $h PRECEDING AND 1 PRECEDING) AS arr
         FROM events
         WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
@@ -1322,15 +1328,11 @@ object Anomaly {
     // O(w) per row.
     Entry("a25_grubbs", (s, dir) => {
       val w = 20
-      val wS = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val frame = wS.rowsBetween(-(w - 1), 0)
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
+      val frame = trailingFrame(w)
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
-        .withColumn("rn", row_number().over(wS))
-        .withColumn("arr", collect_list(col("v6")).over(frame))
+          Micro.of("value").as("v6"))
+        .transform(withTrailing(_, "v6", w))
         .withColumn("sx", sum(col("v6")).over(frame))
         .withColumn("sxx", sum(dec(col("v6")) * col("v6")).over(frame))
         .filter(col("rn") >= w)
@@ -1343,17 +1345,17 @@ object Anomaly {
             sqrt(col("varnum").cast("double") / lit((w * (w - 1)).toDouble)))
             .as("grubbs_g"))
         .withColumn("is_anom", col("grubbs_g") > lit(2.708))
-    }, Some("""
+    }, Some(s"""
       WITH base AS (
         SELECT event_type, event_id,
                row_number() OVER win AS rn,
-               array_agg(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               array_agg(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS arr,
-               CAST(sum(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               CAST(sum(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
                  AS BIGINT) AS sx,
-               sum(CAST(CAST(round(value * 1e6) AS BIGINT) AS HUGEINT)
-                   * CAST(round(value * 1e6) AS BIGINT)) OVER (
+               sum(CAST(${Micro.sql("value")} AS HUGEINT)
+                   * ${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS sxx
         FROM events
         WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
@@ -1385,13 +1387,12 @@ object Anomaly {
     // stacked unbounded-preceding windows over the same sort order
     // (Spark runs them in a single WindowExec).
     Entry("a26_page_hinkley", (s, dir) => {
-      val wS = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
+      val wS = seriesOrder
       val cum = wS.rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .withColumn("rn", row_number().over(wS))
         .withColumn("sp", sum(col("v6")).over(cum))
         // rn*v6 in DECIMAL: the bigint product scales with series
@@ -1405,9 +1406,9 @@ object Anomaly {
         .select(col("event_type"), col("event_id"),
           ((col("mt") - col("mmin")).cast("double") / lit(1e6)).as("ph_v"))
         .withColumn("is_drift", col("ph_v") > lit(5.0))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, event_id, ts,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       p AS (SELECT event_type, event_id, ts, v6,
               row_number() OVER win AS rn,
               CAST(sum(v6) OVER (win ROWS BETWEEN UNBOUNDED PRECEDING
@@ -1457,7 +1458,7 @@ object Anomaly {
       }.mkString(" + ")
       Tables.events(s, dir)
         .select(col("event_type"), expr(
-          "cast(substring(cast(cast(round(value * 1e6) as bigint) " +
+          s"cast(substring(cast(${Micro.sql("value")} " +
             "as string), 1, 1) as int)").as("digit"))
         .groupBy("event_type")
         .agg(aggs.head, aggs.tail: _*)
@@ -1479,7 +1480,7 @@ object Anomaly {
       }.mkString(" + ")
       s"""
       WITH v AS (SELECT event_type,
-                   CAST(substr(CAST(CAST(round(value * 1e6) AS BIGINT)
+                   CAST(substr(CAST(${Micro.sql("value")}
                      AS VARCHAR), 1, 1) AS INT) AS digit
                  FROM events),
       c AS (SELECT event_type, count(*) AS n, $counts
@@ -1505,8 +1506,7 @@ object Anomaly {
     Entry("a28_runs_test", (s, dir) => {
       val wV = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type").orderBy(col("value"), col("event_id"))
-      val wT = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
+      val wT = seriesOrder
       val ev = Tables.events(s, dir)
       val meds = ev
         .withColumn("rnv", row_number().over(wV))
@@ -1596,15 +1596,10 @@ object Anomaly {
     Entry("a29_mann_kendall", (s, dir) => {
       val w = MkWindow
       val varMax = w.toLong * (w - 1) * (2 * w + 5)
-      val wT = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
-        .withColumn("rn", row_number().over(wT))
-        .withColumn("arr", collect_list(col("v6"))
-          .over(wT.rowsBetween(-(w - 1), 0)))
-        .filter(col("rn") >= w)
+          Micro.of("value").as("v6"))
+        .transform(trailing(_, "v6", w))
         // native kernel (one primitive-array pass) — the interpreted
         // nested-aggregate lambda form of the same integer arithmetic
         // cost ~1 ms/row and dominated the entry's wall time
@@ -1625,14 +1620,7 @@ object Anomaly {
       val w = MkWindow
       val varMax = w.toLong * (w - 1) * (2 * w + 5)
       s"""
-      WITH e AS (SELECT event_type, event_id, ts,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
-      win AS (SELECT event_type, event_id,
-                row_number() OVER w AS rn,
-                array_agg(v6) OVER (w ROWS BETWEEN ${w - 1} PRECEDING
-                  AND CURRENT ROW) AS arr
-              FROM e
-              WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)),
+      WITH ${trailingMicroSql(w)},
       st AS (SELECT event_type, event_id,
                CAST(list_sum(list_transform(range(1, $w), i ->
                  list_sum(list_transform(range(i + 1, ${w + 1}), j ->
@@ -1675,15 +1663,10 @@ object Anomaly {
       val w = spec.windowSize // 10 → 45 pairs, median = 23rd (1-based)
       val nPairs = w * (w - 1) / 2
       val midIdx = (nPairs + 1) / 2
-      val wT = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
-        .withColumn("rn", row_number().over(wT))
-        .withColumn("arr", collect_list(col("v6"))
-          .over(wT.rowsBetween(-(w - 1), 0)))
-        .filter(col("rn") >= w)
+          Micro.of("value").as("v6"))
+        .transform(trailing(_, "v6", w))
         // native kernel — same slope multiset, sort, and midIdx pick as
         // the flatten/transform/array_sort lambda pipeline it replaces,
         // without materializing a 45-element array per row interpreted
@@ -1697,14 +1680,7 @@ object Anomaly {
       val nPairs = w * (w - 1) / 2
       val midIdx = (nPairs + 1) / 2
       s"""
-      WITH e AS (SELECT event_type, event_id, ts,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
-      win AS (SELECT event_type, event_id,
-                row_number() OVER w AS rn,
-                array_agg(v6) OVER (w ROWS BETWEEN ${w - 1} PRECEDING
-                  AND CURRENT ROW) AS arr
-              FROM e
-              WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)),
+      WITH ${trailingMicroSql(w)},
       sl AS (SELECT event_type, event_id,
                flatten(list_transform(range(1, $w), i ->
                  list_transform(range(i + 1, ${w + 1}), j ->
@@ -1747,7 +1723,7 @@ object Anomaly {
       }
       Tables.events(s, dir)
         .select(col("event_type"), hour(col("ts")).cast("long").as("hod"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sumK(1, Cos6, "sc1"), sumK(1, Sin6, "ss1"),
@@ -1763,7 +1739,7 @@ object Anomaly {
             AS amp${24 / k}h"""
       s"""
       WITH e AS (SELECT event_type, CAST(hour(ts) AS BIGINT) AS hod,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       agg AS (SELECT event_type, count(*) AS n,
                 ${sumK(1, Cos6, "sc1")}, ${sumK(1, Sin6, "ss1")},
                 ${sumK(2, Cos6, "sc2")}, ${sumK(2, Sin6, "ss2")},
@@ -1787,7 +1763,7 @@ object Anomaly {
     Entry("a32_seasonal_strength", (s, dir) => {
       Tables.events(s, dir)
         .select(col("event_type"), hour(col("ts")).cast("long").as("hod"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .groupBy("event_type", "hod")
         .agg(count(lit(1)).as("nh"),
           sum(col("v6")).as("sh"),
@@ -1811,9 +1787,9 @@ object Anomaly {
               (col("ss2").cast("double") -
                 (col("stot").cast("double") * col("stot").cast("double"))
                   / col("n")))), 6).as("seasonal_strength"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, CAST(hour(ts) AS BIGINT) AS hod,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       byhod AS (SELECT event_type, hod, count(*) AS nh,
                   CAST(sum(v6) AS BIGINT) AS sh,
                   sum(CAST(v6 AS HUGEINT) * v6) AS ssh
@@ -1851,11 +1827,10 @@ object Anomaly {
     // predicate. The argmax window orders by (corr DESC, |lag|, lag) —
     // total, engine-independent.
     Entry("a33_leadlag", (s, dir) => {
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       val hs = Tables.events(s, dir)
         .select(col("event_type"),
           date_trunc("hour", col("ts")).cast("long").as("hsec"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .groupBy("event_type", "hsec").agg(sum("v6").as("s6"))
       val x = hs.toDF("ta", "hsx", "x6")
         .withColumn("lag", explode(sequence(lit(-3L), lit(3L))))
@@ -1883,10 +1858,10 @@ object Anomaly {
         .select(concat(col("ta"), lit("~"), col("tb")).as("pair"),
           col("lag"), col("n").as("n_overlap"), col("corr"),
           (col("rk") === 1).as("is_best"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type,
                    CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hsec,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       h AS (SELECT event_type, hsec, CAST(sum(v6) AS BIGINT) AS s6
             FROM e GROUP BY 1, 2),
       x AS (SELECT event_type AS ta, hsec AS hsx, s6 AS x6, l.lag
@@ -1934,14 +1909,12 @@ object Anomaly {
     // then (series, m, block) and (series, m) aggregates that ride it —
     // block slicing by row index needs no resampling join.
     Entry("a34_hurst", (s, dir) => {
-      val wRn = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
+      val wRn = seriesOrder
       val xs = VtScales.map(m => math.round(1e6 * math.log(m.toDouble)))
       val (sx, sxx) = (xs.sum, xs.map(x => x * x).sum)
       val pts = Tables.events(s, dir)
         .select(col("event_type"), col("ts"), col("event_id"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .withColumn("rn", row_number().over(wRn))
         .withColumn("m", explode(array(VtScales.map(lit): _*)))
         .withColumn("blk", expr("(rn - 1) div m"))
@@ -1975,7 +1948,7 @@ object Anomaly {
         s"WHEN m = $m THEN $x" }.mkString(" ")
       s"""
       WITH e AS (SELECT event_type, ts, event_id,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       rn AS (SELECT event_type, v6, row_number() OVER (
                PARTITION BY event_type ORDER BY ts, event_id) AS rn
              FROM e),
@@ -2018,7 +1991,6 @@ object Anomaly {
     Entry("a35_interarrival", (s, dir) => {
       val wRn = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type").orderBy(col("tus"), col("event_id"))
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"),
           expr("unix_micros(ts)").as("tus"))
@@ -2068,92 +2040,33 @@ object Anomaly {
     // rows where any round's remainder is constant (varnum=0) are
     // excluded, as in a25.
     Entry("a36_esd", (s, dir) => {
-      val w = EsdWindow
-      val k = EsdRounds
-      val lam = EsdLambda
-      val wS = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val frame = wS.rowsBetween(-(w - 1), 0)
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-      // The k rounds run as ONE native expression (EsdRounds — the
-      // tight-loop twin of esdFoldSql, which stays as the
-      // SQL-expressible reference; EsdProps pins them bit-identical).
-      // The SQL fold was semantically right but interpretively ~95 us/
-      // row — 20 s/eval at 1M rows on a #series-parallel window stage;
-      // the native loop is sub-us, so no materialization barrier or
-      // extra exchange is needed: one series-key shuffle total.
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
-        .withColumn("rn", row_number().over(wS))
-        .withColumn("arr0", collect_list(col("v6")).over(frame))
-        .withColumn("sx0", sum(col("v6")).over(frame))
-        .withColumn("sxx0", sum(dec(col("v6")) * col("v6")).over(frame))
-        .filter(col("rn") >= w)
-        .withColumn("esd", graft.functions.EsdFunctions.esd_rounds(
-          col("arr0"), col("sx0"), col("sxx0"), w, k))
-        .filter(col("esd.vnz"))
-        .select(col("event_type"), col("event_id"),
-          col("esd.r1").as("r1"), col("esd.r2").as("r2"),
-          col("esd.r3").as("r3"),
-          when(col("esd.r3") > lam(2), 3L).when(col("esd.r2") > lam(1), 2L)
-            .when(col("esd.r1") > lam(0), 1L).otherwise(0L).as("n_anom"))
+          Micro.of("value").as("v6"))
+        .transform(esdRounds(_, "v6"))
+        .select(Seq(col("event_type"), col("event_id")) ++ esdCols: _*)
     }, Some {
       val w = EsdWindow
       val k = EsdRounds
-      val lam = EsdLambda
-      val rounds = (1 to k).map { r =>
-        val p = r - 1
-        val n = w - p
-        val next =
-          if (r < k) s""",
-          f$r AS (SELECT event_type, event_id,
-                    list_concat(arr$p[1:idx$p - 1], arr$p[idx$p + 1:$n])
-                      AS arr$r,
-                    sx$p - arr$p[idx$p] AS sx$r,
-                    sxx$p - CAST(arr$p[idx$p] AS HUGEINT) * arr$p[idx$p]
-                      AS sxx$r,
-                    ${(1 to r).map(j => s"r$j").mkString(", ")}
-                  FROM g$p)"""
-          else ""
-        s""",
-          g$p AS (SELECT *,
-                    CAST(maxdev$p AS DOUBLE) / $n.0
-                      / sqrt(CAST(varnum$p AS DOUBLE) / ${n * (n - 1)}.0)
-                      AS r$r
-                  FROM (SELECT *,
-                    $n * sxx$p - CAST(sx$p AS HUGEINT) * sx$p AS varnum$p,
-                    list_max(list_transform(arr$p,
-                      x -> abs($n * x - sx$p))) AS maxdev$p,
-                    list_filter(range(1, ${n + 1}),
-                      i -> abs($n * arr$p[i] - sx$p) =
-                        list_max(list_transform(arr$p,
-                          x -> abs($n * x - sx$p))))[1] AS idx$p
-                  FROM f$p)
-                  WHERE varnum$p <> 0)$next"""
-      }.mkString("")
       s"""
       WITH base AS (
         SELECT event_type, event_id,
                row_number() OVER win AS rn,
-               array_agg(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               array_agg(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW)
                  AS arr0,
-               CAST(sum(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               CAST(sum(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW)
                  AS BIGINT) AS sx0,
-               sum(CAST(CAST(round(value * 1e6) AS BIGINT) AS HUGEINT)
-                   * CAST(round(value * 1e6) AS BIGINT)) OVER (
+               sum(CAST(${Micro.sql("value")} AS HUGEINT)
+                   * ${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW)
                  AS sxx0
         FROM events
         WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
-      f0 AS (SELECT * FROM base WHERE rn >= $w)$rounds
+      f0 AS (SELECT * FROM base WHERE rn >= $w)${esdRoundsSql("")}
       SELECT event_type, event_id, r1, r2, r3,
-             CASE WHEN r3 > ${lam(2)} THEN 3
-                  WHEN r2 > ${lam(1)} THEN 2
-                  WHEN r1 > ${lam(0)} THEN 1
-                  ELSE 0 END::BIGINT AS n_anom
+             $esdAnomSql
       FROM g${k - 1}"""
     }),
 
@@ -2180,6 +2093,89 @@ object Anomaly {
     ensembleAblationEntry,
     gateTunerEntry
   )
+
+  /** The ESD rounds over the trailing [[EsdWindow]] of column `v`:
+    * the window array `arr0` with its exact sums `sx0`/`sxx0` (128-bit
+    * squares), the k rounds as ONE native expression `esd`
+    * ([[graft.functions.EsdFunctions]], the tight-loop twin of
+    * esdFoldSql, which stays as the SQL-expressible reference; EsdProps
+    * pins them bit-identical), full windows with a non-constant
+    * remainder only. The SQL fold was semantically right but
+    * interpretively ~95 us/row; the native loop is sub-us, so no
+    * materialization barrier or extra exchange is needed: one
+    * series-key shuffle total.
+    */
+  private def esdRounds(df: DataFrame, v: String): DataFrame = {
+    val w = EsdWindow
+    val frame = trailingFrame(w)
+    df.transform(withTrailing(_, v, w, arr = "arr0"))
+      .withColumn("sx0", sum(col(v)).over(frame))
+      .withColumn("sxx0", sum(dec(col(v)) * col(v)).over(frame))
+      .filter(col("rn") >= w)
+      .withColumn("esd", graft.functions.EsdFunctions.esd_rounds(
+        col("arr0"), col("sx0"), col("sxx0"), w, EsdRounds))
+      .filter(col("esd.vnz"))
+  }
+
+  /** [[esdRounds]]' statistics R1..R3 and n_anom, the largest r whose
+    * R_r exceeds its critical value [[EsdLambda]].
+    */
+  private def esdCols: Seq[Column] = {
+    val lam = EsdLambda
+    Seq(col("esd.r1").as("r1"), col("esd.r2").as("r2"),
+      col("esd.r3").as("r3"),
+      when(col("esd.r3") > lam(2), 3L).when(col("esd.r2") > lam(1), 2L)
+        .when(col("esd.r1") > lam(0), 1L).otherwise(0L).as("n_anom"))
+  }
+
+  /** [[esdRounds]]' DuckDB twin: CTEs g0, f1, g1, … after an `f0`
+    * relation with (event_type, event_id, arr0, sx0, sxx0), each round
+    * dropping the most extreme point by integer subtraction; `carry`
+    * lists extra f0 columns the rounds pass along (e.g. `" res2,"`).
+    */
+  private def esdRoundsSql(carry: String): String = {
+    val w = EsdWindow
+    val k = EsdRounds
+    (1 to k).map { r =>
+      val p = r - 1
+      val n = w - p
+      val next =
+        if (r < k) s""",
+        f$r AS (SELECT event_type, event_id,$carry
+                  list_concat(arr$p[1:idx$p - 1], arr$p[idx$p + 1:$n])
+                    AS arr$r,
+                  sx$p - arr$p[idx$p] AS sx$r,
+                  sxx$p - CAST(arr$p[idx$p] AS HUGEINT) * arr$p[idx$p]
+                    AS sxx$r,
+                  ${(1 to r).map(j => s"r$j").mkString(", ")}
+                FROM g$p)"""
+        else ""
+      s""",
+        g$p AS (SELECT *,
+                  CAST(maxdev$p AS DOUBLE) / $n.0
+                    / sqrt(CAST(varnum$p AS DOUBLE) / ${n * (n - 1)}.0)
+                    AS r$r
+                FROM (SELECT *,
+                  $n * sxx$p - CAST(sx$p AS HUGEINT) * sx$p AS varnum$p,
+                  list_max(list_transform(arr$p,
+                    x -> abs($n * x - sx$p))) AS maxdev$p,
+                  list_filter(range(1, ${n + 1}),
+                    i -> abs($n * arr$p[i] - sx$p) =
+                      list_max(list_transform(arr$p,
+                        x -> abs($n * x - sx$p))))[1] AS idx$p
+                FROM f$p)
+                WHERE varnum$p <> 0)$next"""
+    }.mkString("")
+  }
+
+  /** [[esdCols]]' n_anom in DuckDB. */
+  private def esdAnomSql: String = {
+    val lam = EsdLambda
+    s"""CASE WHEN r3 > ${lam(2)} THEN 3
+                  WHEN r2 > ${lam(1)} THEN 2
+                  WHEN r1 > ${lam(0)} THEN 1
+                  ELSE 0 END::BIGINT AS n_anom"""
+  }
 
   /** a36's generalized-ESD window, round count, and per-round critical
     * values (fixed constants embedded identically in both engines).
@@ -2282,8 +2278,7 @@ object Anomaly {
     */
   private[queries] def binsegEntry: Entry =
     Entry("a37_binseg", (s, dir) => {
-      val wOrd = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
+      val wOrd = seriesOrder
       val wRun = wOrd.rowsBetween(Long.MinValue, 0)
       val wAll = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type")
@@ -2291,10 +2286,9 @@ object Anomaly {
       // run in DECIMAL(38,0) / HUGEINT on both engines — int64 would
       // overflow for a long, large-valued series long before the
       // domain bound; g/g1/g2 stay decimal through the output
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .withColumn("t", row_number().over(wOrd).cast("long"))
         .withColumn("s", sum(col("v6")).over(wRun))
         .withColumn("n", count(lit(1)).over(wAll))
@@ -2330,9 +2324,9 @@ object Anomaly {
           col("g1").cast("double").as("g1"),
           (expr("(g1 + den div 2) div den") / 1e6).as("mean_shift"),
           col("t2l").as("t2_left"), col("t2r").as("t2_right"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, event_id, ts,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       w AS (SELECT event_type,
               CAST(row_number() OVER win AS BIGINT) AS t,
               CAST(sum(v6) OVER (win ROWS UNBOUNDED PRECEDING)
@@ -2392,12 +2386,10 @@ object Anomaly {
   private[queries] def maseEntry: Entry =
     Entry("a38_mase", (s, dir) => {
       val sLag = 24
-      val wOrd = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
+      val wOrd = seriesOrder
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .withColumn("e1", abs(col("v6") - lag(col("v6"), 1).over(wOrd)))
         .withColumn("es", abs(col("v6") - lag(col("v6"), sLag).over(wOrd)))
         .groupBy("event_type")
@@ -2414,9 +2406,9 @@ object Anomaly {
             .cast("long") / 1e6 / 1e6).as("mae_seasonal"),
           (expr("(sum_seas * n_naive * 1000000 + den div 2) div den")
             .cast("long") / 1e6).as("mase"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, event_id, ts,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       lagd AS (SELECT event_type,
                  abs(v6 - lag(v6, 1) OVER win) AS e1,
                  abs(v6 - lag(v6, 24) OVER win) AS es
@@ -2462,76 +2454,28 @@ object Anomaly {
     */
   private[queries] def sesdEntry: Entry =
     Entry("a39_seasonal_esd", (s, dir) => {
-      val w = EsdWindow
-      val k = EsdRounds
-      val wS = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val frame = wS.rowsBetween(-(w - 1), 0)
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       val base = Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("ts"),
           hour(col("ts")).cast("long").as("hod"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
       val seas = base.groupBy("event_type", "hod")
         .agg((percentile(col("v6"), lit(0.5)) * 2).cast("long").as("med2"))
-      val lam = EsdLambda
-      // Same native ESD rounds as a36 (EsdRounds) over the seasonal
-      // residuals instead of raw values.
+      // Same native ESD rounds as a36 over the seasonal residuals
+      // instead of raw values.
       base
         .join(broadcast(seas), Seq("event_type", "hod"))
         .withColumn("res2", lit(2L) * col("v6") - col("med2"))
-        .withColumn("rn", row_number().over(wS))
-        .withColumn("arr0", collect_list(col("res2")).over(frame))
-        .withColumn("sx0", sum(col("res2")).over(frame))
-        .withColumn("sxx0", sum(dec(col("res2")) * col("res2")).over(frame))
-        .filter(col("rn") >= w)
-        .withColumn("esd", graft.functions.EsdFunctions.esd_rounds(
-          col("arr0"), col("sx0"), col("sxx0"), w, k))
-        .filter(col("esd.vnz"))
-        .select(col("event_type"), col("event_id"),
-          (col("res2").cast("double") / lit(2000000.0)).as("res_v"),
-          col("esd.r1").as("r1"), col("esd.r2").as("r2"),
-          col("esd.r3").as("r3"),
-          when(col("esd.r3") > lam(2), 3L).when(col("esd.r2") > lam(1), 2L)
-            .when(col("esd.r1") > lam(0), 1L).otherwise(0L).as("n_anom"))
+        .transform(esdRounds(_, "res2"))
+        .select(Seq(col("event_type"), col("event_id"),
+          (col("res2").cast("double") / lit(2000000.0)).as("res_v")) ++
+          esdCols: _*)
     }, Some {
       val w = EsdWindow
       val k = EsdRounds
-      val lam = EsdLambda
-      val rounds = (1 to k).map { r =>
-        val p = r - 1
-        val n = w - p
-        val next =
-          if (r < k) s""",
-          f$r AS (SELECT event_type, event_id, res2,
-                    list_concat(arr$p[1:idx$p - 1], arr$p[idx$p + 1:$n])
-                      AS arr$r,
-                    sx$p - arr$p[idx$p] AS sx$r,
-                    sxx$p - CAST(arr$p[idx$p] AS HUGEINT) * arr$p[idx$p]
-                      AS sxx$r,
-                    ${(1 to r).map(j => s"r$j").mkString(", ")}
-                  FROM g$p)"""
-          else ""
-        s""",
-          g$p AS (SELECT *,
-                    CAST(maxdev$p AS DOUBLE) / $n.0
-                      / sqrt(CAST(varnum$p AS DOUBLE) / ${n * (n - 1)}.0)
-                      AS r$r
-                  FROM (SELECT *,
-                    $n * sxx$p - CAST(sx$p AS HUGEINT) * sx$p AS varnum$p,
-                    list_max(list_transform(arr$p,
-                      x -> abs($n * x - sx$p))) AS maxdev$p,
-                    list_filter(range(1, ${n + 1}),
-                      i -> abs($n * arr$p[i] - sx$p) =
-                        list_max(list_transform(arr$p,
-                          x -> abs($n * x - sx$p))))[1] AS idx$p
-                  FROM f$p)
-                  WHERE varnum$p <> 0)$next"""
-      }.mkString("")
       s"""
       WITH e AS (SELECT event_type, event_id, ts,
                    CAST(hour(ts) AS BIGINT) AS hod,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       seas AS (SELECT event_type, hod,
                  CAST(quantile_cont(v6, 0.5) * 2 AS BIGINT) AS med2
                FROM e GROUP BY event_type, hod),
@@ -2552,14 +2496,11 @@ object Anomaly {
                  AS sxx0
         FROM rsd
         WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
-      f0 AS (SELECT * FROM base WHERE rn >= $w)$rounds
+      f0 AS (SELECT * FROM base WHERE rn >= $w)${esdRoundsSql(" res2,")}
       SELECT event_type, event_id,
              CAST(res2 AS DOUBLE) / 2000000.0 AS res_v,
              r1, r2, r3,
-             CASE WHEN r3 > ${lam(2)} THEN 3
-                  WHEN r2 > ${lam(1)} THEN 2
-                  WHEN r1 > ${lam(0)} THEN 1
-                  ELSE 0 END::BIGINT AS n_anom
+             $esdAnomSql
       FROM g${k - 1}"""
     })
 
@@ -2599,7 +2540,7 @@ object Anomaly {
       val eArr = s"array(${ks.map(k => s"e$k").mkString(", ")})"
       Tables.events(s, dir)
         .select(col("event_type"), hour(col("ts")).cast("long").as("hod"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           ks.flatMap(k => Seq(sumK(k, Cos6, s"sc$k"),
@@ -2627,7 +2568,7 @@ object Anomaly {
       val eArr = s"[${ks.map(k => s"e$k").mkString(", ")}]"
       s"""
       WITH e AS (SELECT event_type, CAST(hour(ts) AS BIGINT) AS hod,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       agg AS (SELECT event_type, count(*) AS n,
                 ${ks.flatMap(k => Seq(sumK(k, Cos6, s"sc$k"),
                   sumK(k, Sin6, s"ss$k"))).mkString(",\n                ")}
@@ -2677,7 +2618,7 @@ object Anomaly {
     val hourly = Tables.events(s, dir)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("ts"))
       .agg(count(lit(1)).as("cnt"),
-        sum(expr("cast(round(value * 1e6) as bigint)")).as("s6"))
+        sum(Micro.of("value")).as("s6"))
       .select(col("event_type"), col("ts"),
         col("ts").cast("long").as("event_id"),
         (col("s6").cast("double") / col("cnt") / lit(1e6)).as("value"))
@@ -2692,13 +2633,13 @@ object Anomaly {
     * probsCteFrom("hourly", ...) by the a41/a45 oracles. lazy:
     * referenced while `entries` (declared above) constructs.
     */
-  private lazy val hourlyPre: String = """hourly AS (
+  private lazy val hourlyPre: String = s"""hourly AS (
       SELECT event_type,
              CAST(NULL AS BIGINT) AS user_id,
              date_trunc('hour', ts) AS ts,
              CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT)
                AS event_id,
-             CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE)
+             CAST(sum(${Micro.sql("value")}) AS DOUBLE)
                / count(*) / 1e6 AS value
       FROM events GROUP BY 1, 3, 4),
     """
@@ -2812,7 +2753,7 @@ object Anomaly {
     Entry("a42_sketch_quantile", (s, dir) => {
       val sketch = Tables.events(s, dir)
         .select(col("event_type"),
-          expr("cast(round(value * 1e6) as bigint)").as("micro"))
+          Micro.of("value").as("micro"))
         .withColumn("bkt", when(col("micro") <= 0L, lit(0))
           .otherwise(length(bin(col("micro")))))
         .groupBy(col("event_type"), col("bkt"))
@@ -2837,7 +2778,7 @@ object Anomaly {
         .withColumn("est", col("est_micro") / lit(1e6))
     }, Some(s"""
       WITH m AS (SELECT event_type,
-                   CAST(round(value * 1e6) AS BIGINT) AS micro
+                   ${Micro.sql("value")} AS micro
                  FROM events),
       b AS (SELECT event_type,
               CASE WHEN micro <= 0 THEN 0
@@ -2891,7 +2832,7 @@ object Anomaly {
     Entry("a43_evt_tail", (s, dir) => {
       val micro = Tables.events(s, dir)
         .select(col("event_type"),
-          expr("cast(round(value * 1e6) as bigint)").as("micro"))
+          Micro.of("value").as("micro"))
       val thr = micro.groupBy("event_type").agg(
           count(lit(1)).as("n"),
           sum(col("micro")).as("s1"),
@@ -2937,9 +2878,9 @@ object Anomaly {
             round(lit(0.5) * (col("mean_e") / lit(1e6)) * (lit(1.0) +
               col("mean_e") * col("mean_e") / col("var_e")), 6))
             .as("sigma"))
-    }, Some("""
+    }, Some(s"""
       WITH m AS (SELECT event_type,
-                   CAST(round(value * 1e6) AS BIGINT) AS micro
+                   ${Micro.sql("value")} AS micro
                  FROM events),
       t AS (SELECT event_type, count(*) AS n, sum(micro) AS s1,
                    sum(CAST(micro AS HUGEINT) * micro) AS s2
@@ -2999,7 +2940,7 @@ object Anomaly {
       val wAll = Window.partitionBy("event_type")
       val halves = Tables.events(s, dir)
         .select(col("event_type"), col("ts"), col("event_id"),
-          expr("cast(round(value * 1e6) as bigint)").as("micro"))
+          Micro.of("value").as("micro"))
         .withColumn("rn", row_number().over(wSer))
         .withColumn("n", count(lit(1)).over(wAll))
         .withColumn("half",
@@ -3029,9 +2970,9 @@ object Anomaly {
           when(col("n1") > 0 && col("n2") > 0,
             col("tv_num") / (lit(2.0) * col("n1") * col("n2"))).as("tv"),
           col("drift_bucket"), col("drift_num"))
-    }, Some("""
+    }, Some(s"""
       WITH m AS (SELECT event_type, ts, event_id,
-                   CAST(round(value * 1e6) AS BIGINT) AS micro
+                   ${Micro.sql("value")} AS micro
                  FROM events),
       r AS (SELECT event_type, micro,
               row_number() OVER (PARTITION BY event_type
@@ -3153,7 +3094,7 @@ object Anomaly {
       val daily = Tables.events(s, dir)
         .select(col("event_type"),
           date_trunc("DAY", col("ts")).cast("long").as("day_id"),
-          expr("cast(round(value * 1e6) as bigint)").as("micro"))
+          Micro.of("value").as("micro"))
         .withColumn("bkt", when(col("micro") <= 0L, lit(0))
           .otherwise(length(bin(col("micro")))))
         .groupBy(col("event_type"), col("day_id"), col("bkt"))
@@ -3203,11 +3144,11 @@ object Anomaly {
         .select(col("event_type"), col("day_id"), col("n_day"),
           (col("p95_day_micro") / lit(1e6)).as("p95_day"),
           col("n_7d"), (col("p95_7d_micro") / lit(1e6)).as("p95_7d"))
-    }, Some("""
+    }, Some(s"""
       WITH m AS (SELECT event_type,
                    CAST(floor(epoch(date_trunc('day', ts))) AS BIGINT)
                      AS day_id,
-                   CAST(round(value * 1e6) AS BIGINT) AS micro
+                   ${Micro.sql("value")} AS micro
                  FROM events),
       daily AS (SELECT event_type, day_id,
                   CASE WHEN micro <= 0 THEN 0
@@ -3359,7 +3300,7 @@ object Anomaly {
     import org.apache.spark.sql.expressions.Window
     Entry("a49_ks_two_series", (s, dir) => {
       val m = Tables.events(s, dir).select(col("event_type"),
-        expr("cast(round(value * 1e6) as bigint)").as("v"))
+        Micro.of("value").as("v"))
       val tys = m.select(col("event_type")).distinct()
       val prs = tys.toDF("ta")
         .crossJoin(tys.toDF("tb")).filter(col("ta") < col("tb"))
@@ -3396,9 +3337,9 @@ object Anomaly {
           (col("d_num") / (lit(1.0) * col("n_a") * col("n_b"))).as("d"),
           col("ks_at_micro"),
           (col("ks_at_micro") / lit(1e6)).as("ks_at"))
-    }, Some("""
+    }, Some(s"""
       WITH m AS (SELECT event_type,
-                   CAST(round(value * 1e6) AS BIGINT) AS v
+                   ${Micro.sql("value")} AS v
                  FROM events),
       tys AS (SELECT DISTINCT event_type FROM m),
       prs AS (SELECT x.event_type AS ta, y.event_type AS tb
@@ -3457,13 +3398,7 @@ object Anomaly {
     val half = 12 // trend window = 2*half+1 = 25 hours, odd
     Entry("a50_stl_decompose", (s, dir) => {
       val wSer = Window.partitionBy("event_type").orderBy("hour_id")
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("tsh"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(expr("cast(round(value * 1e6) as bigint)")).as("s6"))
-        .select(col("event_type"),
-          col("tsh").cast("long").as("hour_id"),
-          expr("(s6 + cnt div 2) div cnt").as("w"))
+      val hourly = hourlyMicro(s, dir)
       val trended = hourly
         .withColumn("rn", row_number().over(wSer))
         .withColumn("n", count(lit(1)).over(
@@ -3496,13 +3431,7 @@ object Anomaly {
           (col("s2") / lit(2e6)).as("seasonal"),
           ((lit(2L) * col("d") - col("s2")) / lit(2e6)).as("residual"))
     }, Some(s"""
-      WITH hourly AS (
-        SELECT event_type,
-               CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT)
-                 AS hour_id,
-               (sum(CAST(round(value * 1e6) AS BIGINT))
-                 + count(*) // 2) // count(*) AS w
-        FROM events GROUP BY 1, 2),
+      WITH $hourlyMicroSql,
       tr AS (SELECT event_type, hour_id, w,
                row_number() OVER win AS rn,
                count(*) OVER (PARTITION BY event_type) AS n,
@@ -3551,13 +3480,7 @@ object Anomaly {
     import org.apache.spark.sql.expressions.Window
     Entry("a51_forecast_band", (s, dir) => {
       val wSer = Window.partitionBy("event_type").orderBy("hour_id")
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("tsh"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(expr("cast(round(value * 1e6) as bigint)")).as("s6"))
-        .select(col("event_type"),
-          col("tsh").cast("long").as("hour_id"),
-          expr("(s6 + cnt div 2) div cnt").as("w"))
+      val hourly = hourlyMicro(s, dir)
       val resid = hourly
         .withColumn("fc", lag(col("w"), 24).over(wSer))
         .filter(col("fc").isNotNull)
@@ -3579,14 +3502,8 @@ object Anomaly {
           ((col("fc") + col("q95")) / lit(1e6)).as("hi"),
           (col("w") < col("fc") + col("q05") ||
             col("w") > col("fc") + col("q95")).as("flag_out"))
-    }, Some("""
-      WITH hourly AS (
-        SELECT event_type,
-               CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT)
-                 AS hour_id,
-               (sum(CAST(round(value * 1e6) AS BIGINT))
-                 + count(*) // 2) // count(*) AS w
-        FROM events GROUP BY 1, 2),
+    }, Some(s"""
+      WITH $hourlyMicroSql,
       resid AS (SELECT event_type, hour_id, w,
                   lag(w, 24) OVER (PARTITION BY event_type
                     ORDER BY hour_id) AS fc
@@ -3661,14 +3578,11 @@ object Anomaly {
     * a52/a53 profile. One ordered window pass per series, no explode.
     */
   private def mpWindows(s: SparkSession, dir: String): DataFrame = {
-    val wRn = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-    val frame = wRn.rowsBetween(-(MpW - 1), 0)
+    val frame = trailingFrame(MpW)
     Tables.events(s, dir)
       .select(col("event_type"), col("ts"), col("event_id"),
-        expr("cast(round(value * 1e6) as bigint)").as("v6"))
-      .withColumn("rn", row_number().over(wRn))
-      .withColumn("arr", collect_list(col("v6")).over(frame))
+        Micro.of("value").as("v6"))
+      .transform(withTrailing(_, "v6", MpW))
       .withColumn("sa", sum(col("v6")).over(frame))
       .filter(col("rn") >= MpW &&
         ((col("rn") - MpW) % MpStride) === 0)
@@ -3723,10 +3637,10 @@ object Anomaly {
       WITH base AS (
         SELECT event_type,
                row_number() OVER win AS rn,
-               array_agg(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               array_agg(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN ${MpW - 1} PRECEDING AND CURRENT ROW)
                  AS arr,
-               sum(CAST(round(value * 1e6) AS BIGINT)) OVER (
+               sum(${Micro.sql("value")}) OVER (
                  win ROWS BETWEEN ${MpW - 1} PRECEDING AND CURRENT ROW)
                  AS sa
         FROM events
@@ -3837,16 +3751,11 @@ object Anomaly {
     * shared by a54 and a55 so both score definitionally identical
     * flags. lazy: referenced while `entries` constructs.
     */
-  private lazy val scorecardFlagsCtes: String = """base AS (
-        SELECT event_type, event_id, ts, value,
-               row_number() OVER win AS rn,
-               array_agg(value) OVER (win ROWS BETWEEN 24 PRECEDING
-                 AND CURRENT ROW) AS arr
-        FROM events
-        WINDOW win AS (PARTITION BY event_type ORDER BY ts, event_id)),
+  private lazy val scorecardFlagsCtes: String = s"""base AS (
+        ${trailingSql("event_type, event_id, ts, value", "value", 25)}),
       u AS (SELECT event_type, event_id, ts, value,
               list_sort(arr) AS sarr, arr,
-              CAST(round(value * 1e6) AS BIGINT) AS v6
+              ${Micro.sql("value")} AS v6
             FROM base WHERE rn >= 25),
       roll AS (SELECT *, sarr[13] AS med25,
                  list_sort(list_transform(arr, x -> abs(x - sarr[13])))[13]
@@ -3890,9 +3799,6 @@ object Anomaly {
       s: SparkSession, dir: String): DataFrame = {
     val w = 25
     val mid = 13
-    val wRn = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-    val frame = wRn.rowsBetween(-(w - 1), 0)
     val wAll = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type")
     val wVal = org.apache.spark.sql.expressions.Window
@@ -3901,12 +3807,9 @@ object Anomaly {
     val wDev = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type")
       .orderBy(col("dev").desc, col("ts"), col("event_id"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     Tables.events(s, dir)
       .select(col("event_type"), col("event_id"), col("ts"), col("value"))
-      .withColumn("rn", row_number().over(wRn))
-      .withColumn("arr", collect_list(col("value")).over(frame))
-      .filter(col("rn") >= w)
+      .transform(trailing(_, "value", w))
       // one fused kernel pass instead of the interpreted array_sort +
       // transform(x -> abs(x - med)) + array_sort chain per row (the
       // r10 lambda-kernel rule; bit-identical, see RobustWindowStats)
@@ -3916,7 +3819,7 @@ object Anomaly {
       .withColumn("mad25", col("rs.mad"))
       .withColumn("q1_v", col("rs.q1"))
       .withColumn("q3_v", col("rs.q3"))
-      .withColumn("v6", expr("cast(round(value * 1e6) as bigint)"))
+      .withColumn("v6", Micro.of("value"))
       .withColumn("wv", row_number().over(wVal).cast("long"))
       .withColumn("n_u", count(lit(1)).over(wAll))
       .withColumn("gmed", max(when(
@@ -3950,6 +3853,56 @@ object Anomaly {
         col("mad_flag"), col("z_flag"), col("z_abs"), col("z_sig"))
   }
 
+  /** The detector scorecard: `df`'s (flag, is_true) rows grouped by
+    * `keys` into exact tp/fp/fn counts (after any `extra` named
+    * aggregates), with precision6/recall6/f16 — each ONE double
+    * division; precision is NULL when nothing was flagged.
+    */
+  private def scorecard(df: DataFrame, keys: Seq[String],
+      extra: (String, Column)*): DataFrame = {
+    val aggs = extra.map { case (n, c) => c.as(n) } ++ Seq(
+      sum(when(col("flag") && col("is_true"), 1L).otherwise(0L)).as("tp"),
+      sum(when(col("flag") && !col("is_true"), 1L).otherwise(0L)).as("fp"),
+      sum(when(!col("flag") && col("is_true"), 1L).otherwise(0L)).as("fn"))
+    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      .select((keys ++ extra.map(_._1) ++ Seq("tp", "fp", "fn")).map(col) ++
+        Seq(precision6, recall6, f16): _*)
+  }
+
+  private def precision6: Column =
+    when(col("tp") + col("fp") > 0,
+      round(col("tp").cast("double") /
+        (col("tp") + col("fp")).cast("double"), 6)).as("precision6")
+  private def recall6: Column =
+    round(col("tp").cast("double") /
+      (col("tp") + col("fn")).cast("double"), 6).as("recall6")
+  private def f16: Column =
+    round((lit(2L) * col("tp")).cast("double") /
+      (lit(2L) * col("tp") + col("fp") + col("fn")).cast("double"), 6)
+      .as("f16")
+
+  /** [[scorecard]]'s tp/fp/fn aggregates in DuckDB. */
+  private def confusionSql: String =
+    """CAST(sum(CASE WHEN flag AND is_true THEN 1 ELSE 0 END)
+                  AS BIGINT) AS tp,
+                CAST(sum(CASE WHEN flag AND NOT is_true THEN 1 ELSE 0 END)
+                  AS BIGINT) AS fp,
+                CAST(sum(CASE WHEN NOT flag AND is_true THEN 1 ELSE 0 END)
+                  AS BIGINT) AS fn"""
+
+  /** [[precision6]] and [[recall6]] in DuckDB. */
+  private def precisionRecallSql: String =
+    """CASE WHEN tp + fp > 0 THEN
+               round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE), 6)
+             END AS precision6,
+             round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE), 6)
+               AS recall6"""
+
+  /** [[f16]] in DuckDB. */
+  private def f1Sql: String =
+    """round(CAST(2 * tp AS DOUBLE) /
+               CAST(2 * tp + fp + fn AS DOUBLE), 6) AS f16"""
+
   private[queries] def scorecardEntry: Entry =
     Entry("a54_detector_scorecard", (s, dir) => {
       scorecardFlags(s, dir)
@@ -3960,24 +3913,7 @@ object Anomaly {
           .as("d"))
         .select(col("event_type"), col("d.detector").as("detector"),
           col("d.flag").as("flag"), col("is_true"))
-        .groupBy("event_type", "detector")
-        .agg(
-          sum(when(col("flag") && col("is_true"), 1L).otherwise(0L))
-            .as("tp"),
-          sum(when(col("flag") && !col("is_true"), 1L).otherwise(0L))
-            .as("fp"),
-          sum(when(!col("flag") && col("is_true"), 1L).otherwise(0L))
-            .as("fn"))
-        .select(col("event_type"), col("detector"), col("tp"), col("fp"),
-          col("fn"),
-          when(col("tp") + col("fp") > 0,
-            round(col("tp").cast("double") /
-              (col("tp") + col("fp")).cast("double"), 6)).as("precision6"),
-          round(col("tp").cast("double") /
-            (col("tp") + col("fn")).cast("double"), 6).as("recall6"),
-          round((lit(2L) * col("tp")).cast("double") /
-            (lit(2L) * col("tp") + col("fp") + col("fn")).cast("double"), 6)
-            .as("f16"))
+        .transform(scorecard(_, Seq("event_type", "detector")))
     }, Some(s"""
       WITH $scorecardFlagsCtes,
       stacked AS (
@@ -3988,21 +3924,11 @@ object Anomaly {
         UNION ALL
         SELECT event_type, 'zscore', z_flag, is_true FROM flags),
       agg AS (SELECT event_type, detector,
-                CAST(sum(CASE WHEN flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS tp,
-                CAST(sum(CASE WHEN flag AND NOT is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fp,
-                CAST(sum(CASE WHEN NOT flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fn
+                $confusionSql
               FROM stacked GROUP BY 1, 2)
       SELECT event_type, detector, tp, fp, fn,
-             CASE WHEN tp + fp > 0 THEN
-               round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE), 6)
-             END AS precision6,
-             round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE), 6)
-               AS recall6,
-             round(CAST(2 * tp AS DOUBLE) /
-               CAST(2 * tp + fp + fn AS DOUBLE), 6) AS f16
+             $precisionRecallSql,
+             $f1Sql
       FROM agg"""))
 
   /** a55: detector OVERLAP matrix — the ensemble-design complement of
@@ -4088,25 +4014,8 @@ object Anomaly {
           col("z_sig"),
           explode(expr(s"cast($gatesLit as array<double>)")).as("gate"))
         .withColumn("flag", col("z_abs") > col("gate") * col("z_sig"))
-        .groupBy("event_type", "gate")
-        .agg(
-          sum(when(col("flag"), 1L).otherwise(0L)).as("n_flagged"),
-          sum(when(col("flag") && col("is_true"), 1L).otherwise(0L))
-            .as("tp"),
-          sum(when(col("flag") && !col("is_true"), 1L).otherwise(0L))
-            .as("fp"),
-          sum(when(!col("flag") && col("is_true"), 1L).otherwise(0L))
-            .as("fn"))
-        .select(col("event_type"), col("gate"), col("n_flagged"),
-          col("tp"), col("fp"), col("fn"),
-          when(col("tp") + col("fp") > 0,
-            round(col("tp").cast("double") /
-              (col("tp") + col("fp")).cast("double"), 6)).as("precision6"),
-          round(col("tp").cast("double") /
-            (col("tp") + col("fn")).cast("double"), 6).as("recall6"),
-          round((lit(2L) * col("tp")).cast("double") /
-            (lit(2L) * col("tp") + col("fp") + col("fn")).cast("double"), 6)
-            .as("f16"))
+        .transform(scorecard(_, Seq("event_type", "gate"),
+          "n_flagged" -> sum(when(col("flag"), 1L).otherwise(0L))))
     }, Some(s"""
       WITH $scorecardFlagsCtes,
       swept AS (SELECT event_type, is_true,
@@ -4116,21 +4025,11 @@ object Anomaly {
       agg AS (SELECT event_type, gate,
                 CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_flagged,
-                CAST(sum(CASE WHEN flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS tp,
-                CAST(sum(CASE WHEN flag AND NOT is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fp,
-                CAST(sum(CASE WHEN NOT flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fn
+                $confusionSql
               FROM swept GROUP BY 1, 2)
       SELECT event_type, gate, n_flagged, tp, fp, fn,
-             CASE WHEN tp + fp > 0 THEN
-               round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE), 6)
-             END AS precision6,
-             round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE), 6)
-               AS recall6,
-             round(CAST(2 * tp AS DOUBLE) /
-               CAST(2 * tp + fp + fn AS DOUBLE), 6) AS f16
+             $precisionRecallSql,
+             $f1Sql
       FROM agg"""))
   }
 
@@ -4159,24 +4058,7 @@ object Anomaly {
           "  'flag', iqr_flag or mad_flag))")).as("v"))
         .select(col("event_type"), col("v.variant").as("variant"),
           col("v.flag").as("flag"), col("is_true"))
-        .groupBy("event_type", "variant")
-        .agg(
-          sum(when(col("flag") && col("is_true"), 1L).otherwise(0L))
-            .as("tp"),
-          sum(when(col("flag") && !col("is_true"), 1L).otherwise(0L))
-            .as("fp"),
-          sum(when(!col("flag") && col("is_true"), 1L).otherwise(0L))
-            .as("fn"))
-        .select(col("event_type"), col("variant"), col("tp"), col("fp"),
-          col("fn"),
-          when(col("tp") + col("fp") > 0,
-            round(col("tp").cast("double") /
-              (col("tp") + col("fp")).cast("double"), 6)).as("precision6"),
-          round(col("tp").cast("double") /
-            (col("tp") + col("fn")).cast("double"), 6).as("recall6"),
-          round((lit(2L) * col("tp")).cast("double") /
-            (lit(2L) * col("tp") + col("fp") + col("fn")).cast("double"), 6)
-            .as("f16"))
+        .transform(scorecard(_, Seq("event_type", "variant")))
     }, Some(s"""
       WITH $scorecardFlagsCtes,
       stacked AS (
@@ -4190,21 +4072,11 @@ object Anomaly {
         UNION ALL SELECT event_type, '3_no_zscore',
                (iqr_flag OR mad_flag), is_true FROM flags),
       agg AS (SELECT event_type, variant,
-                CAST(sum(CASE WHEN flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS tp,
-                CAST(sum(CASE WHEN flag AND NOT is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fp,
-                CAST(sum(CASE WHEN NOT flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fn
+                $confusionSql
               FROM stacked GROUP BY 1, 2)
       SELECT event_type, variant, tp, fp, fn,
-             CASE WHEN tp + fp > 0 THEN
-               round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE), 6)
-             END AS precision6,
-             round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE), 6)
-               AS recall6,
-             round(CAST(2 * tp AS DOUBLE) /
-               CAST(2 * tp + fp + fn AS DOUBLE), 6) AS f16
+             $precisionRecallSql,
+             $f1Sql
       FROM agg"""))
 
   /** a58: gate auto-tuner — the DECISION a56's sweep exists to feed:
@@ -4236,12 +4108,7 @@ object Anomaly {
           (col("chosen").isNull && col("gate") === 2.0))
         .select(col("event_type"),
           when(col("chosen").isNotNull, col("gate")).as("chosen_gate"),
-          col("tp"), col("fp"), col("fn"),
-          when(col("tp") + col("fp") > 0,
-            round(col("tp").cast("double") /
-              (col("tp") + col("fp")).cast("double"), 6)).as("precision6"),
-          round(col("tp").cast("double") /
-            (col("tp") + col("fn")).cast("double"), 6).as("recall6"),
+          col("tp"), col("fp"), col("fn"), precision6, recall6,
           col("chosen").isNotNull.as("budget_met"))
     }, Some(s"""
       WITH $scorecardFlagsCtes,
@@ -4251,12 +4118,7 @@ object Anomaly {
                   CAST(2.5 AS DOUBLE), CAST(3.0 AS DOUBLE),
                   CAST(3.5 AS DOUBLE), CAST(4.0 AS DOUBLE)]) t(gate)),
       agg AS (SELECT event_type, gate,
-                CAST(sum(CASE WHEN flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS tp,
-                CAST(sum(CASE WHEN flag AND NOT is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fp,
-                CAST(sum(CASE WHEN NOT flag AND is_true THEN 1 ELSE 0 END)
-                  AS BIGINT) AS fn
+                $confusionSql
               FROM swept GROUP BY 1, 2),
       ok AS (SELECT *, (10 * tp >= 8 * (tp + fp)) AS ok FROM agg),
       chosen AS (SELECT *, min(CASE WHEN ok THEN gate END)
@@ -4265,11 +4127,7 @@ object Anomaly {
       SELECT event_type,
              CASE WHEN chosen IS NOT NULL THEN gate END AS chosen_gate,
              tp, fp, fn,
-             CASE WHEN tp + fp > 0 THEN
-               round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE), 6)
-             END AS precision6,
-             round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE), 6)
-               AS recall6,
+             $precisionRecallSql,
              (chosen IS NOT NULL) AS budget_met
       FROM chosen
       WHERE gate = chosen OR (chosen IS NULL AND gate = 2.0)"""))

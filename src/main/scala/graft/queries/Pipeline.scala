@@ -55,6 +55,11 @@ object Pipeline {
                 THEN shiftleft(1L, b) ELSE 0L END))"""
   }
 
+  /** Exact wide integer arithmetic: sums and products of micro values
+    * in DECIMAL(38,0), never an int64 that could wrap.
+    */
+  private def dec(c: Column): Column = c.cast("decimal(38,0)")
+
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.table(s, dir, "documents")
 
@@ -95,6 +100,28 @@ object Pipeline {
         array_distinct(TextHashFunctions.ngram_hashes(toks, 3)).as("sharr"))
       .select(col("doc_id"), size(col("sharr")).cast("long").as("n"),
         explode(col("sharr")).as("shingle"))
+
+  /** The LSH near-dup pair edges `(doc_a, doc_b)` and their connected
+    * components `(node, label)`. Pairs are persisted: the components'
+    * first eager checkpoint reads its edge input TWICE (both arms of
+    * the symmetrize union), so uncached the whole LSH refine would run
+    * twice per cold build.
+    */
+  private def lshComponents(d: DataFrame): (DataFrame, DataFrame) = {
+    val pairs = minhashLshPairs(d).select("doc_a", "doc_b")
+      .persistTracked()
+    (pairs, Components.connectedComponents(pairs))
+  }
+
+  /** The dedup manifest: every doc with its near-dup cluster id, the
+    * min doc_id of its LSH component; docs in no pair keep their own id.
+    */
+  private def clusterManifest(d: DataFrame): DataFrame =
+    d.select(col("doc_id"))
+      .join(lshComponents(d)._2.withColumnRenamed("node", "doc_id"),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("label"), col("doc_id")).as("cluster_id"))
 
   /** p03's document-frequency cap: shingles present in more than this
     * many documents are dropped from candidate generation (and hence
@@ -335,51 +362,22 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     * fallback-allowlist 1:1 claim for the residual re-attach join).
     */
   private[graft] def p63CoarseFrame(s: SparkSession,
-      dir: String): DataFrame = {
-    val e6 = embs(s, dir).select(col("vec_id"),
-      expr("transform(emb, x -> cast(round(x * 1e6) as bigint))")
-        .as("v6"))
-    ivfSeedCents(e6, "v6", cid = "ccid", ci = "c6")
+      dir: String): DataFrame = ivfPqCorpus(s, dir)._2
+
+  private def ivfPqCorpus(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val e6 = embs(s, dir).select(col("vec_id"), Micro.vec("emb").as("v6"))
+    (e6, ivfSeedCents(e6, "v6", cid = "ccid", ci = "c6"))
   }
 
   private def ivfPqTopK(s: SparkSession, dir: String, qMod: Long,
       k: Int): DataFrame = {
-    val e6 = embs(s, dir).select(col("vec_id"),
-      expr("transform(emb, x -> cast(round(x * 1e6) as bigint))")
-        .as("v6"))
-    val coarse = ivfSeedCents(e6, "v6", cid = "ccid", ci = "c6")
-    // r15 opt (VERDICT r14 #3, guide §2.3/§2.4): the coarse assignment
-    // used to rank the e6 x centroids cross join with a
-    // Window.partitionBy(vec_id) — an Exchange of 20x corpus rows each
-    // carrying BOTH 128-long vectors plus a full Sort of them (the
-    // largest corpus-scale shuffle in the ANN serving path, linear in
-    // the corpus with a ~40 KB payload per vector). The distance math
-    // stays the all-codegen kernel over the broadcast cross join, but
-    // only the SLIM (d2, ccid) pairs flow on: the 20 scored rows of a
-    // vector are map-LOCAL by construction (the cross join generates
-    // them in place), so a partial collect_list collapses them to one
-    // row per vector BEFORE the exchange — the shuffle now moves
-    // (vec_id, v6, 20 x 16 B) per vector, ~30x fewer bytes, and the
-    // window's corpus-sized Sort disappears (sorting 20 slim structs
-    // per GROUP instead: array_sort's (d2, ccid) struct order is
-    // exactly the window's orderBy, crk = position + 1). A row-local
-    // HOF form that also dropped the exchange was measured and
-    // REJECTED: interpreting the kernel per lambda element cost more
-    // than the exchange at both sf0.1 and x10 (+82%/+72%). Centroid
-    // vectors re-attach AFTER selection from the 20-row broadcast
-    // (1:1 on ccid — allowlisted in the fallback census with a
-    // runtime uniqueness pin).
-    val scored = e6.join(broadcast(coarse))
-      .select(col("vec_id"), col("v6"), col("ccid"),
-        graft.functions.SeriesKernelFunctions
-          .int_sq_l2(col("v6"), col("c6")).as("d2"))
-    val top2 = scored
-      .groupBy("vec_id")
-      .agg(max(col("v6")).as("v6"), // constant within the group
-        collect_list(struct(col("d2"), col("ccid"))).as("ds"))
-      .select(col("vec_id"), col("v6"),
-        posexplode(expr("slice(array_sort(ds), 1, 2)"))
-          .as(Seq("cpos", "t")))
+    val (e6, coarse) = ivfPqCorpus(s, dir)
+    val top2 = coarseAssign(e6, coarse, vec = "v6", cent = "c6",
+      cid = "ccid", payload = "v6", nprobe = 2)
+    // centroid vectors re-attach AFTER selection from the 20-row
+    // broadcast (1:1 on ccid — allowlisted in the fallback census with
+    // a runtime uniqueness pin)
     // persisted: read 3× (corpus residual subs, PQ seed codebook,
     // query probe list)
     val probed = top2
@@ -451,8 +449,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     */
   private def ivfPqOracleCtes(qMod: Long): String = s"""
       e AS (SELECT vec_id,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x * 1e6) AS BIGINT)) AS v6
+                   ${Micro.vecSql("embedding::DOUBLE[]")} AS v6
                  FROM embeddings),
       coarse AS (SELECT cid AS ccid, ci AS c6
                  FROM (${ivfSeedDuck("e", "v6")})),
@@ -558,6 +555,16 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     ), counts AS (
       SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
     )"""
+
+  /** [[shingleCandidates]]' DuckDB twin: [[shingleCte]] plus `pairs`
+    * (doc_a, doc_b, common) over the df-capped postings.
+    */
+  private val shinglePairsCte = s"""$shingleCte,
+      pairs AS (
+        SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS common
+        FROM shk x JOIN shk y USING (shingle)
+        WHERE x.doc_id < y.doc_id GROUP BY 1, 2
+      )"""
 
   /** Band-bucket occupancy cap for [[minhashLshPairs]]: a bucket with B
     * co-banded docs emits B² candidate pairs, and real web corpora have
@@ -719,6 +726,97 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           vec_id LIMIT $IvfK"""
   }
 
+  /** The IVF family's corpus: `embs` with its fixed-point copy `ei`,
+    * and the [[ivfSeedCents]] centroids (cid, ci) seeded from it.
+    */
+  private def ivfCorpus(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val e = embs(s, dir).withColumn("ei", Micro.vec("emb"))
+    (e, ivfSeedCents(e, "ei"))
+  }
+
+  /** Slim IVF coarse assign: every vector of `e` with its `nprobe`
+    * nearest centroids of `cents`, as posexplode rows (cpos, t =
+    * struct(d2, `cid`)) carrying `payload`; d2 is the exact integer
+    * squared L2 of the fixed-point columns `vec` and `cent`, and ties
+    * break on `cid`.
+    *
+    * Why slim: ranking the corpus x centroids cross join with a
+    * Window.partitionBy(vec_id) would exchange 20x corpus rows, each
+    * carrying the full vectors, and sort them all — the largest
+    * corpus-scale shuffle of the ANN serving path. The 20 scored
+    * rows of a vector are map-LOCAL (the broadcast cross join generates
+    * them in place), so a partial collect_list of slim (d2, cid) structs
+    * collapses them to one row per vector BEFORE the exchange (~30x
+    * fewer shuffle bytes, no corpus-sized Sort); array_sort's (d2, cid)
+    * struct order is exactly the window's orderBy, rank = cpos + 1. A
+    * row-local HOF form that also drops the exchange was measured and
+    * rejected: interpreting the kernel per lambda element cost more
+    * than the exchange at both sf0.1 and x10 (+82%/+72%).
+    */
+  private def coarseAssign(e: DataFrame, cents: DataFrame, vec: String,
+      cent: String, cid: String, payload: String,
+      nprobe: Int): DataFrame =
+    e.join(broadcast(cents))
+      .select(col("vec_id"), col(payload), col(cid),
+        graft.functions.SeriesKernelFunctions
+          .int_sq_l2(col(vec), col(cent)).as("d2"))
+      .groupBy("vec_id")
+      .agg(max(col(payload)).as(payload), // constant within the group
+        collect_list(struct(col("d2"), col(cid))).as("ds"))
+      .select(col("vec_id"), col(payload),
+        posexplode(expr(s"slice(array_sort(ds), 1, $nprobe)"))
+          .as(Seq("cpos", "t")))
+
+  /** p15/p81's IVF cell lists: each corpus vector with its `nprobe`
+    * nearest cells (rk = 1 is its home cell). Persisted: the cell join
+    * reads it from both sides (probes and neighbors).
+    */
+  private def ivfProbed(s: SparkSession, dir: String,
+      nprobe: Int): DataFrame = {
+    val (e, cents) = ivfCorpus(s, dir)
+    coarseAssign(e, cents, vec = "ei", cent = "ci", cid = "cid",
+        payload = "emb", nprobe = nprobe)
+      .select(col("vec_id"), col("emb"), col("t.cid").as("cell"),
+        (col("cpos") + 1).as("rk"))
+      .persistTracked()
+  }
+
+  /** DuckDB twin of [[ivfCorpus]] + the coarse assign: CTEs e, cents,
+    * dists and ranked(vec_id, emb, cell, rk), every vector's cells
+    * ranked by (d2, cid).
+    */
+  private def ivfRankedOracleCtes: String = s"""
+      e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
+                   ${Micro.vecSql("embedding::DOUBLE[]")} AS ei
+                 FROM embeddings),
+      cents AS (${ivfSeedDuck("e", "ei")}),
+      dists AS (SELECT e.vec_id, e.emb, c.cid,
+                  list_sum(list_transform(range(1, len(e.ei)+1),
+                    i -> (e.ei[i] - c.ci[i]) * (e.ei[i] - c.ci[i]))) AS d2
+                FROM e, cents c),
+      ranked AS (SELECT vec_id, emb, cid AS cell,
+                   row_number() OVER (PARTITION BY vec_id
+                     ORDER BY d2, cid) AS rk FROM dists)"""
+
+  /** Per-query top-k: rank each query's neighbors by (cos_sim DESC,
+    * neighbor_id) into `rk` (BIGINT) and keep rk <= k.
+    */
+  private def topKByCos(df: DataFrame, k: Int): DataFrame =
+    df.withColumn("rk", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("cos_sim").desc, col("neighbor_id"))).cast("long"))
+      .filter(col("rk") <= k)
+
+  /** [[topKByCos]]'s rank in DuckDB. */
+  private val cosRankSql = """row_number() OVER (PARTITION BY query_id
+                   ORDER BY cos_sim DESC, neighbor_id)"""
+
+  /** [[topKByCos]]'s DuckDB twin over relation `src`. */
+  private def topKByCosSql(src: String, k: Int): String =
+    s"""SELECT query_id, neighbor_id, cos_sim, rk FROM (
+        SELECT *, $cosRankSql AS rk
+        FROM $src) WHERE rk <= $k"""
+
   /** p05's SimHash pair generator: 60-bit md5 signature (native
     * [[graft.functions.Md5SimHash60]]), 4-segment blocking (dups
     * within hamming ≤ 3 share at least one 15-bit segment), hamming
@@ -785,60 +883,22 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     */
   private[queries] def ivfTopK(s: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
-    val e = embs(s, dir)
-      .withColumn("ei", expr("transform(emb, x -> cast(round(x*1000000) as bigint))"))
-    val cents = ivfSeedCents(e, "ei")
-    val d2 = graft.functions.SeriesKernelFunctions.int_sq_l2(col("ei"), col("ci"))
-    // persisted: the cell join reads the (expensive) centroid
-    // cross-join assignment from both sides (probes and neighbors).
-    // r15 opt (p63's slim-aggregate coarse assign, guide §2.3/§2.4):
-    // the 20 scored rows of a vector are map-local under the broadcast
-    // cross join, so a partial collect_list of slim (d2, cid) structs
-    // collapses them BEFORE the exchange — the old
-    // Window.partitionBy(vec_id) exchanged and sorted 20x corpus rows
-    // with full embedding payloads. array_sort's (d2, cid) struct
-    // order is exactly the window's orderBy; rk = position + 1.
-    val probed = e.join(broadcast(cents))
-      .select(col("vec_id"), col("emb"), col("cid"), d2.as("d2"))
-      .groupBy("vec_id")
-      .agg(max(col("emb")).as("emb"), // constant within the group
-        collect_list(struct(col("d2"), col("cid"))).as("ds"))
-      .select(col("vec_id"), col("emb"),
-        posexplode(expr(s"slice(array_sort(ds), 1, $nprobe)"))
-          .as(Seq("cpos", "t")))
-      .select(col("vec_id"), col("emb"), col("t.cid").as("cell"),
-        (col("cpos") + 1).as("rk"))
-      .persistTracked()
+    val probed = ivfProbed(s, dir, nprobe)
     val assigned = probed.filter(col("rk") === 1).drop("rk")
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
     probed.filter(col("vec_id") % 50 === 0).drop("rk")
       .toDF("query_id", "qemb", "cell")
       .join(assigned.toDF("neighbor_id", "nemb", "cell"), "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(VectorOps.cosine(col("qemb"), col("nemb")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(wTop).cast("long"))
-      .filter(col("rk") <= 5)
+      .transform(topKByCos(_, 5))
   }
 
   /** The p15 IVF chain as a CTE list ending in `ivf_topk` — shared by
     * the p15 oracle and p69's recall report so both checks see the
     * definitionally identical index.
     */
-  private def ivfOracleCtes(nprobe: Int): String = s"""
-      e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x*1000000) AS BIGINT)) AS ei
-                 FROM embeddings),
-      cents AS (${ivfSeedDuck("e", "ei")}),
-      dists AS (SELECT e.vec_id, e.emb, c.cid,
-                  list_sum(list_transform(range(1, len(e.ei)+1),
-                    i -> (e.ei[i] - c.ci[i]) * (e.ei[i] - c.ci[i]))) AS d2
-                FROM e, cents c),
-      ranked AS (SELECT vec_id, emb, cid AS cell,
-                   row_number() OVER (PARTITION BY vec_id
-                     ORDER BY d2, cid) AS rk FROM dists),
+  private def ivfOracleCtes(nprobe: Int): String = s"""$ivfRankedOracleCtes,
       assigned AS (SELECT vec_id, emb, cell FROM ranked WHERE rk = 1),
       cand AS (SELECT q.vec_id AS query_id, q.emb AS qemb,
                       n.vec_id AS neighbor_id, n.emb AS nemb
@@ -848,10 +908,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       sims AS (SELECT query_id, neighbor_id,
                       round(list_cosine_similarity(qemb, nemb), 6) AS cos_sim
                FROM cand),
-      ivf_topk AS (SELECT query_id, neighbor_id, cos_sim, rk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos_sim DESC, neighbor_id) AS rk
-        FROM sims) WHERE rk <= 5)"""
+      ivf_topk AS (${topKByCosSql("sims", 5)})"""
 
   private def ivfOracle(nprobe: Int): String = s"""
       WITH ${ivfOracleCtes(nprobe)}
@@ -936,6 +993,37 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           / ${H.MinHashK}, 6) >= 0.5)"""
   }
 
+  /** The LSH near-dup clusters as DuckDB CTEs extending
+    * [[lshPairsOracleCtes]] (the query opens WITH RECURSIVE): `labels`
+    * maps every paired doc to the min id its reachability closure
+    * reaches, the fixpoint [[graft.operators.Components]] computes.
+    */
+  private val lshLabelsOracleCtes: String = s"""$lshPairsOracleCtes,
+      edges AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
+                UNION SELECT doc_b, doc_a FROM pairs),
+      reach(u, v) AS (
+        SELECT u, u FROM edges
+        UNION
+        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+      labels AS (SELECT u AS doc_id, min(v) AS cluster_id
+                 FROM reach GROUP BY u)"""
+
+  /** [[clusterManifest]]'s DuckDB twin: [[lshLabelsOracleCtes]] plus
+    * `manifest(doc_id, cluster_id)` over every doc.
+    */
+  private val lshManifestOracleCtes: String = s"""$lshLabelsOracleCtes,
+      manifest AS (SELECT d.doc_id,
+                          coalesce(l.cluster_id, d.doc_id) AS cluster_id
+                   FROM docs d LEFT JOIN labels l USING (doc_id))"""
+
+  /** [[gram3Sets]]' DuckDB twin over `docs(doc_id, toks)`: the distinct
+    * (doc_id, 3-gram string) rows `sh3`.
+    */
+  private val sh3OracleCte: String = """sh3 AS (SELECT DISTINCT doc_id,
+                array_to_string(toks[i:i+2], ' ') AS shingle
+              FROM docs, UNNEST(CASE WHEN len(toks) >= 3
+                THEN range(1, len(toks)-1) ELSE [] END) AS t(i))"""
+
   /** SimHash CTE chain ending at the RAW (uncapped) `seg0` stream
     * (doc_id, sig, seg, val) — shared by the p05 oracle (which applies
     * the occupancy QUALIFY on top) and the p97 cap audit (which reads
@@ -1014,12 +1102,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       shingleCandidates(docs(s, dir), P03DfCap)
         .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
         .filter(col("jaccard") >= 0.5)
-    }, Some(s"""$shingleCte,
-      pairs AS (
-        SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS common
-        FROM shk x JOIN shk y USING (shingle)
-        WHERE x.doc_id < y.doc_id GROUP BY 1, 2
-      )
+    }, Some(s"""$shinglePairsCte
       SELECT doc_a, doc_b,
              round(common/(ca.n + cb.n - common), 6) AS jaccard
       FROM pairs JOIN counts ca ON doc_a = ca.doc_id
@@ -1104,15 +1187,12 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       val e = embs(s, dir)
       val queries = e.filter(col("vec_id") % 50 === 0)
         .toDF("query_id", "qlabel", "qemb")
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
       queries.join(e.toDF("neighbor_id", "nlabel", "nemb"),
           col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
           round(VectorOps.cosine(col("qemb"), col("nemb")), 6).as("cos_sim"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-    }, Some("""
+        .transform(topKByCos(_, 5))
+    }, Some(s"""
       WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
       sims AS (
         SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -1120,10 +1200,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
         FROM e q JOIN e n ON q.vec_id != n.vec_id
         WHERE q.vec_id % 50 = 0
       )
-      SELECT query_id, neighbor_id, cos_sim, rk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos_sim DESC, neighbor_id) AS rk
-        FROM sims) WHERE rk <= 5"""), bench = true),
+      ${topKByCosSql("sims", 5)}"""), bench = true),
 
     // ---- p08: LSH-bucketed ANN — L hash tables of b-bit hyperplane
     // signatures; the equi-join on (table, bucket) replaces the cross
@@ -1150,8 +1227,8 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       // being plan-identical, ReusedExchange cannot fire, and the
       // hashing ran twice per materialization
       val e = embs(s, dir)
-        .withColumn("ei", expr(
-          "transform(emb, x -> coalesce(cast(round(x*1000000) as bigint), 0L))"))
+        .withColumn("ei",
+          expr(s"transform(emb, x -> coalesce(${Micro.sql("x")}, 0L))"))
         .select(col("vec_id"), col("emb"),
           explode(array((0 until tables).map(t =>
             struct(lit(t).as("tbl"), bucketExpr(t).as("bucket"))): _*)).as("tb"))
@@ -1164,16 +1241,13 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           Seq("tbl", "bucket"))
         .filter(col("query_id") =!= col("neighbor_id"))
         .select("query_id", "qemb", "neighbor_id", "nemb").distinct()
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
       cand.select(col("query_id"), col("neighbor_id"),
           round(VectorOps.cosine(col("qemb"), col("nemb")), 6).as("cos_sim"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-    }, Some("""
+        .transform(topKByCos(_, 5))
+    }, Some(s"""
       WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
       ei AS (SELECT vec_id, emb,
-               list_transform(emb, x -> CAST(round(x*1000000) AS BIGINT)) AS ei
+               ${Micro.vecSql("emb")} AS ei
              FROM e),
       bk AS (SELECT vec_id, emb, t AS tbl,
         list_sum(list_transform(range(0, 6), b -> CASE WHEN
@@ -1192,10 +1266,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       sims AS (SELECT query_id, neighbor_id,
                       round(list_cosine_similarity(qemb, nemb), 6) AS cos_sim
                FROM cand)
-      SELECT query_id, neighbor_id, cos_sim, rk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos_sim DESC, neighbor_id) AS rk
-        FROM sims) WHERE rk <= 5""")),
+      ${topKByCosSql("sims", 5)}""")),
 
     // ---- p09: per-document text statistics
     Entry("p09_text_stats", (s, dir) =>
@@ -1572,18 +1643,18 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     Entry("p22_label_centroids", (s, dir) =>
       embs(s, dir)
         .select(col("label"), posexplode(col("emb")).as(Seq("dim", "x")))
-        .withColumn("x6", expr("cast(round(x * 1e6) as bigint)"))
+        .withColumn("x6", Micro.of("x"))
         .groupBy("label", "dim")
         .agg(sum("x6").as("s6"), count(lit(1)).as("n_vecs"))
         .select(col("label"), col("dim").cast("long").as("dim"),
           round(col("s6") / (col("n_vecs").cast("double") * 1e6), 6)
             .as("centroid"),
           col("n_vecs")),
-      Some("""
+      Some(s"""
         WITH e AS (SELECT label, embedding::DOUBLE[] AS emb
                    FROM embeddings),
         x AS (SELECT label, i - 1 AS dim,
-                CAST(round(emb[i] * 1e6) AS BIGINT) AS x6
+                ${Micro.sql("emb[i]")} AS x6
               FROM e, UNNEST(range(1, len(emb) + 1)) t(i))
         SELECT label, dim,
                round(CAST(sum(x6) AS BIGINT) / (count(*) * 1e6), 6)
@@ -1603,35 +1674,12 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     // checks; the closure is quadratic per clique, which is fine for
     // the oracle and exactly why the engine does NOT compute it.
     Entry("p23_dedup_clusters", (s, dir) => {
-      val d = docs(s, dir)
-      // persisted (r14 opt, guide §2.4): connectedComponents' first
-      // eager checkpoint reads its edge input TWICE (both arms of the
-      // symmetrize union) — uncached, the whole LSH refine ran twice
-      // per cold build (p67 already carried this persist; p23 didn't)
-      val pairs = minhashLshPairs(d).select("doc_a", "doc_b")
-        .persistTracked()
-      val labels = Components.connectedComponents(pairs)
-      d.select(col("doc_id"))
-        .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"),
-          "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("cluster_id"))
+      clusterManifest(docs(s, dir))
         .withColumn("cluster_size",
           count(lit(1)).over(Window.partitionBy("cluster_id")))
         .withColumn("is_survivor", col("doc_id") === col("cluster_id"))
     }, Some(s"""
-      WITH RECURSIVE $lshPairsOracleCtes,
-      edges AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(u, v) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-      labels AS (SELECT u AS doc_id, min(v) AS cluster_id
-                 FROM reach GROUP BY u),
-      manifest AS (SELECT d.doc_id,
-                          coalesce(l.cluster_id, d.doc_id) AS cluster_id
-                   FROM docs d LEFT JOIN labels l USING (doc_id))
+      WITH RECURSIVE $lshManifestOracleCtes
       SELECT doc_id, cluster_id,
              count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
              doc_id = cluster_id AS is_survivor
@@ -1669,10 +1717,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           round(col("n_hit") / col("n"), 6).as("contam_frac"))
     }, Some(s"""
       WITH docs AS (SELECT doc_id, $toksSql AS toks FROM documents),
-      sh3 AS (SELECT DISTINCT doc_id,
-                array_to_string(toks[i:i+2], ' ') AS shingle
-              FROM docs, UNNEST(CASE WHEN len(toks) >= 3
-                THEN range(1, len(toks)-1) ELSE [] END) AS t(i)),
+      $sh3OracleCte,
       counts3 AS (SELECT doc_id, count(*) AS n FROM sh3 GROUP BY doc_id),
       bench AS (SELECT shingle, count(*) AS bench_df FROM sh3
                 WHERE doc_id % 100 = 0 GROUP BY shingle),
@@ -1755,8 +1800,6 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           expr("transform(emb, x -> " +
             "cast(round(try_divide(x * 127.0, ma)) as bigint))"))
         .select(col("vec_id"), col("qv"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
       q8.filter(col("vec_id") % 50 === 0).toDF("query_id", "qq")
         .join(q8.toDF("neighbor_id", "nq"),
           col("query_id") =!= col("neighbor_id"))
@@ -1766,9 +1809,8 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
               (sqrt(graft.functions.SeriesKernelFunctions.int_dot(col("qq"), col("qq")).cast("double")) *
                 sqrt(graft.functions.SeriesKernelFunctions.int_dot(col("nq"), col("nq")).cast("double"))),
             6).as("cos_sim"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-    }, Some("""
+        .transform(topKByCos(_, 5))
+    }, Some(s"""
       WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
       q AS (SELECT vec_id,
               list_transform(emb, x -> CAST(round(x * 127.0 / ma) AS BIGINT))
@@ -1786,10 +1828,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
              * sqrt(CAST(CAST(list_sum(list_transform(b.qv, x -> x * x))
                  AS BIGINT) AS DOUBLE))), 6) AS cos_sim
         FROM q a JOIN q b ON a.vec_id != b.vec_id WHERE a.vec_id % 50 = 0)
-      SELECT query_id, neighbor_id, cos_sim, rk FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY cos_sim DESC, neighbor_id) AS rk
-        FROM sims) WHERE rk <= 5""")),
+      ${topKByCosSql("sims", 5)}""")),
 
     // ---- p27: tokenizer vocabulary coverage — build the top-16
     // frequency vocabulary (deterministic tiebreak: count desc, token
@@ -1868,10 +1907,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
                  md5($normSql) AS h,
                  min(d.doc_id) OVER (PARTITION BY md5($normSql)) AS keeper
                FROM documents d JOIN docs t USING (doc_id)),
-      sh3 AS (SELECT DISTINCT doc_id,
-                array_to_string(toks[i:i+2], ' ') AS shingle
-              FROM docs, UNNEST(CASE WHEN len(toks) >= 3
-                THEN range(1, len(toks)-1) ELSE [] END) AS t(i)),
+      $sh3OracleCte,
       bench AS (SELECT DISTINCT shingle FROM sh3 WHERE doc_id % 100 = 0),
       flagged AS (SELECT DISTINCT s.doc_id FROM sh3 s
                   JOIN bench USING (shingle) WHERE s.doc_id % 100 != 0)
@@ -1972,24 +2008,16 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     // engine so adding a split can never correlate with, e.g., the
     // sampling hash. Per-row, shuffle-free at any corpus size.
     Entry("p31_split_assign", (s, dir) => {
-      import graft.functions.{HashScheme => H}
       docs(s, dir)
         .select(col("doc_id"), col("source"),
-          expr(H.h32Spark("concat(cast(doc_id as string), ':split')") +
-            " % 100").as("bucket"))
+          splitBucket("doc_id").as("bucket"))
         .select(col("doc_id"), col("source"), col("bucket"),
-          when(col("bucket") < 90, "train")
-            .when(col("bucket") < 95, "val")
-            .otherwise("test").as("split"))
+          splitOf(col("bucket")).as("split"))
     }, Some(s"""
       WITH b AS (SELECT doc_id, source,
-        ${graft.functions.HashScheme.h32Duck(
-          "CAST(doc_id AS VARCHAR) || ':split'")} % 100 AS bucket
+        ${splitBucketSql("doc_id")} AS bucket
         FROM documents)
-      SELECT doc_id, source, bucket,
-        CASE WHEN bucket < 90 THEN 'train'
-             WHEN bucket < 95 THEN 'val'
-             ELSE 'test' END AS split
+      SELECT doc_id, source, bucket, ${splitCaseSql("bucket")} AS split
       FROM b""")),
 
     // ---- p32: per-language top-k bigrams — the corpus LM-ish n-gram
@@ -2080,8 +2108,8 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       // embedding table is scanned and re-squared twice
       val e = embs(s, dir)
         .select(col("vec_id"), col("label"),
-          expr("aggregate(transform(emb, x -> cast(round(x * 1e6) as " +
-            "bigint)), 0L, (a, v) -> a + v * v)").as("s2"))
+          expr(s"aggregate(transform(emb, x -> ${Micro.sql("x")}), 0L, " +
+            "(a, v) -> a + v * v)").as("s2"))
         .withColumn("norm6",
           expr("cast(round(sqrt(cast(s2 as double))) as bigint)"))
         .drop("s2")
@@ -2100,10 +2128,10 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           round(col("norm6") / 1e6, 6).as("norm"),
           round(col("z_raw"), 6).as("z"),
           (abs(col("z_raw")) > 2.0).as("is_outlier"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT vec_id, label,
         CAST(list_sum(list_transform(
-          list_transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT)),
+          ${Micro.vecSql("embedding")},
           v -> v * v)) AS BIGINT) AS s2
         FROM embeddings),
       n6 AS (SELECT vec_id, label,
@@ -2191,10 +2219,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
         .withColumn("n_false_pos", col("n_bloom_hit") - col("n_exact_hit"))
     }, Some(s"""
       WITH docs AS (SELECT doc_id, $toksSql AS toks FROM documents),
-      sh3 AS (SELECT DISTINCT doc_id,
-                array_to_string(toks[i:i+2], ' ') AS shingle
-              FROM docs, UNNEST(CASE WHEN len(toks) >= 3
-                THEN range(1, len(toks)-1) ELSE [] END) AS t(i)),
+      $sh3OracleCte,
       h AS (SELECT doc_id, shingle,
               ${graft.functions.HashScheme.h32Duck("shingle")} AS h1,
               ${graft.functions.HashScheme.h32bDuck("shingle")} AS h2
@@ -2241,10 +2266,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     // window would move all n×k rows. The (d2, cid) ordering key is
     // duplicate-free, so min_by is deterministic.
     Entry("p35_semdedup", (s, dir) => {
-      val e = embs(s, dir)
-        .withColumn("ei",
-          expr("transform(emb, x -> cast(round(x*1000000) as bigint))"))
-      val cents = ivfSeedCents(e, "ei")
+      val (e, cents) = ivfCorpus(s, dir)
       val d2 = graft.functions.SeriesKernelFunctions.int_sq_l2(col("ei"), col("ci"))
       val assigned = e.join(broadcast(cents))
         .withColumn("d2", d2)
@@ -2261,18 +2283,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
             .as("cos_sim"))
         .filter(col("cos_sim") >= 0.4)
     }, Some(s"""
-      WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x*1000000) AS BIGINT)) AS ei
-                 FROM embeddings),
-      cents AS (${ivfSeedDuck("e", "ei")}),
-      dists AS (SELECT e.vec_id, e.emb, c.cid,
-                  list_sum(list_transform(range(1, len(e.ei)+1),
-                    i -> (e.ei[i] - c.ci[i]) * (e.ei[i] - c.ci[i]))) AS d2
-                FROM e, cents c),
-      ranked AS (SELECT vec_id, emb, cid AS cell,
-                   row_number() OVER (PARTITION BY vec_id
-                     ORDER BY d2, cid) AS rk FROM dists),
+      WITH $ivfRankedOracleCtes,
       assigned AS (SELECT vec_id, emb, cell FROM ranked WHERE rk = 1)
       SELECT a.cell, a.vec_id AS vec_a, b.vec_id AS vec_b,
              round(list_cosine_similarity(a.emb, b.emb), 6) AS cos_sim
@@ -2344,12 +2355,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       shingleCandidates(docs(s, dir), P03DfCap)
         .select(col("doc_a"), col("doc_b"), cont.as("containment"))
         .filter(col("containment") >= 0.8)
-    }, Some(s"""$shingleCte,
-      pairs AS (
-        SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS common
-        FROM shk x JOIN shk y USING (shingle)
-        WHERE x.doc_id < y.doc_id GROUP BY 1, 2
-      )
+    }, Some(s"""$shinglePairsCte
       SELECT doc_a, doc_b,
              round(common / least(ca.n, cb.n), 6) AS containment
       FROM pairs JOIN counts ca ON doc_a = ca.doc_id
@@ -2389,7 +2395,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       val sampled = docs(s, dir).select(col("doc_id"), col("lang"))
         .join(broadcast(rates.select("lang", "rate")), "lang")
         .filter(expr(s"${H.h60Spark("cast(doc_id as string)")} % 1000000") <
-          expr("cast(round(rate * 1e6) as bigint)"))
+          Micro.of("rate"))
         .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
       rates.join(broadcast(sampled), Seq("lang"), "left")
         .withColumn("n_sampled", coalesce(col("n_sampled"), lit(0L)))
@@ -2411,7 +2417,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
                FROM documents d JOIN rates r USING (lang)
                WHERE ${graft.functions.HashScheme.h60Duck(
                  "CAST(doc_id AS VARCHAR)")} % 1000000
-                 < CAST(round(r.rate * 1e6) AS BIGINT)
+                 < ${Micro.sql("r.rate")}
                GROUP BY 1)
       SELECT r.lang, r.n_docs, r.w_alpha, r.rate,
              coalesce(s.n_sampled, 0) AS n_sampled
@@ -2723,12 +2729,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           round(VectorOps.cosine(col("emb_a"), col("emb_b")), 6)
             .as("cos_sim"))
         .withColumn("consistent", col("cos_sim") >= 0.5)
-    }, Some(s"""$shingleCte,
-      pairs AS (
-        SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS common
-        FROM shk x JOIN shk y USING (shingle)
-        WHERE x.doc_id < y.doc_id GROUP BY 1, 2
-      ),
+    }, Some(s"""$shinglePairsCte,
       strong AS (
         SELECT doc_a, doc_b,
                round(common/(ca.n + cb.n - common), 6) AS jaccard
@@ -2887,12 +2888,11 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
         .groupBy("lang", "t").agg(count(lit(1)).as("cnt"))
       val wR = Window.partitionBy("lang")
         .orderBy(col("cnt").desc, col("t"))
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       tf.withColumn("rk", row_number().over(wR))
         .select(col("lang"),
-          expr("cast(round(ln(cast(rk as double)) * 1e6) as bigint)")
+          Micro.of("ln(cast(rk as double))")
             .as("x6"),
-          expr("cast(round(ln(cast(cnt as double)) * 1e6) as bigint)")
+          Micro.of("ln(cast(cnt as double))")
             .as("y6"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_terms"),
@@ -2917,8 +2917,8 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
                                  ORDER BY cnt DESC, t) AS rk
             FROM tf),
       f AS (SELECT lang,
-              CAST(round(ln(CAST(rk AS DOUBLE)) * 1e6) AS BIGINT) AS x6,
-              CAST(round(ln(CAST(cnt AS DOUBLE)) * 1e6) AS BIGINT) AS y6
+              ${Micro.sql("ln(CAST(rk AS DOUBLE))")} AS x6,
+              ${Micro.sql("ln(CAST(cnt AS DOUBLE))")} AS y6
             FROM r)
       SELECT lang, count(*) AS n_terms,
              CAST(count(*) * sum(CAST(x6 AS HUGEINT) * y6)
@@ -3007,7 +3007,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       embs(s, dir)
         .select(col("vec_id"), posexplode(col("emb")).as(Seq("i", "x")))
         .select(col("vec_id"), col("i"),
-          expr("cast(round(x * 1e6) as bigint)").as("x6"))
+          Micro.of("x").as("x6"))
         .join(broadcast(signs), "i")
         .groupBy("vec_id", "j")
         .agg(sum(col("sgn") * col("x6")).as("y6"))
@@ -3021,7 +3021,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
                    THEN 1 ELSE -1 END AS sgn
             FROM range(0, 64) d(i), range(0, 16) r(j)),
       posts AS (SELECT vec_id, r.i AS i,
-                  CAST(round(embedding[r.i + 1] * 1e6) AS BIGINT) AS x6
+                  ${Micro.sql("embedding[r.i + 1]")} AS x6
                 FROM embeddings, range(0, 64) r(i))
       SELECT vec_id, CAST(j AS BIGINT) AS dim,
              CAST(sum(sgn * x6) AS BIGINT) AS y6,
@@ -3255,10 +3255,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
             col("n_grams").cast("double"), 6).as("novel_frac"))
     }, Some(s"""
       WITH docs AS (SELECT doc_id, $toksSql AS toks FROM documents),
-      sh3 AS (SELECT DISTINCT doc_id,
-                array_to_string(toks[i:i+2], ' ') AS shingle
-              FROM docs, UNNEST(CASE WHEN len(toks) >= 3
-                THEN range(1, len(toks)-1) ELSE [] END) AS t(i)),
+      $sh3OracleCte,
       counts3 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
                   FROM sh3 GROUP BY doc_id),
       fs AS (SELECT shingle, min(doc_id) AS first_doc
@@ -3387,7 +3384,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       // every iteration plus the final report
       val e = embs(s, dir)
         .select(col("vec_id"),
-          expr("transform(emb, x -> cast(round(x*1000000) as bigint))")
+          Micro.vec("emb")
             .as("ei"))
         .persistTracked()
       val d2 = graft.functions.SeriesKernelFunctions.int_sq_l2(col("ei"), col("ci"))
@@ -3446,8 +3443,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       }.mkString(",\n      ")
       s"""
       WITH e AS (SELECT vec_id,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x*1000000) AS BIGINT)) AS ei
+                   ${Micro.vecSql("embedding::DOUBLE[]")} AS ei
                  FROM embeddings),
       c0 AS (${ivfSeedDuck("e", "ei")}),
       $iter,
@@ -3515,10 +3511,9 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     // A tight cohort reads mean_pair_dot ≈ mean_sq_norm; a diverse one
     // reads ≈ 0 — the gap is the dispersion a curator balances.
     Entry("p57_label_dispersion", (s, dir) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       embs(s, dir)
         .select(col("label"), posexplode(col("emb")).as(Seq("dim", "x")))
-        .withColumn("x6", expr("cast(round(x * 1e6) as bigint)"))
+        .withColumn("x6", Micro.of("x"))
         .groupBy("label", "dim")
         .agg(sum(col("x6")).as("s6"),
           sum(dec(col("x6")) * col("x6")).as("q"),
@@ -3536,10 +3531,10 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
             .cast("long") - lit(8000000L)) / 1e6).as("mean_pair_dot"),
           (expr("(qq + den_n div 2) div den_n").cast("long") / 1e6)
             .as("mean_sq_norm"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT label, embedding::DOUBLE[] AS emb FROM embeddings),
       x AS (SELECT label, i AS dim,
-              CAST(round(emb[i] * 1e6) AS BIGINT) AS x6
+              ${Micro.sql("emb[i]")} AS x6
             FROM e, UNNEST(range(1, len(emb) + 1)) t(i)),
       pd AS (SELECT label, dim,
               CAST(sum(x6) AS BIGINT) AS s6,
@@ -3621,7 +3616,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     Entry("p59_pq_topk", (s, dir) => {
       val e6 = embs(s, dir)
         .select(col("vec_id"),
-          expr("transform(emb, x -> cast(round(x * 1e6) as bigint))")
+          Micro.vec("emb")
             .as("v6"))
       val subs = e6.select(col("vec_id"),
           posexplode(expr(s"transform(sequence(0, ${PqM - 1}), " +
@@ -3666,8 +3661,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           (col("adot12") / 1e12).as("approx_dot"), col("rk"))
     }, Some(s"""
       WITH e AS (SELECT vec_id,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x * 1e6) AS BIGINT)) AS v6
+                   ${Micro.vecSql("embedding::DOUBLE[]")} AS v6
                  FROM embeddings),
       subs AS (SELECT vec_id, CAST(m AS BIGINT) AS m,
                  v6[m * $PqSub + 1 : m * $PqSub + $PqSub] AS sub
@@ -3713,56 +3707,11 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     // identical on both engines by construction. 100 TB shape: both
     // per-query top-10 lists are WindowGroupLimit-bounded and tiny;
     // the fusion join touches ≤ 20 rows per query.
-    Entry("p60_hybrid_rrf", (s, dir) => {
-      val wl = Window.partitionBy("query_id")
-        .orderBy(col("score6").desc, col("doc_id"))
-      val lex = bm25Scores(s, dir)
-        .withColumn("rl", row_number().over(wl).cast("long"))
-        .filter(col("rl") <= 10)
-        .select(col("query_id"), col("doc_id"), col("rl"))
-      val e = embs(s, dir)
-      val wd = Window.partitionBy("query_id")
-        .orderBy(col("cs").desc, col("doc_id"))
-      val dense = e.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-        .join(e.select(col("vec_id").as("doc_id"), col("emb").as("nemb")),
-          col("doc_id") =!= col("query_id"))
-        .select(col("query_id"), col("doc_id"),
-          round(graft.functions.VectorOps.cosine(col("qemb"),
-            col("nemb")), 6).as("cs"))
-        .withColumn("rd", row_number().over(wd).cast("long"))
-        .filter(col("rd") <= 10)
-        .select(col("query_id"), col("doc_id"), col("rd"))
-      val wf = Window.partitionBy("query_id")
-        .orderBy(col("rrf6").desc, col("doc_id"))
-      // r15 opt: p99's fusion rewrite (see hybridRrfAnnEntry) applied
-      // to the declared-brute twin — both arms are unique on
-      // (query_id, doc_id), so UNION + groupBy.max IS the full outer
-      // join, in one exchange instead of three
-      lex
-        .select(col("query_id"), col("doc_id"), col("rl"),
-          lit(null).cast("long").as("rd"))
-        .unionByName(dense.select(col("query_id"), col("doc_id"),
-          lit(null).cast("long").as("rl"), col("rd")))
-        .repartition(col("query_id"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(max(col("rl")).as("rl"), max(col("rd")).as("rd"))
-        .withColumn("rrf6",
-          expr("coalesce(1000000 div (60 + rl), 0L) + " +
-            "coalesce(1000000 div (60 + rd), 0L)"))
-        .withColumn("rk", row_number().over(wf).cast("long"))
-        .filter(col("rk") <= 5)
-        .select(col("query_id"), col("doc_id"),
-          col("rl").isNotNull.as("in_lexical"),
-          col("rd").isNotNull.as("in_dense"),
-          (col("rrf6") / 1e6).as("rrf"), col("rk"))
-    }, Some(s"""
+    Entry("p60_hybrid_rrf", (s, dir) =>
+      (rrfFuse _).tupled(p60Arms(s, dir)),
+      Some(s"""
       WITH $bm25Cte,
-      lex AS (SELECT query_id, doc_id, rl FROM (
-                SELECT query_id, doc_id,
-                       CAST(row_number() OVER (PARTITION BY query_id
-                         ORDER BY score6 DESC, doc_id) AS BIGINT) AS rl
-                FROM sc) WHERE rl <= 10),
+      ${lexTop10Sql("sc")},
       e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
       dn AS (SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
                round(list_cosine_similarity(a.emb, b.emb), 6) AS cs
@@ -3773,16 +3722,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
                          CAST(row_number() OVER (PARTITION BY query_id
                            ORDER BY cs DESC, doc_id) AS BIGINT) AS rd
                   FROM dn) WHERE rd <= 10),
-      fused AS (SELECT query_id, doc_id,
-                  rl, rd,
-                  coalesce(1000000 // (60 + rl), 0) +
-                  coalesce(1000000 // (60 + rd), 0) AS rrf6
-                FROM lex FULL JOIN dense USING (query_id, doc_id))
-      SELECT query_id, doc_id, rl IS NOT NULL AS in_lexical,
-             rd IS NOT NULL AS in_dense, rrf6 / 1e6 AS rrf, rk
-      FROM (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY rrf6 DESC, doc_id) AS BIGINT) AS rk
-            FROM fused) WHERE rk <= 5""")),
+      ${rrfFuseSql("dense")}""")),
 
     // ---- p61: incremental dedup against a prior manifest — the mode
     // production dedup actually runs in at 100 TB: yesterday's corpus
@@ -4077,62 +4017,25 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     * join and per-row hashing — the split itself adds nothing to the
     * component cost.
     */
-  private[queries] def splitLeakfreeEntry: Entry = {
-    import graft.functions.{HashScheme => H}
-    def splitCase(b: String) =
-      s"CASE WHEN $b < 90 THEN 'train' WHEN $b < 95 THEN 'val' " +
-        s"ELSE 'test' END"
+  private[queries] def splitLeakfreeEntry: Entry =
     Entry("p66_split_leakfree", (s, dir) => {
-      val d = docs(s, dir)
-      // persisted (r14 opt): same two-read symmetrize-union shape as
-      // p23 — see the note there
-      val pairs = minhashLshPairs(d).select("doc_a", "doc_b")
-        .persistTracked()
-      val labels = Components.connectedComponents(pairs)
-      val bucketOf = (src: String) =>
-        expr(H.h32Spark(s"concat(cast($src as string), ':split')") +
-          " % 100")
-      d.select(col("doc_id"))
-        .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"),
-          "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("cluster_id"))
-        .withColumn("bucket", bucketOf("cluster_id"))
-        .withColumn("dbucket", bucketOf("doc_id"))
+      clusterManifest(docs(s, dir))
+        .withColumn("bucket", splitBucket("cluster_id"))
+        .withColumn("dbucket", splitBucket("doc_id"))
         .select(col("doc_id"), col("cluster_id"), col("bucket"),
-          when(col("bucket") < 90, "train")
-            .when(col("bucket") < 95, "val")
-            .otherwise("test").as("split"),
-          (when(col("dbucket") < 90, "train")
-            .when(col("dbucket") < 95, "val")
-            .otherwise("test") =!=
-            when(col("bucket") < 90, "train")
-              .when(col("bucket") < 95, "val")
-              .otherwise("test")).as("rehomed"))
+          splitOf(col("bucket")).as("split"),
+          (splitOf(col("dbucket")) =!= splitOf(col("bucket")))
+            .as("rehomed"))
     }, Some(s"""
-      WITH RECURSIVE $lshPairsOracleCtes,
-      edges AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(u, v) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-      labels AS (SELECT u AS doc_id, min(v) AS cluster_id
-                 FROM reach GROUP BY u),
-      manifest AS (SELECT d.doc_id,
-                          coalesce(l.cluster_id, d.doc_id) AS cluster_id
-                   FROM docs d LEFT JOIN labels l USING (doc_id)),
+      WITH RECURSIVE $lshManifestOracleCtes,
       b AS (SELECT doc_id, cluster_id,
-              ${H.h32Duck("CAST(cluster_id AS VARCHAR) || ':split'")}
-                % 100 AS bucket,
-              ${H.h32Duck("CAST(doc_id AS VARCHAR) || ':split'")}
-                % 100 AS dbucket
+              ${splitBucketSql("cluster_id")} AS bucket,
+              ${splitBucketSql("doc_id")} AS dbucket
             FROM manifest)
       SELECT doc_id, cluster_id, bucket,
-             ${splitCase("bucket")} AS split,
-             ${splitCase("dbucket")} <> ${splitCase("bucket")} AS rehomed
+             ${splitCaseSql("bucket")} AS split,
+             ${splitCaseSql("dbucket")} <> ${splitCaseSql("bucket")} AS rehomed
       FROM b"""))
-  }
 
   /** p67: train/test leakage audit — the evaluation-side proof that
     * p66's cluster-keyed split is worth its extra join: over the SAME
@@ -4154,18 +4057,19 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     * audit and p71's per-split contamination so every consumer applies
     * the definitionally identical assignment.
     */
-  private def splitCol(c: String): Column = {
-    import graft.functions.{HashScheme => H}
-    val b = expr(H.h32Spark(s"concat(cast($c as string), ':split')") +
-      " % 100")
-    when(b < 90, "train").when(b < 95, "val").otherwise("test")
-  }
-  private def splitSql(c: String): String = {
-    import graft.functions.{HashScheme => H}
-    val b = s"(${H.h32Duck(s"CAST($c AS VARCHAR) || ':split'")} % 100)"
+  private def splitBucket(c: String): Column =
+    expr(graft.functions.HashScheme
+      .h32Spark(s"concat(cast($c as string), ':split')") + " % 100")
+  private def splitOf(bucket: Column): Column =
+    when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
+  private def splitCol(c: String): Column = splitOf(splitBucket(c))
+  private def splitBucketSql(c: String): String = graft.functions.HashScheme
+    .h32Duck(s"CAST($c AS VARCHAR) || ':split'") + " % 100"
+  private def splitCaseSql(b: String): String =
     s"CASE WHEN $b < 90 THEN 'train' WHEN $b < 95 THEN 'val' " +
       s"ELSE 'test' END"
-  }
+  private def splitSql(c: String): String =
+    splitCaseSql(s"(${splitBucketSql(c)})")
 
   private[queries] def leakageAuditEntry: Entry = {
     Entry("p67_leakage_audit", (s, dir) => {
@@ -4174,9 +4078,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       // edge input (checkpointed inside connectedComponents) and once
       // directly as the audited pair set below; without the persist the
       // whole LSH pass runs twice
-      val pairs = minhashLshPairs(d).select("doc_a", "doc_b")
-        .persistTracked()
-      val labels = Components.connectedComponents(pairs)
+      val (pairs, labels) = lshComponents(d)
       pairs
         .join(labels.withColumnRenamed("node", "doc_a")
           .withColumnRenamed("label", "ca"), Seq("doc_a"))
@@ -4195,15 +4097,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
               "div n_pairs as bigint)") / lit(1e6))
             .otherwise(lit(0.0)).as("leak_frac_doc"))
     }, Some(s"""
-      WITH RECURSIVE $lshPairsOracleCtes,
-      edges AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(u, v) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-      labels AS (SELECT u AS doc_id, min(v) AS cluster_id
-                 FROM reach GROUP BY u),
+      WITH RECURSIVE $lshLabelsOracleCtes,
       j AS (SELECT p.doc_a, p.doc_b, la.cluster_id AS ca,
                    lb.cluster_id AS cb
             FROM pairs p JOIN labels la ON p.doc_a = la.doc_id
@@ -4362,19 +4256,25 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     * retrievals it audits; the retrievals keep their own documented
     * shapes.
     */
+  /** Per-query recall of the `found` neighbor lists against `exact`
+    * (both on query_id, neighbor_id): n_exact, n_hits and recall, the
+    * HALF_UP micro ratio.
+    */
+  private def recallReport(exact: DataFrame, found: DataFrame): DataFrame =
+    exact.join(found.select(col("query_id"), col("neighbor_id"),
+        lit(1L).as("hit")), Seq("query_id", "neighbor_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_exact"),
+        coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
+      .select(col("query_id"), col("n_exact"), col("n_hits"),
+        (expr("cast((n_hits * 1000000L + n_exact div 2) div n_exact " +
+          "as bigint)") / lit(1e6)).as("recall"))
+
   private[queries] def annRecallEntry: Entry =
     Entry("p69_ann_recall", (s, dir) => {
       val exact = Catalog.queries("p07_sim_topk")(s, dir)
         .select(col("query_id"), col("neighbor_id"))
-      val ivf = Catalog.queries("p15_sim_ivf")(s, dir)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      exact.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
-        .select(col("query_id"), col("n_exact"), col("n_hits"),
-          (expr("cast((n_hits * 1000000L + n_exact div 2) div n_exact " +
-            "as bigint)") / lit(1e6)).as("recall"))
+      recallReport(exact, Catalog.queries("p15_sim_ivf")(s, dir))
     }, Some(s"""
       WITH ${ivfOracleCtes(2)},
       ex_sims AS (SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -4382,8 +4282,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
              FROM e q JOIN e n ON q.vec_id != n.vec_id
              WHERE q.vec_id % 50 = 0),
       ex AS (SELECT query_id, neighbor_id FROM (
-               SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos_sim DESC, neighbor_id) AS rk
+               SELECT *, $cosRankSql AS rk
                FROM ex_sims) WHERE rk <= 5),
       m AS (SELECT ex.query_id, count(*) AS n_exact,
               CAST(sum(CASE WHEN iv.neighbor_id IS NOT NULL
@@ -4475,24 +4374,10 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           (expr("cast((n_contam * 1000000L + n_docs div 2) div n_docs " +
             "as bigint)") / lit(1e6)).as("contam_frac"))
     }, Some(s"""
-      WITH RECURSIVE $lshPairsOracleCtes,
-      edges AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(u, v) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-      labels AS (SELECT u AS doc_id, min(v) AS cluster_id
-                 FROM reach GROUP BY u),
-      manifest AS (SELECT d.doc_id,
-                          coalesce(l.cluster_id, d.doc_id) AS cluster_id
-                   FROM docs d LEFT JOIN labels l USING (doc_id)),
+      WITH RECURSIVE $lshManifestOracleCtes,
       spl AS (SELECT doc_id, ${splitSql("cluster_id")} AS split
               FROM manifest),
-      sh3 AS (SELECT DISTINCT doc_id,
-                array_to_string(toks[i:i+2], ' ') AS shingle
-              FROM docs, UNNEST(CASE WHEN len(toks) >= 3
-                THEN range(1, len(toks)-1) ELSE [] END) AS t(i)),
+      $sh3OracleCte,
       bench AS (SELECT shingle FROM sh3 WHERE doc_id % 100 = 0
                 GROUP BY shingle),
       hits AS (SELECT DISTINCT s.doc_id FROM sh3 s
@@ -4904,7 +4789,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       // all re-read this fixed-point projection
       val e = cut(embs(s, dir)
         .withColumn("ei",
-          expr("transform(emb, x -> cast(round(x*1000000) as bigint))"))
+          Micro.vec("emb"))
         .select(col("vec_id"), col("ei")))
       val seed = e.orderBy("vec_id").limit(1)
       var centers = cut(seed.select(col("vec_id").as("cid"),
@@ -4955,8 +4840,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
         .mkString(" UNION ALL ")
       s"""
       WITH e AS (SELECT vec_id,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x*1000000) AS BIGINT)) AS ei
+                   ${Micro.vecSql("embedding::DOUBLE[]")} AS ei
                  FROM embeddings),
       c1 AS (SELECT vec_id AS cid, ei AS ci, CAST(1 AS BIGINT) AS sel_round,
                CAST(0 AS BIGINT) AS sel_d2
@@ -5096,18 +4980,15 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
         .persistTracked()
       val pos = sims.filter(col("nlabel") === col("qlabel"))
         .groupBy("query_id").agg(max(col("cos_sim")).as("pos_sim"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
       sims.filter(col("nlabel") =!= col("qlabel"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
+        .transform(topKByCos(_, 3))
         .join(pos, Seq("query_id"), "left")
         .select(col("query_id"), col("neighbor_id").as("neg_id"),
           col("rk"), col("cos_sim").as("neg_sim"),
           coalesce(col("pos_sim"), lit(-2.0)).as("pos_sim"),
           round(coalesce(col("pos_sim"), lit(-2.0)) - col("cos_sim"), 6)
             .as("margin"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
                  FROM embeddings),
       sims AS (SELECT q.vec_id AS query_id, q.label AS qlabel,
@@ -5118,8 +4999,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       pos AS (SELECT query_id, max(cos_sim) AS pos_sim FROM sims
               WHERE nlabel = qlabel GROUP BY query_id),
       neg AS (SELECT query_id, neighbor_id, cos_sim,
-                row_number() OVER (PARTITION BY query_id
-                  ORDER BY cos_sim DESC, neighbor_id) AS rk
+                $cosRankSql AS rk
               FROM sims WHERE nlabel != qlabel)
       SELECT n.query_id, n.neighbor_id AS neg_id, n.rk,
              n.cos_sim AS neg_sim,
@@ -5413,28 +5293,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     */
   private[queries] def contamSemanticEntry: Entry =
     Entry("p81_contam_semantic", (s, dir) => {
-      val e = embs(s, dir)
-        .withColumn("ei",
-          expr("transform(emb, x -> cast(round(x*1000000) as bigint))"))
-      val cents = ivfSeedCents(e, "ei")
-      val d2 = graft.functions.SeriesKernelFunctions.int_sq_l2(col("ei"), col("ci"))
-      // persisted: the cell join reads the centroid assignment from both
-      // sides (held-out probes and corpus vectors). r15 opt: p63's
-      // slim-aggregate coarse assign — partial collect_list of slim
-      // (d2, cid) structs replaces the Window.partitionBy(vec_id) over
-      // 20x corpus rows with embedding payloads (same (d2, cid) order,
-      // rk = position + 1)
-      val probed = e.join(broadcast(cents))
-        .select(col("vec_id"), col("emb"), col("cid"), d2.as("d2"))
-        .groupBy("vec_id")
-        .agg(max(col("emb")).as("emb"), // constant within the group
-          collect_list(struct(col("d2"), col("cid"))).as("ds"))
-        .select(col("vec_id"), col("emb"),
-          posexplode(expr("slice(array_sort(ds), 1, 2)"))
-            .as(Seq("cpos", "t")))
-        .select(col("vec_id"), col("emb"), col("t.cid").as("cell"),
-          (col("cpos") + 1).as("rk"))
-        .persistTracked()
+      val probed = ivfProbed(s, dir, 2)
       val tests = probed.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("test_id"), col("emb").as("temb"),
           col("cell"))
@@ -5445,18 +5304,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
           round(VectorOps.cosine(col("emb"), col("temb")), 6).as("cos_sim"))
         .filter(col("cos_sim") >= 0.2)
     }, Some(s"""
-      WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x*1000000) AS BIGINT)) AS ei
-                 FROM embeddings),
-      cents AS (${ivfSeedDuck("e", "ei")}),
-      dists AS (SELECT e.vec_id, e.emb, c.cid,
-                  list_sum(list_transform(range(1, len(e.ei)+1),
-                    i -> (e.ei[i] - c.ci[i]) * (e.ei[i] - c.ci[i]))) AS d2
-                FROM e, cents c),
-      ranked AS (SELECT vec_id, emb, cid AS cell,
-                   row_number() OVER (PARTITION BY vec_id
-                     ORDER BY d2, cid) AS rk FROM dists),
+      WITH $ivfRankedOracleCtes,
       tests AS (SELECT vec_id AS test_id, emb AS temb, cell
                 FROM ranked WHERE vec_id % 50 = 0 AND rk <= 2),
       corpus AS (SELECT vec_id, emb, cell
@@ -5695,15 +5543,11 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     * products to be exact — the entry's hard input bound.
     */
   private[queries] def splitParityEntry: Entry = {
-    import graft.functions.{HashScheme => H}
     Entry("p84_split_parity", (s, dir) => {
       val sp = docs(s, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          expr(H.h32Spark("concat(cast(doc_id as string), ':split')") +
-            " % 100").as("bucket"))
-        .withColumn("split",
-          when(col("bucket") < 90, "train")
-            .when(col("bucket") < 95, "val").otherwise("test"))
+          splitBucket("doc_id").as("bucket"))
+        .withColumn("split", splitOf(col("bucket")))
       val totals = sp.groupBy("split").agg(count(lit(1)).as("n"))
       val ta = totals.select(col("split").as("split_a"), col("n").as("n_a"))
       val tb = totals.select(col("split").as("split_b"), col("n").as("n_b"))
@@ -5755,10 +5599,8 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
             (col("n_a") * col("n_b")).cast("double"), 6).as("tv6"))
     }, Some(s"""
       WITH sp AS (SELECT doc_id, lang, source, n_chars,
-                    CASE WHEN b < 90 THEN 'train'
-                         WHEN b < 95 THEN 'val' ELSE 'test' END AS split
-                  FROM (SELECT *, ${H.h32Duck(
-                    "CAST(doc_id AS VARCHAR) || ':split'")} % 100 AS b
+                    ${splitCaseSql("b")} AS split
+                  FROM (SELECT *, ${splitBucketSql("doc_id")} AS b
                         FROM documents)),
       totals AS (SELECT split, CAST(count(*) AS BIGINT) AS n
                  FROM sp GROUP BY split),
@@ -6225,10 +6067,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
       qualbad AS (SELECT doc_id FROM sig
                   WHERE n_toks < 30 OR (n_types / n_toks) < 0.35
                      OR (max_tok / n_toks) > 0.15),
-      sh3 AS (SELECT DISTINCT doc_id,
-                array_to_string(toks[i:i+2], ' ') AS shingle
-              FROM docs, UNNEST(CASE WHEN len(toks) >= 3
-                THEN range(1, len(toks)-1) ELSE [] END) AS t(i)),
+      $sh3OracleCte,
       bench AS (SELECT DISTINCT shingle FROM sh3 WHERE doc_id % 100 = 0),
       contam AS (SELECT DISTINCT s.doc_id
                  FROM sh3 s JOIN bench USING (shingle)
@@ -6329,7 +6168,6 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
   private[queries] def splitEmbParityEntry: Entry = {
     import graft.functions.{HashScheme => H}
     Entry("p92_split_emb_parity", (s, dir) => {
-      val dec = (c: Column) => c.cast("decimal(38,0)")
       val sums = embs(s, dir)
         .withColumn("split", expr(
           H.h32Spark("concat(cast(vec_id as string), ':esplit')") +
@@ -6339,7 +6177,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
             .when(col("split") < 95, "val").otherwise("test"))
         .select(col("split"), col("label"),
           posexplode(col("emb")).as(Seq("dim", "x")))
-        .withColumn("x6", expr("cast(round(x * 1e6) as bigint)"))
+        .withColumn("x6", Micro.of("x"))
         .groupBy("split", "label", "dim")
         .agg(sum(col("x6")).as("s6"), count(lit(1)).as("n"))
       val a = sums.select(col("split").as("split_a"), col("label"),
@@ -6364,8 +6202,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
             6).as("centroid_dist6"))
     }, Some(s"""
       WITH e AS (SELECT vec_id, label,
-                   list_transform(embedding::DOUBLE[],
-                     x -> CAST(round(x * 1e6) AS BIGINT)) AS x6,
+                   ${Micro.vecSql("embedding::DOUBLE[]")} AS x6,
                    CASE WHEN h < 90 THEN 'train'
                         WHEN h < 95 THEN 'val' ELSE 'test' END AS split
                  FROM (SELECT *, ${H.h32Duck(
@@ -6731,38 +6568,31 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     auditOne(mOcc, "minhash").unionAll(auditOne(sOcc, "simhash"))
   }
 
-  private[queries] def lshCapAuditEntry: Entry =
+  private[queries] def lshCapAuditEntry: Entry = {
+    // lshCapAudit's auditOne in DuckDB: CTE `cte` over occupancies `occ`
+    def auditSql(cte: String, family: String, occ: String) =
+      s"""$cte AS (SELECT '$family' AS family,
+               CAST($LshBucketCap AS BIGINT) AS cap,
+               CAST(count(*) AS BIGINT) AS n_buckets,
+               CAST(max(occ) AS BIGINT) AS max_occ,
+               CAST(sum(CASE WHEN occ > $LshBucketCap THEN 1 ELSE 0 END)
+                 AS BIGINT) AS n_over_cap,
+               CAST(sum(CASE WHEN occ > $LshBucketCap THEN occ ELSE 0 END)
+                 AS BIGINT) AS skipped_members,
+               CAST(sum(CASE WHEN occ > $LshBucketCap
+                 THEN occ * (occ - 1) // 2 ELSE 0 END) AS BIGINT)
+                 AS skipped_pairs
+             FROM $occ)"""
     Entry("p97_lsh_cap_audit", (s, dir) => lshCapAudit(docs(s, dir)),
       Some(s"""
       WITH $lshBandedOracleCtes,
       $simhashSeg0OracleCtes,
       occ_m AS (SELECT count(*) AS occ FROM banded0 GROUP BY band, bucket),
       occ_s AS (SELECT count(*) AS occ FROM seg0 GROUP BY seg, val),
-      am AS (SELECT 'minhash' AS family,
-               CAST($LshBucketCap AS BIGINT) AS cap,
-               CAST(count(*) AS BIGINT) AS n_buckets,
-               CAST(max(occ) AS BIGINT) AS max_occ,
-               CAST(sum(CASE WHEN occ > $LshBucketCap THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_over_cap,
-               CAST(sum(CASE WHEN occ > $LshBucketCap THEN occ ELSE 0 END)
-                 AS BIGINT) AS skipped_members,
-               CAST(sum(CASE WHEN occ > $LshBucketCap
-                 THEN occ * (occ - 1) // 2 ELSE 0 END) AS BIGINT)
-                 AS skipped_pairs
-             FROM occ_m),
-      asx AS (SELECT 'simhash' AS family,
-               CAST($LshBucketCap AS BIGINT) AS cap,
-               CAST(count(*) AS BIGINT) AS n_buckets,
-               CAST(max(occ) AS BIGINT) AS max_occ,
-               CAST(sum(CASE WHEN occ > $LshBucketCap THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_over_cap,
-               CAST(sum(CASE WHEN occ > $LshBucketCap THEN occ ELSE 0 END)
-                 AS BIGINT) AS skipped_members,
-               CAST(sum(CASE WHEN occ > $LshBucketCap
-                 THEN occ * (occ - 1) // 2 ELSE 0 END) AS BIGINT)
-                 AS skipped_pairs
-             FROM occ_s)
+      ${auditSql("am", "minhash", "occ_m")},
+      ${auditSql("asx", "simhash", "occ_s")}
       SELECT * FROM am UNION ALL SELECT * FROM asx"""))
+  }
 
   /** p98: winnowed-fingerprint containment — the MOSS overlap measure
     * over p36's fingerprint sets: |F_A ∩ F_B| / min(|F_A|, |F_B|) for
@@ -6824,6 +6654,110 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
                    JOIN cnt cb ON p.doc_b = cb.doc_id
       WHERE round(p.common / least(ca.n, cb.n), 6) >= 0.5"""))
 
+  /** p60's fusion arms: the lexical (BM25, rank `rl`) and dense
+    * (brute cosine, rank `rd`) per-query top-10 lists over
+    * (query_id, doc_id). Test hook: ScalePropertiesSpec pins each arm
+    * unique on (query_id, doc_id), the premise of [[rrfFuse]].
+    */
+  private[graft] def p60Arms(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val lex = lexTop10(bm25Scores(s, dir))
+    val e = embs(s, dir)
+    val wd = Window.partitionBy("query_id")
+      .orderBy(col("cs").desc, col("doc_id"))
+    val dense = e.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
+      .join(e.select(col("vec_id").as("doc_id"), col("emb").as("nemb")),
+        col("doc_id") =!= col("query_id"))
+      .select(col("query_id"), col("doc_id"),
+        round(graft.functions.VectorOps.cosine(col("qemb"),
+          col("nemb")), 6).as("cs"))
+      .withColumn("rd", row_number().over(wd).cast("long"))
+      .filter(col("rd") <= 10)
+      .select(col("query_id"), col("doc_id"), col("rd"))
+    (lex, dense)
+  }
+
+  /** p99's fusion arms: the impact-prefix lexical top-10 (`rl`)
+    * and the IVF-PQ dense top-10 (`rd`). Test hook, as [[p60Arms]].
+    */
+  private[graft] def p99Arms(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val lex = lexTop10(bm25PrefixScores(s, dir, P99ImpactB))
+    val dense = ivfPqTopK(s, dir, qMod = 100, k = 10)
+      .select(col("query_id"), col("neighbor_id").as("doc_id"),
+        col("rk").as("rd"))
+    (lex, dense)
+  }
+
+  /** A lexical score list's per-query top-10 by (score6 DESC, doc_id),
+    * rank `rl`.
+    */
+  private def lexTop10(scores: DataFrame): DataFrame =
+    scores.withColumn("rl", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("score6").desc, col("doc_id"))).cast("long"))
+      .filter(col("rl") <= 10)
+      .select(col("query_id"), col("doc_id"), col("rl"))
+
+  /** [[lexTop10]]'s DuckDB twin: CTE `lex` over score relation `src`. */
+  private def lexTop10Sql(src: String): String =
+    s"""lex AS (SELECT query_id, doc_id, rl FROM (
+                SELECT query_id, doc_id,
+                       CAST(row_number() OVER (PARTITION BY query_id
+                         ORDER BY score6 DESC, doc_id) AS BIGINT) AS rl
+                FROM $src) WHERE rl <= 10)"""
+
+  /** [[rrfFuse]]'s DuckDB twin: the full outer join of CTEs `lex` and
+    * `dense`, ranked; ends the query.
+    */
+  private def rrfFuseSql(dense: String): String =
+    s"""fused AS (SELECT query_id, doc_id, rl, rd,
+                  coalesce(1000000 // (60 + rl), 0) +
+                  coalesce(1000000 // (60 + rd), 0) AS rrf6
+                FROM lex FULL JOIN $dense USING (query_id, doc_id))
+      SELECT query_id, doc_id, rl IS NOT NULL AS in_lexical,
+             rd IS NOT NULL AS in_dense, rrf6 / 1e6 AS rrf, rk
+      FROM (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+              ORDER BY rrf6 DESC, doc_id) AS BIGINT) AS rk
+            FROM fused) WHERE rk <= 5"""
+
+  /** Exact integer RRF of two per-query top-10 arms, lexical
+    * (query_id, doc_id, rl) and dense (query_id, doc_id, rd): rrf6 =
+    * Σ 1e6 // (60 + rank), final top-5 by (rrf6 DESC, doc_id). Each
+    * arm must be unique on (query_id, doc_id), pinned per arm by
+    * ScalePropertiesSpec through [[p60Arms]] and [[p99Arms]].
+    */
+  private def rrfFuse(lex: DataFrame, dense: DataFrame): DataFrame = {
+    val wf = Window.partitionBy("query_id")
+      .orderBy(col("rrf6").desc, col("doc_id"))
+    // Both arms are UNIQUE on (query_id, doc_id) — each is a
+    // row_number()<=10 filter — so the full outer join is equivalent to
+    // UNION + one groupBy(query_id, doc_id) with max() folding the
+    // at-most-one non-null rank per side (max == coalesce on singleton
+    // groups). A full-outer SortMergeJoin would re-exchange and re-sort
+    // both arms (each already partitioned by query_id from its own rank
+    // window) and the final window would exchange a third time; the
+    // explicit repartition(query_id) satisfies the aggregate (a subset
+    // of its grouping keys) AND the fusion window: ONE exchange.
+    lex
+      .select(col("query_id"), col("doc_id"), col("rl"),
+        lit(null).cast("long").as("rd"))
+      .unionByName(dense.select(col("query_id"), col("doc_id"),
+        lit(null).cast("long").as("rl"), col("rd")))
+      .repartition(col("query_id"))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(max(col("rl")).as("rl"), max(col("rd")).as("rd"))
+      .withColumn("rrf6",
+        expr("coalesce(1000000 div (60 + rl), 0L) + " +
+          "coalesce(1000000 div (60 + rd), 0L)"))
+      .withColumn("rk", row_number().over(wf).cast("long"))
+      .filter(col("rk") <= 5)
+      .select(col("query_id"), col("doc_id"),
+        col("rl").isNotNull.as("in_lexical"),
+        col("rd").isNotNull.as("in_dense"),
+        (col("rrf6") / 1e6).as("rrf"), col("rk"))
+  }
+
   /** Impact-prefix length for p99's lexical arm: per term, the top-B
     * postings by exact BM25 contribution generate candidates. lazy:
     * referenced from `entries`, which initializes first.
@@ -6847,70 +6781,19 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     * WindowGroupLimit-pushed rank limits.
     */
   private[queries] def hybridRrfAnnEntry: Entry =
-    Entry("p99_hybrid_rrf_ann", (s, dir) => {
-      val wl = Window.partitionBy("query_id")
-        .orderBy(col("score6").desc, col("doc_id"))
-      val lex = bm25PrefixScores(s, dir, P99ImpactB)
-        .withColumn("rl", row_number().over(wl).cast("long"))
-        .filter(col("rl") <= 10)
-        .select(col("query_id"), col("doc_id"), col("rl"))
-      val dense = ivfPqTopK(s, dir, qMod = 100, k = 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rk").as("rd"))
-      val wf = Window.partitionBy("query_id")
-        .orderBy(col("rrf6").desc, col("doc_id"))
-      // r15 opt (VERDICT r14 #4, guide §2.4): the fusion used to be a
-      // full-outer SortMergeJoin on (query_id, doc_id) that
-      // re-exchanged AND re-sorted both top-10 arms (each already
-      // partitioned by query_id from its own rank window), then the
-      // final window exchanged a third time. Both arms are UNIQUE on
-      // (query_id, doc_id) — each is a row_number()<=10 filter — so
-      // the full outer join is equivalent to UNION + one
-      // groupBy(query_id, doc_id) with max() folding the at-most-one
-      // non-null rank per side (max == coalesce on singleton groups).
-      // The explicit repartition(query_id) satisfies the aggregate
-      // (subset of its grouping keys) AND the fusion window: the
-      // fusion runs in ONE exchange instead of three.
-      lex
-        .select(col("query_id"), col("doc_id"), col("rl"),
-          lit(null).cast("long").as("rd"))
-        .unionByName(dense.select(col("query_id"), col("doc_id"),
-          lit(null).cast("long").as("rl"), col("rd")))
-        .repartition(col("query_id"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(max(col("rl")).as("rl"), max(col("rd")).as("rd"))
-        .withColumn("rrf6",
-          expr("coalesce(1000000 div (60 + rl), 0L) + " +
-            "coalesce(1000000 div (60 + rd), 0L)"))
-        .withColumn("rk", row_number().over(wf).cast("long"))
-        .filter(col("rk") <= 5)
-        .select(col("query_id"), col("doc_id"),
-          col("rl").isNotNull.as("in_lexical"),
-          col("rd").isNotNull.as("in_dense"),
-          (col("rrf6") / 1e6).as("rrf"), col("rk"))
-    }, Some(s"""
+    Entry("p99_hybrid_rrf_ann", (s, dir) =>
+      (rrfFuse _).tupled(p99Arms(s, dir)),
+      Some(s"""
       WITH ${bm25PrefixCte(P99ImpactB)},
       ${ivfPqOracleCtes(100)},
-      lex AS (SELECT query_id, doc_id, rl FROM (
-                SELECT query_id, doc_id,
-                       CAST(row_number() OVER (PARTITION BY query_id
-                         ORDER BY score6 DESC, doc_id) AS BIGINT) AS rl
-                FROM psc) WHERE rl <= 10),
+      ${lexTop10Sql("psc")},
       den AS (SELECT query_id, neighbor_id AS doc_id, rk AS rd FROM (
                 SELECT query_id, neighbor_id,
                        CAST(row_number() OVER (PARTITION BY query_id
                          ORDER BY adot12 DESC, neighbor_id) AS BIGINT)
                          AS rk
                 FROM annsc) WHERE rk <= 10),
-      fused AS (SELECT query_id, doc_id, rl, rd,
-                  coalesce(1000000 // (60 + rl), 0) +
-                  coalesce(1000000 // (60 + rd), 0) AS rrf6
-                FROM lex FULL JOIN den USING (query_id, doc_id))
-      SELECT query_id, doc_id, rl IS NOT NULL AS in_lexical,
-             rd IS NOT NULL AS in_dense, rrf6 / 1e6 AS rrf, rk
-      FROM (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY rrf6 DESC, doc_id) AS BIGINT) AS rk
-            FROM fused) WHERE rk <= 5"""), bench = true)
+      ${rrfFuseSql("den")}"""), bench = true)
 
   /** p100: recall@5 of the SHIPPED IVF-PQ serving path against the
     * exact integer-dot top-5 — the standing quality monitor every ANN
@@ -6934,9 +6817,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
     */
   private[queries] def ivfPqRecallEntry: Entry =
     Entry("p100_ivfpq_recall", (s, dir) => {
-      val e6 = embs(s, dir).select(col("vec_id"),
-        expr("transform(emb, x -> cast(round(x * 1e6) as bigint))")
-          .as("v6"))
+      val e6 = embs(s, dir).select(col("vec_id"), Micro.vec("emb").as("v6"))
       val q = e6.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("query_id"), col("v6").as("q6"))
       val wE = Window.partitionBy("query_id")
@@ -6949,15 +6830,7 @@ ${bm25ContribDuck("pp.idf6", "pp.tf", "pp.dl")} AS c6
         .withColumn("rk", row_number().over(wE))
         .filter(col("rk") <= 5)
         .select(col("query_id"), col("neighbor_id"))
-      val ann = ivfPqTopK(s, dir, qMod = 50, k = 5)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      exact.join(ann, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
-        .select(col("query_id"), col("n_exact"), col("n_hits"),
-          (expr("cast((n_hits * 1000000L + n_exact div 2) div n_exact " +
-            "as bigint)") / lit(1e6)).as("recall"))
+      recallReport(exact, ivfPqTopK(s, dir, qMod = 50, k = 5))
     }, Some(s"""
       WITH ${ivfPqOracleCtes(50)},
       exd AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,

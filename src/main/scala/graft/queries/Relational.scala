@@ -647,7 +647,7 @@ object Relational {
     Entry("q27_resample_ffill", (s, dir) => {
       val e = Tables.events(s, dir)
         .select(col("event_type"), date_trunc("hour", col("ts")).as("hr"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"))
+          Micro.of("value").as("v6"))
       val buckets = e.groupBy("event_type", "hr")
         .agg(count(lit(1)).as("n_events"), sum("v6").as("vsum"))
       val grid = buckets.groupBy("event_type")
@@ -664,10 +664,10 @@ object Relational {
           col("n_events"),
           last(col("mean_v"), ignoreNulls = true).over(w).as("value_ffill"),
           (col("n_events") === 0L).as("is_gap"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type,
                    CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hr,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6 FROM events),
+                   ${Micro.sql("value")} AS v6 FROM events),
       b AS (SELECT event_type, hr, count(*) AS n_events,
               CAST(sum(v6) AS BIGINT) AS vsum
             FROM e GROUP BY 1, 2),
@@ -829,10 +829,10 @@ object Relational {
         Tables.events(s, dir).select(col("user_id"), col("ts"),
           col("value")),
         "5 minutes", "0 seconds")
-    }, Some("""
+    }, Some(s"""
       WITH ordered AS (
         SELECT user_id, ts, event_id,
-               CAST(round(value * 1e6) AS BIGINT) AS v6,
+               ${Micro.sql("value")} AS v6,
                CASE WHEN lag(ts) OVER w IS NULL
                          OR ts - lag(ts) OVER w > INTERVAL 5 MINUTE
                     THEN 1 ELSE 0 END AS new_session
@@ -1021,7 +1021,7 @@ object Relational {
       Tables.events(s, dir)
         .select(col("event_type"), col("ts"), col("event_id"),
           col("ts").cast("date").as("day"),
-          expr("cast(round(value * 1e6) as bigint)").as("v6"),
+          Micro.of("value").as("v6"),
           unix_micros(col("ts")).as("us"))
         .withColumn("next_us",
           coalesce(lead(col("us"), 1).over(wD),
@@ -1036,10 +1036,10 @@ object Relational {
           count(lit(1)).as("n_events"))
         .select(col("event_type"), col("day"),
           (col("twap_micro") / lit(1e6)).as("twap"), col("n_events"))
-    }, Some("""
+    }, Some(s"""
       WITH e AS (SELECT event_type, ts, event_id,
                    CAST(ts AS DATE) AS day,
-                   CAST(round(value * 1e6) AS BIGINT) AS v6,
+                   ${Micro.sql("value")} AS v6,
                    epoch_us(ts) AS us
                  FROM events),
       d AS (SELECT event_type, day, v6, us,
@@ -1120,17 +1120,17 @@ object Relational {
     Entry("q40_histogram", (s, dir) => {
       Tables.events(s, dir)
         .select(col("event_type"),
-          least(greatest(expr(
-            "cast(round(value * 1e6) as bigint) div 25000000"), lit(0L)),
+          least(greatest(expr(s"${Micro.sql("value")} div 25000000"),
+            lit(0L)),
             lit(19L)).as("bucket"))
         .groupBy("event_type", "bucket")
         .agg(count(lit(1)).as("cnt"))
         .withColumn("bin_lo", (col("bucket") * 25L).cast("double"))
         .withColumn("bin_hi", ((col("bucket") + 1L) * 25L).cast("double"))
         .select("event_type", "bucket", "bin_lo", "bin_hi", "cnt")
-    }, Some("""
+    }, Some(s"""
       WITH b AS (SELECT event_type,
-                   least(greatest(CAST(round(value * 1e6) AS BIGINT)
+                   least(greatest(${Micro.sql("value")}
                      // 25000000, 0), 19) AS bucket
                  FROM events)
       SELECT event_type, bucket,
@@ -1155,7 +1155,7 @@ object Relational {
     Entry("q41_skew_salted_join", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("event_type"), col("event_id"),
-          expr("cast(round(value * 1e6) as bigint)").as("value_micro"))
+          Micro.of("value").as("value_micro"))
       val dim = ev.groupBy("event_type")
         .agg(count(lit(1)).as("type_cnt"), sum("value_micro").as("s6"))
       graft.operators.SkewOps
@@ -1163,9 +1163,9 @@ object Relational {
         .select(col("event_type"), col("event_id"), col("value_micro"),
           col("type_cnt"),
           round(col("value_micro") / col("s6"), 9).as("type_share"))
-    }, Some("""
+    }, Some(s"""
       WITH ev AS (SELECT event_type, event_id,
-                    CAST(round(value * 1e6) AS BIGINT) AS value_micro
+                    ${Micro.sql("value")} AS value_micro
                   FROM events),
       dim AS (SELECT event_type, count(*) AS type_cnt,
                 CAST(sum(value_micro) AS BIGINT) AS s6

@@ -183,4 +183,19 @@ class EdgeCasesSpec extends AnyFunSuite with SparkTestBase {
         .collect().isEmpty, s"$n should be empty on a one-row series")
     }
   }
+
+  test("money guard rejects a price that HALF_UP-rounds past DECIMAL(8,2)") {
+    import spark.implicits._
+    val orders = Seq(1.0).toDF("o_totalprice")
+    def violations(price: Double) = Verify.moneyViolations(Map(
+      "lineitem" -> Seq((price, 1.0, 0.05))
+        .toDF("l_extendedprice", "l_quantity", "l_discount"),
+      "orders" -> orders))
+    assert(violations(999999.99).isEmpty)
+    // below the old 1e6 bound, yet its cast rounds to 1000000.00 and
+    // would NULL out of every money sum
+    val edge = violations(999999.995)
+    assert(edge.size === 1 && edge.head.startsWith("lineitem.l_extendedprice"),
+      edge)
+  }
 }

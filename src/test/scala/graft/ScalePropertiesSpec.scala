@@ -1504,6 +1504,21 @@ class ScalePropertiesSpec extends AnyFunSuite with SparkTestBase {
       "q01 lost the two-tier long money sum:\n" + p)
   }
 
+  test("p60/p99: each RRF fusion arm is unique on (query_id, doc_id) " +
+    "— the premise under which UNION + groupBy.max IS the full outer " +
+    "join") {
+    for ((entry, (lex, dense)) <- Seq(
+        "p60" -> queries.Pipeline.p60Arms(spark, sfDir),
+        "p99" -> queries.Pipeline.p99Arms(spark, sfDir));
+        (arm, df) <- Seq("lexical" -> lex, "dense" -> dense)) {
+      val n = df.count()
+      assert(n > 0, s"$entry $arm arm is empty: the pin would be vacuous")
+      assert(n === df.select("query_id", "doc_id").distinct().count(),
+        s"$entry's $arm arm repeats a (query_id, doc_id): UNION + " +
+          "groupBy.max would collapse rows the full outer join keeps")
+    }
+  }
+
   test("p87: gram postings are pruned to pair-listed docs BEFORE the " +
     "position explode — the corpus never explodes 8-grams globally") {
     val p = plan("p87_longest_common_run")
