@@ -11,6 +11,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * twelve bespoke processors; the stream==batch pins then hold for
   * every op through the same two processors below.
   *
+  * Both read a key's state once per batch: `ValueState.get()` returns
+  * null for a key with no value, so `Option(state.get())` is the
+  * previous state (`exists()` first would be a second store read).
+  *
   * State lives in the RocksDB store the API requires
   * ([[graft.GraftSession.create]] sets it): one API for value/list/map
   * state, timers decoupled from state rows, and the backend a
@@ -43,8 +47,7 @@ object Tws {
 
     override def handleInputRows(key: K, rows: Iterator[I],
         timerValues: TimerValues): Iterator[O] = {
-      val (next, out) = fold(key,
-        if (state.exists()) Some(state.get()) else None, rows)
+      val (next, out) = fold(key, Option(state.get()), rows)
       state.update(next)
       out
     }
@@ -69,8 +72,7 @@ object Tws {
 
     override def handleInputRows(key: K, rows: Iterator[I],
         timerValues: TimerValues): Iterator[O] = {
-      val (next, out) = fold(key,
-        if (state.exists()) Some(state.get()) else None, rows)
+      val (next, out) = fold(key, Option(state.get()), rows)
       state.update(next)
       // re-arm: TWS registers timers cumulatively, so drop the stale
       // deadline first — the live deadline must only ever come from

@@ -20,6 +20,9 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.stateStore.providerClass",
         GraftSession.RocksDbStateStore)
+      .config(graft.streaming.LocalCheckpointFileManager.ClassKey,
+        GraftSession.CheckpointFileManagerClass)
+      .config("spark.broadcast.blockSize", GraftSession.BroadcastBlockSize)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,55 +85,135 @@ class StreamingDetectorSpec extends AnyFunSuite with SparkTestBase {
     } finally query.stop()
   }
 
-  test("restart from a real checkpoint after batch k == uninterrupted " +
-    "run") {
-    val sparkSession = spark
-    import sparkSession.implicits._
-    val feed = Seq(
-      Seq(pt("cpu", 3000, 2.0), pt("cpu", 1000, 1.0), pt("mem", 1000, 10.0)),
-      Seq(pt("cpu", 2000, 1.5), pt("mem", 2000, 11.0), pt("cpu", 4000, 1.8)),
-      Seq(pt("cpu", 5000, 9.0), pt("mem", 3000, 55.0)),
-      Seq(pt("cpu", 6000, 1.2), pt("mem", 4000, 12.0), pt("disk", 1000, 3.0)))
-    val root = java.nio.file.Files.createTempDirectory("graft-detector-ckpt")
+  private val feed = Seq(
+    Seq(pt("cpu", 3000, 2.0), pt("cpu", 1000, 1.0), pt("mem", 1000, 10.0)),
+    Seq(pt("cpu", 2000, 1.5), pt("mem", 2000, 11.0), pt("cpu", 4000, 1.8)),
+    Seq(pt("cpu", 5000, 9.0), pt("mem", 3000, 55.0)),
+    Seq(pt("cpu", 6000, 1.2), pt("mem", 4000, 12.0), pt("disk", 1000, 3.0)))
 
-    // one query lifetime over `batches` of `input`, checkpointed at
-    // `ckpt`: the scores it emitted, by (series, ts)
-    def run(input: MemoryStream[SeriesPoint], ckpt: String,
-        batches: Seq[Seq[SeriesPoint]]): Seq[(String, Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer[AnomalyScore]()
-      val sink: (Dataset[AnomalyScore], Long) => Unit =
-        (ds, _) => out ++= ds.collect()
-      val q = StreamingDetector.scoreTws(input.toDS(), conf).writeStream
-        .foreachBatch(sink)
+  private val graftManager = graft.GraftSession.CheckpointFileManagerClass
+  private val sparkManager =
+    classOf[FileContextBasedCheckpointFileManager].getName
+
+  /** One query lifetime of `score` over `batches` of `input`,
+    * checkpointed at `ckpt` through the checkpoint file manager class
+    * `manager`: the scores it emitted, by (series, ts).
+    */
+  private def run(score: Dataset[SeriesPoint] => Dataset[AnomalyScore])(
+      input: MemoryStream[SeriesPoint], ckpt: String,
+      batches: Seq[Seq[SeriesPoint]], manager: String = graftManager)
+      : Seq[(String, Long, Double)] = {
+    val out = scala.collection.mutable.ArrayBuffer[AnomalyScore]()
+    val sink: (Dataset[AnomalyScore], Long) => Unit =
+      (ds, _) => out ++= ds.collect()
+    spark.conf.set(LocalCheckpointFileManager.ClassKey, manager)
+    try {
+      val q = score(input.toDS()).writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt).start()
       try batches.foreach { b =>
         input.addData(b)
         q.processAllAvailable()
       } finally q.stop()
-      out.map(a => (a.series, a.ts.getTime, a.prob)).toSeq
-    }
+    } finally spark.conf.set(LocalCheckpointFileManager.ClassKey, graftManager)
+    out.map(a => (a.series, a.ts.getTime, a.prob)).toSeq
+  }
 
-    try {
-      val whole = run(MemoryStream[SeriesPoint](sparkSession),
-        s"$root/whole", feed)
-      val k = 2
+  private def withRoot(body: String => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft-detector-ckpt")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    try body(root.toString) finally rm(root.toFile)
+  }
+
+  /** `feed` through `score` stopped after batch `k` and resumed on the
+    * same checkpoint, each half under every pair of checkpoint file
+    * managers (graft's throughout, Spark's default then graft's, and
+    * back): every pairing must equal the uninterrupted run.
+    */
+  private def restartsEqualWhole(
+      score: Dataset[SeriesPoint] => Dataset[AnomalyScore],
+      feed: Seq[Seq[SeriesPoint]], k: Int, root: String)
+      : Seq[(String, Long, Double)] = {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val whole = run(score)(MemoryStream[SeriesPoint](sparkSession),
+      s"$root/whole", feed)
+    assert(whole.size === feed.map(_.size).sum)
+    Seq(graftManager -> graftManager, sparkManager -> graftManager,
+      graftManager -> sparkManager).foreach { case (m1, m2) =>
+      val ckpt = s"$root/restart-${m1.hashCode}-${m2.hashCode}"
       val input = MemoryStream[SeriesPoint](sparkSession)
-      val before = run(input, s"$root/restart", feed.take(k))
+      val before = run(score)(input, ckpt, feed.take(k), m1)
       // a fresh query on the same checkpoint resumes offsets and state
-      val after = run(input, s"$root/restart", feed.drop(k))
-      assert(whole.size === feed.map(_.size).sum)
-      assert((before ++ after).sorted === whole.sorted)
+      val after = run(score)(input, ckpt, feed.drop(k), m2)
+      assert((before ++ after).sorted === whole.sorted, s"$m1 then $m2")
+    }
+    whole
+  }
+
+  test("restart from a real checkpoint after batch k == uninterrupted " +
+    "run") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val score = StreamingDetector.scoreTws(_: Dataset[SeriesPoint], conf)
+    withRoot { root =>
+      val k = 2
+      val whole = restartsEqualWhole(score, feed, k, root)
       // the restarted half really depends on recovered state: a cold
       // start over batches k.. scores differently
-      val cold = run(MemoryStream[SeriesPoint](sparkSession),
+      val resumed = feed.drop(k).flatten.map(p => (p.series, p.ts.getTime))
+        .toSet
+      val cold = run(score)(MemoryStream[SeriesPoint](sparkSession),
         s"$root/cold", feed.drop(k))
-      assert(cold.sorted !== after.sorted)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(root.toFile)
+      assert(cold.sorted !==
+        whole.filter(s => resumed((s._1, s._2))).sorted)
     }
+  }
+
+  test("scoreTws(idleTtl): restart from a real checkpoint, across a " +
+    "checkpoint-manager switch both ways, == uninterrupted run") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    // event time rises batch over batch (nothing is late); mem goes
+    // idle after batch 2 (high-water 3 s, deadline 5 s), the watermark
+    // passes its deadline after batch 3, so it re-arrives cold in the
+    // resumed half, from the timer the first half checkpointed
+    val ttlFeed = Seq(
+      Seq(pt("cpu", 1000, 1.0), pt("mem", 1000, 10.0), pt("cpu", 2000, 1.5)),
+      Seq(pt("cpu", 3000, 2.0), pt("mem", 3000, 11.0), pt("cpu", 4000, 1.8)),
+      Seq(pt("cpu", 5000, 9.0), pt("cpu", 6000, 1.2), pt("disk", 6000, 3.0)),
+      Seq(pt("mem", 8000, 55.0), pt("cpu", 7000, 1.1)),
+      Seq(pt("mem", 9000, 12.0), pt("cpu", 9000, 1.3), pt("disk", 9000, 3.1)))
+    val ttl = (ds: Dataset[SeriesPoint]) => StreamingDetector.scoreTws(
+      ds.withWatermark("ts", "0 seconds"), conf,
+      Some(java.time.Duration.ofSeconds(2)))
+    withRoot { root =>
+      val whole = restartsEqualWhole(ttl, ttlFeed, 3, root)
+      // eviction really happened: without a TTL mem continues warm
+      val kept = run(StreamingDetector.scoreTws(_: Dataset[SeriesPoint], conf))(
+        MemoryStream[SeriesPoint](sparkSession), s"$root/kept", ttlFeed)
+      assert(whole.sorted !== kept.sorted)
+    }
+  }
+
+  test("one state-store read per key per batch") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val input = MemoryStream[SeriesPoint](sparkSession)
+    val q = StreamingDetector.scoreTws(input.toDS(), conf).writeStream
+      .format("memory").queryName("gets_sink").outputMode("append").start()
+    try {
+      val keys = 40
+      val gets = (1 to 3).map { b =>
+        input.addData((0 until keys).map(i => pt(s"s$i", b * 1000L, b)): _*)
+        q.processAllAvailable()
+        q.lastProgress.stateOperators.head.customMetrics.get("rocksdbGetCount")
+      }
+      // 2 per key; reading exists() before get() made it 3 once a key
+      // had state
+      assert(gets.forall(_ == 2L * keys), s"gets per batch $gets")
+    } finally q.stop()
   }
 }
