@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * #3): a FIXED, catalog-independent synthetic job — range → hash-agg
   * over 1 000 keys → noop — whose cost depends only on the host
   * (cores, co-tenant load, GC pressure), never on library code. Every
-  * measurement harness (Bench blocks, StreamBench feeds) records this
-  * probe next to its timings so a co-tenant burst is a measured factor
-  * in the artifact instead of an unattributable table delta.
+  * measurement harness (Bench blocks, StreamBench's near-dup feeds,
+  * Verify, CurationPipeline passes) records this probe next to its
+  * timings so a co-tenant burst is a measured factor in the artifact
+  * instead of an unattributable table delta.
   *
   * NEVER change this workload — the recorded quiet-host reference
   * ([[ref]], measured round 11 on an otherwise-idle 32-core builder)

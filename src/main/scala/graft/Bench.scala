@@ -31,6 +31,18 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString).toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt.max(1)
+    // the entries to time instead of the default list (the driver sets
+    // nothing): any catalog names, checked before the session starts so
+    // a typo fails the run instead of timing nothing
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
+      .filter(_.nonEmpty)
+    val unknown = only.toSeq.flatten.filterNot(queries.Catalog.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY names no catalog " +
+        s"entry: ${unknown.mkString(", ")}")
+      sys.exit(1)
+    }
     val spark = GraftSession.create(s"local[$cpus]", cpus, "graft-bench")
 
     // xN replicated-scale mode (VERDICT r14 #2): at sf0.1 every bench
@@ -39,26 +51,16 @@ object Bench {
     // deltas at that SF partly measure constant overhead, not the
     // scale behavior the engine is built for. SPARK_GRAFT_BENCH_XN=10
     // times the HEAVY tier against a 10x key-offset replication of
-    // the corpus (ScaleSmoke's machinery, cached in /tmp across runs),
+    // the corpus (ScaleSweep.replica, cached in /tmp across runs),
     // the scale point where parallel wins are adjudicable. The driver
     // never sets this env, so default behavior is unchanged; the mode
-    // emits the same one-line JSON (plus an "xn" field) with "sf"
-    // naming the replicated dir it actually timed.
+    // emits the one-line JSON plus an "xn" field, with "sf" naming the
+    // replicated dir it actually timed, and without the core-set
+    // fields: the heavy tier leaves most of the core set unrun, so they
+    // would describe another query set under the same names.
     val xn = sys.env.get("SPARK_GRAFT_BENCH_XN").flatMap(_.toIntOption)
       .filter(_ >= 2)
-    val benchDir = xn match {
-      case Some(f) =>
-        val suffix = if (sfDir.endsWith("sf0.1")) ""
-          else "_" + new java.io.File(sfDir).getName
-        val out = s"/tmp/graft_scale_x$f$suffix"
-        if (!new java.io.File(s"$out/_SMOKE_READY_V2").exists()) {
-          System.err.println(s"[bench] replicating $sfDir x$f -> $out")
-          ScaleSmoke.replicate(spark, sfDir, out, f)
-          new java.io.File(s"$out/_SMOKE_READY_V2").createNewFile()
-        }
-        out
-      case None => sfDir
-    }
+    val benchDir = xn.fold(sfDir)(ScaleSweep.replica(spark, sfDir, _))
     // the xN heavy tier: the entries whose sf0.1 medians top the bench
     // (and whose scale behavior the round-15 items target)
     val xnTier = Seq("q04_join_multi", "a13_anomaly_perm500_chunked",
@@ -129,19 +131,19 @@ object Bench {
       "a06_anomaly_rank", "a13_anomaly_perm500_chunked",
       "p03_dedup_ngram_jaccard", "p04_dedup_minhash_lsh", "p07_sim_topk",
       "p24_contamination")
-    // local-iteration filter (driver sets nothing -> full list)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // The fixed core set runs FIRST, in a young clean heap: the heavy
     // allocators outside it (bigram census, dup-span, PageRank) leave
     // GC fragmentation behind that otherwise inflates whatever runs
     // after them on a memory-tight host — the graded core should never
     // pay for a non-core query's heap damage.
-    val listed = queries.Catalog.benchNames
-      .filter(n => only.forall(_.contains(n)))
-      // xN mode defaults to the heavy tier (SPARK_GRAFT_BENCH_ONLY
-      // still narrows further when set)
-      .filter(n => xn.isEmpty || xnTier.contains(n))
+    val bench = queries.Catalog.benchNames
+    // SPARK_GRAFT_BENCH_ONLY picks exactly what runs, in either mode
+    // (bench names in bench order, then the others as given); unset,
+    // xN mode times the heavy tier and the default mode the bench list
+    val listed = only match {
+      case Some(ns) => bench.filter(ns.contains) ++ ns.filterNot(bench.contains)
+      case None => bench.filter(n => xn.isEmpty || xnTier.contains(n))
+    }
     val names = listed.filter(coreSet) ++ listed.filterNot(coreSet)
     // per-BLOCK ambient probe (VERDICT r12 #1): one calibrate() run
     // immediately before each query's block. The run-level
@@ -252,15 +254,17 @@ object Bench {
     // raw medians moved 25% with the host.
     val coreNorm = totalCore * CalibRef / calibStart
     val totalNorm = total * CalibRef / ((calibStart + calibEnd) / 2)
+    def core(field: String): String = if (xn.isEmpty) field else ""
     val head =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
-      s""""value_min":$totalMin,"value_core":$totalCore,""" +
+      s""""value_min":$totalMin,""" + core(s""""value_core":$totalCore,""") +
       s""""calib":${r6(calibStart)},"calib_end":${r6(calibEnd)},""" +
       s""""calib_ref":$CalibRef,""" +
-      s""""value_core_norm":${r6(coreNorm)},"value_norm":${r6(totalNorm)},""" +
-      s""""core_queries":${coreSet.size - coreMissing.size},""" +
-      s""""core_missing":${coreMissing.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")},""" +
+      core(s""""value_core_norm":${r6(coreNorm)},""") +
+      s""""value_norm":${r6(totalNorm)},""" +
+      core(s""""core_queries":${coreSet.size - coreMissing.size},""" +
+        s""""core_missing":${coreMissing.map("\"" + _ + "\"")
+          .mkString("[", ",", "]")},""") +
       xn.map(f => s""""xn":$f,""").getOrElse("")
     // sidecar with the full-precision tail the line no longer carries
     try java.nio.file.Files.writeString(

@@ -86,7 +86,7 @@ object CurationPipeline {
     }
 
     // each measured pass carries its own ambient probes (the Bench/
-    // StreamBench/Verify calib discipline): the two passes run
+    // StreamBench near-dup/Verify calib discipline): the two passes run
     // minutes apart in one JVM, so a co-tenant burst during exactly
     // one of them masquerades as (or masks) the composed saving
     def probes(): (Double, Double) =

@@ -7,8 +7,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
-/** Plan-shape audits shared by ScalePropertiesSpec and the DbgWindows
-  * census main.
+/** Plan-shape audits that ScalePropertiesSpec runs over every catalog
+  * entry; `testOnly graft.ScalePropertiesSpec -- -z "unpartitioned
+  * window"` (or `-z "broadcast() hint"`) reruns one census alone.
   *
   * The one subtlety this encapsulates: `optimizedPlan` is computed
   * AFTER cache substitution, so any subtree an entry `persistTracked`s

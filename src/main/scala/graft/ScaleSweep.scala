@@ -1,9 +1,17 @@
 package graft
 
 import java.io.{File, PrintWriter}
+import java.nio.file.{Files, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.hadoop.fs.FileUtil
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
 /** Multi-point scale regression gate: times each swept entry at
-  * 1×/3×/10×/30× replicated corpora (ScaleSmoke's replicator, sf0.1
+  * 1×/3×/10×/30× replicated corpora ([[replica]] of the sf0.1
   * base; a heavy-graded tier adds a 100× point — see [[X100Names]]),
   * fits the scaling exponent α in t ≈ c·nᵅ by least squares over
   * (log n, log t), and FAILS (exit 1) when α exceeds the entry's
@@ -11,7 +19,8 @@ import java.io.{File, PrintWriter}
   * eyeball into a recorded, re-runnable artifact.
   *
   * `runMain graft.ScaleSweep [outJson] [name ...]` — defaults:
-  * `SCALE_SWEEP.json` in the cwd, the full graded set. Each point is
+  * `SCALE_SWEEP.json` in the cwd, the full graded set; a short name
+  * list is the quick linearity smoke for a plan change. Each point is
   * the best of 2 timed runs after one warmup (the same discipline as
   * Bench), with entry caches + the SQL cache cleared between points so
   * no point rides another's state.
@@ -220,16 +229,7 @@ object ScaleSweep {
     val cpus = Runtime.getRuntime.availableProcessors.min(32)
     val spark = GraftSession.create(s"local[$cpus]", cpus, "scale-sweep")
 
-    def dirFor(f: Int): String = f match {
-      case 1 => base
-      case _ =>
-        val d = s"/tmp/graft_scale_x$f"
-        if (!new File(s"$d/_SMOKE_READY_V2").exists()) {
-          ScaleSmoke.replicate(spark, base, d, f)
-          new File(s"$d/_SMOKE_READY_V2").createNewFile()
-        }
-        d
-    }
+    def dirFor(f: Int): String = if (f == 1) base else replica(spark, base, f)
     def factorsFor(name: String): Seq[Int] =
       if (X100Names.contains(name)) Factors :+ X100Factor else Factors
 
@@ -244,7 +244,7 @@ object ScaleSweep {
       // earlier entries leave GC fragmentation behind that otherwise
       // inflates the NEXT entry's small-n points (deflating its fitted
       // exponent — the unsafe direction for a gate that fires on alpha
-      // ABOVE cap); same discipline as Bench/DbgTime blocks
+      // ABOVE cap); same discipline as Bench blocks
       operators.EntryCaches.releaseAll()
       spark.catalog.clearCache()
       System.gc()
@@ -310,5 +310,99 @@ object ScaleSweep {
     println(s"[sweep] wrote $outJson; failed = ${failed.size}")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Bump when [[replicate]] changes what it writes: the version is
+    * part of every replica's fingerprint, so old replicas are rebuilt.
+    */
+  private val ReplicatorVersion = 1
+
+  /** The key-bearing tables [[replicate]] copies with offset keys. */
+  private[graft] val ReplicatedKeys: Seq[(String, Seq[String])] = Seq(
+    "documents" -> Seq("doc_id"), "embeddings" -> Seq("vec_id"),
+    "events" -> Seq("event_id"), "orders" -> Seq("o_orderkey"),
+    "lineitem" -> Seq("l_orderkey"))
+
+  /** The dimension tables [[replicate]] copies through unchanged. */
+  private[graft] val DimensionTables: Seq[String] =
+    Seq("region", "nation", "customer", "supplier", "part")
+
+  /** The ×`factor` replica of the corpus at `base`, as a directory under
+    * `root` that holds exactly what [[replicate]] writes for the base as
+    * it is now. The `_READY` marker holds a fingerprint of the canonical
+    * base path, every base table file's name, size and mtime, the factor
+    * and [[ReplicatorVersion]]; a directory whose marker is missing or
+    * holds another fingerprint is rebuilt, never returned. A build
+    * writes into a temp sibling, writes the marker last, and only then
+    * replaces the directory by a rename, so an interrupted build leaves
+    * no directory that looks ready. The directory name carries a hash of
+    * the canonical base path, so two bases never share a replica.
+    */
+  def replica(spark: SparkSession, base: String, factor: Int,
+      root: String = "/tmp"): String = {
+    val canon = new File(base).getCanonicalFile
+    val fp = fingerprint(canon, factor)
+    val out = new File(root,
+      f"graft_scale_x${factor}_${canon.getName}_${canon.getPath.hashCode}%08x")
+    val marker = new File(out, "_READY")
+    if (marker.isFile && Files.readString(marker.toPath) == fp)
+      return out.getPath
+    System.err.println(s"[replica] building $canon x$factor -> $out")
+    val tmp = new File(root, s".tmp-${out.getName}-${ProcessHandle.current.pid}")
+    FileUtil.fullyDelete(tmp)
+    replicate(spark, canon.getPath, tmp.getPath, factor)
+    Files.writeString(new File(tmp, "_READY").toPath, fp)
+    FileUtil.fullyDelete(out)
+    Files.move(tmp.toPath, out.toPath, StandardCopyOption.ATOMIC_MOVE)
+    out.getPath
+  }
+
+  private def fingerprint(base: File, factor: Int): String = {
+    val files = (ReplicatedKeys.map(_._1) ++ DimensionTables).flatMap { t =>
+      Using.resource(Files.walk(new File(base, s"$t.parquet").toPath))(
+        _.iterator.asScala.filter(Files.isRegularFile(_)).toList)
+        .sortBy(_.toString)
+        .map(f => s"${base.toPath.relativize(f)} ${Files.size(f)} " +
+          Files.getLastModifiedTime(f).toMillis)
+    }
+    (Seq(s"version $ReplicatorVersion", s"base ${base.getPath}",
+      s"factor $factor") ++ files).mkString("", "\n", "\n")
+  }
+
+  /** Writes factor-replicated copies of the key-bearing tables with
+    * disjoint id ranges; pure dimension tables copy through unchanged.
+    * Facts: documents/embeddings/events by their id, orders+lineitem
+    * by orderkey (consistently, so the join still matches within each
+    * copy — customer/part/supplier stay dimensions and just get N×
+    * hotter, which is the realistic fact-grows-dims-don't shape).
+    * Exact replication gives every doc N−1 identical twins, so near-dup
+    * pair volume grows ~N² for the dedup families (see [[Caps]]).
+    */
+  private def replicate(spark: SparkSession, base: String,
+      out: String, factor: Int): Unit = {
+    // The copy offset must clear EVERY replicated key or copies alias
+    // (colliding ids corrupt join cardinalities and the sweep's fitted
+    // exponents) — derive it from the observed max instead of a fixed
+    // constant, rounded up to a power of 10 so replicated ids stay
+    // readable. One tiny max() aggregate per table, paid once per run.
+    val maxKey = ReplicatedKeys.map { case (name, keys) =>
+      sources.Tables.table(spark, base, name)
+        .agg(max(col(keys.head)).cast("long")).head.getLong(0)
+    }.max
+    var off = 100000000L
+    while (off <= maxKey) off *= 10L
+    val Off = off
+    def rep(name: String, keys: Seq[String]): Unit = {
+      val d = sources.Tables.table(spark, base, name)
+      val copies = (0 until factor).map(i =>
+        keys.foldLeft(d)((f, k) => f.withColumn(k, col(k) + lit(i * Off))))
+      copies.reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$out/$name.parquet")
+    }
+    ReplicatedKeys.foreach { case (n, ks) => rep(n, ks) }
+    for (t <- DimensionTables) {
+      spark.read.parquet(s"$base/$t.parquet")
+        .write.mode("overwrite").parquet(s"$out/$t.parquet")
+    }
   }
 }

@@ -5,30 +5,24 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.kernel.AnomalyzerConf
-import graft.streaming.{SeriesPoint, StreamingDetector, StreamingNearDup}
+import graft.streaming.StreamingNearDup
 
-/** Streaming throughput bench (VERDICT r11 #6): replays the sf corpus
-  * through the two flagship keyed-state operators and prints ONE JSON
-  * line with rows/s, wall seconds, and state-store size, so the
-  * streaming story has recorded numbers next to its stream==batch
-  * pins (the specs pin WHAT the ops compute — this records HOW FAST).
+/** Streaming throughput bench for the near-dup keyed-state operator
+  * (VERDICT r11 #6): replays documents.parquet, id-ordered on a
+  * synthetic arrival clock, through the MinHash-LSH band claims of
+  * [[StreamingNearDup.bandHitsTws]] (16 band rows/doc of keyed
+  * first-claim state) and prints ONE JSON line with rows/s, wall
+  * seconds, and state-store size, so the streaming story has recorded
+  * numbers next to its stream==batch pins (the specs pin WHAT the op
+  * computes — this records HOW FAST). The detector feed is timed by
+  * perfbench's detect_stream workload, not here.
   *
-  * Workloads:
-  *  - detector: events.parquet → SeriesPoint(series = event_type #
-  *    user_id%200 → ~1 000 series), scored by the bounded-buffer
-  *    ensemble (the StreamingDetectorSpec conf — magnitude/fence/cdf/
-  *    highrank, no bootstrap) across N micro-batches in ts order.
-  *  - neardup: documents.parquet → MinHash-LSH band claims
-  *    (16 band rows/doc of keyed first-claim state).
-  *
-  * Both run on the RocksDB store [[GraftSession.create]] configures.
-  * Each workload runs one untimed warmup feed (codegen + state-store
-  * init) before its timed feed — the numbers are steady-state
-  * micro-batch throughput, not first-batch compilation. A second, LARGE-batch
-  * point (default 4 batches) rides along under "large_batch": small
-  * batches measure micro-batch machinery (~0.8 s fixed per batch),
-  * so the kernel-throughput regression signal lives here.
+  * The feed runs on the RocksDB store [[GraftSession.create]]
+  * configures, after one untimed warmup feed (codegen + state-store
+  * init) — the numbers are steady-state micro-batch throughput, not
+  * first-batch compilation. A second, LARGE-batch point (default 4
+  * batches) rides along under "large_batch": small batches measure
+  * micro-batch machinery, large ones the hashing and state work.
   *
   * MemoryStream feeds from the driver by design: the measured path is
   * the stream (shuffle to keyed state, state round-trip, sink), and a
@@ -37,11 +31,6 @@ import graft.streaming.{SeriesPoint, StreamingDetector, StreamingNearDup}
   * empty stream cannot flatter the numbers.
   */
 object StreamBench {
-
-  private val conf = AnomalyzerConf(
-    sensitivity = 0.1, upperBound = 100, lowerBound = Some(0),
-    activeSize = 1, nSeasons = 4,
-    methods = Seq("magnitude", "fence", "cdf", "highrank"), permCount = 50)
 
   case class Run(rows: Long, wallSec: Double, stateRows: Long,
       stateBytes: Long, probe: Double = -1.0, diskProbe: Double = -1.0) {
@@ -77,7 +66,7 @@ object StreamBench {
       val st = Option(q.lastProgress).toSeq
         .flatMap(_.stateOperators.toSeq)
       val outRows = spark.table(name).count()
-      // drop the memory sink's accumulated rows — six feeds (warmups
+      // drop the memory sink's accumulated rows — three feeds (warmup
       // included) would otherwise retain every output row in driver
       // memory for the process lifetime
       spark.catalog.dropTempView(name)
@@ -92,38 +81,23 @@ object StreamBench {
       Runtime.getRuntime.availableProcessors.toString).toInt
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "20").toInt
     // the LARGE-batch point (fewer, bigger batches): at the default
-    // 5k-row batches the wall is ~0.8 s/batch of micro-batch MACHINERY
-    // (keyed-state shuffle + store round-trip + commit), so a kernel
-    // regression hides inside it — rows/s scales ~linearly with batch
-    // size until the kernel dominates. BASELINE.md names this row the
-    // kernel-throughput gate; the batches=20 rows remain the
-    // machinery/latency picture.
+    // batch size the wall is mostly micro-batch MACHINERY (keyed-state
+    // shuffle + store round-trip + commit), so a regression in the
+    // per-row work hides inside it — rows/s scales ~linearly with batch
+    // size until that work dominates
     val nLarge = sys.env.getOrElse("SPARK_GRAFT_STREAM_LARGE_BATCHES", "4").toInt
     val spark = GraftSession.create(s"local[$cpus]", cpus, "graft-streambench")
     import spark.implicits._
 
-    // ---- detector feed: ts-ordered replay, ~1 000 series
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
-      .filter("value > -1e9 AND value < 1e9")
-      .selectExpr("concat(event_type, '#', user_id % 200) AS series",
-        "ts", "value")
-      .orderBy("ts").as[SeriesPoint].collect()
-    // the ACTUAL keyed-state cardinality (ADVICE r12: the previous
-    // hard-coded 1000 misstates it whenever the corpus changes)
-    val nSeries = pts.iterator.map(_.series).toSet.size
-    def batched[T](rows: Array[T], n: Int): Seq[Seq[T]] =
-      rows.grouped((rows.length + n - 1) / n).map(_.toSeq).toSeq
-
-    // ---- neardup feed: id-ordered docs, synthetic arrival clock
+    // id-ordered docs, synthetic arrival clock
     val docRows = spark.read.parquet(s"$sfDir/documents.parquet")
       .selectExpr("doc_id", "text").orderBy("doc_id")
       .as[(Long, String)].collect()
       .map { case (id, text) =>
         (id, new Timestamp(1700000000000L + id), text) }
+    def batched[T](rows: Array[T], n: Int): Seq[Seq[T]] =
+      rows.grouped((rows.length + n - 1) / n).map(_.toSeq).toSeq
 
-    def detector(batches: Int): Run =
-      runStream(spark, batched(pts, batches))(ds =>
-        StreamingDetector.scoreTws(ds, conf))
     def neardup(batches: Int): Run =
       runStream(spark, batched(docRows, batches))(ds =>
         StreamingNearDup.bandHitsTws(ds.toDF("doc_id", "ts", "text"))(spark))
@@ -132,7 +106,7 @@ object StreamBench {
     // stream rows were the last measurement class without the calib
     // discipline — the committed r13 neardup_tws batches=20 row was a
     // co-tenant burst adjudicable only via an uncommitted re-run).
-    // TWO probes, because the feeds bind on two different resources:
+    // TWO probes, because the feed binds on two different resources:
     // the CPU probe (probe_sec vs probe_ref) and a disk-COMMIT
     // latency probe (disk_probe_sec vs disk_ref) — RocksDB commits
     // are fsync-bound, and a co-tenant DISK burst is invisible to the
@@ -147,30 +121,22 @@ object StreamBench {
       r.copy(probe = p, diskProbe = dp)
     }
 
-    // warmup feed per workload (codegen, state-provider init), then
-    // the timed feed on a fresh query
-    detector(nBatches)
-    val det = probed(detector(nBatches))
+    // warmup feed (codegen, state-provider init), then the timed feed
+    // on a fresh query; the large-batch point reuses the warm provider
     neardup(nBatches)
     val nd = probed(neardup(nBatches))
-    // large-batch point: state provider already warm from the rows above
-    val detL = probed(detector(nLarge))
     val ndL = probed(neardup(nLarge))
 
-    require(det.rows == pts.length && detL.rows == pts.length,
-      s"detector row mismatch: ${det.rows}/${detL.rows} vs ${pts.length}")
     require(nd.rows > 0 && ndL.rows == nd.rows,
       s"neardup row mismatch: ${nd.rows}/${ndL.rows}")
 
     println(s"""{"metric":"stream_rows_per_sec",""" +
-      s""""value":${det.rowsPerSec.toLong},"unit":"rows/s",""" +
-      s""""batches":$nBatches,"series":$nSeries,""" +
+      s""""value":${nd.rowsPerSec.toLong},"unit":"rows/s",""" +
+      s""""batches":$nBatches,"docs":${docRows.length},""" +
       s""""probe_ref":${AmbientProbe.ref},""" +
       s""""disk_ref":${AmbientProbe.diskRef},""" +
-      s""""detector_tws_rocksdb":${det.json},""" +
       s""""neardup_tws_rocksdb":${nd.json},""" +
       s""""large_batch":{"batches":$nLarge,""" +
-      s""""detector_tws_rocksdb":${detL.json},""" +
       s""""neardup_tws_rocksdb":${ndL.json}},""" +
       s""""sf":"$sfDir"}""")
     spark.stop()
