@@ -154,12 +154,11 @@ object PlanAudit {
   private def physFallbacks(p: SparkPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
     import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     // codegen packaging (WholeStageCodegenExec / InputAdapter) is
     // transparent for position purposes — a projection in its own
     // codegen fragment whose input adapter wraps a join is STILL a
-    // projection over that join; CartesianProductExec is a join that
-    // does not extend BaseJoinExec
+    // projection over that join
     // SortExec / exchanges / window nodes are cardinality-preserving
     // too — EnsureRequirements ALWAYS places a SortExec (and usually a
     // shuffle) under a WindowExec, so without these cases the
@@ -167,7 +166,6 @@ object PlanAudit {
     def isJoinish(q: SparkPlan): Boolean = q match {
       case j: BaseJoinExec =>
         j.joinType != LeftSemi && j.joinType != LeftAnti
-      case _: CartesianProductExec => true
       case f: FilterExec => isJoinish(f.child)
       case pr: ProjectExec => isJoinish(pr.child)
       case s: org.apache.spark.sql.execution.SortExec => isJoinish(s.child)
@@ -189,9 +187,6 @@ object PlanAudit {
       case j: BaseJoinExec =>
         j.condition.toSeq.flatMap(fb(_, "join-condition")) ++
           j.children.flatMap(physFallbacks)
-      case c: CartesianProductExec =>
-        c.condition.toSeq.flatMap(fb(_, "join-condition")) ++
-          c.children.flatMap(physFallbacks)
       case pr: ProjectExec if isJoinish(pr.child) =>
         pr.projectList.flatMap(fb(_, "projection-over-join")) ++
           pr.children.flatMap(physFallbacks)

@@ -22,6 +22,8 @@ object SparkTestBase {
         GraftSession.RocksDbStateStore)
       .config(graft.streaming.LocalCheckpointFileManager.ClassKey,
         GraftSession.CheckpointFileManagerClass)
+      .config(graft.sources.ForkFreeLocalFileSystem.ImplKey,
+        GraftSession.LocalFileSystemClass)
       .config("spark.broadcast.blockSize", GraftSession.BroadcastBlockSize)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

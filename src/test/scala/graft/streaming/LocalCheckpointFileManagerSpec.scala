@@ -26,7 +26,14 @@ object RawSchemeFileSystem {
 
 class LocalCheckpointFileManagerSpec extends AnyFunSuite {
 
-  private val conf = new Configuration()
+  /** A Hadoop conf with the session's `file:` filesystem, so the
+    * filesystem this spec caches in the JVM is the one sessions use.
+    */
+  private val conf = {
+    val c = new Configuration()
+    c.set("fs.file.impl", graft.GraftSession.LocalFileSystemClass)
+    c
+  }
 
   private def bytes(n: Int): Array[Byte] =
     Array.tabulate(n)(i => (i * 31 + n).toByte)
