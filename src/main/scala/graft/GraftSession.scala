@@ -7,14 +7,14 @@ import org.apache.spark.sql.SparkSession
   * Spark's default 200), AQE for runtime re-planning and skew joins,
   * UTC session time, the RocksDB state store every keyed-state
   * streaming op needs (`transformWithState` requires it), fork-free
-  * local file and checkpoint writes, 512k broadcast pieces, the
+  * local writes (checkpoints included), 512k broadcast pieces, the
   * corpus's nano-timestamp read mode, and the graft SQL functions.
   * `Bench`/`Verify` build through here; library users can instead call
   * [[GraftExtensions.register]] / [[graft.sources.Tables.configure]] on
   * an existing session (and set the state store provider to
-  * [[RocksDbStateStore]] for the streaming ops, the checkpoint file
-  * manager to [[CheckpointFileManagerClass]], and `fs.file.impl` to
-  * [[LocalFileSystemClass]]).
+  * [[RocksDbStateStore]] for the streaming ops, `fs.file.impl` to
+  * [[LocalFileSystemClass]] and `fs.AbstractFileSystem.file.impl` to
+  * [[LocalFsClass]], each with the `spark.hadoop.` prefix).
   */
 object GraftSession {
 
@@ -22,30 +22,32 @@ object GraftSession {
   val RocksDbStateStore =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** The checkpoint file manager: [[streaming.LocalCheckpointFileManager]].
-    * Without `libhadoop`, Hadoop's local filesystem runs `chmod` for
-    * every file it creates, and Spark's default manager creates every
-    * offset-log, commit-log and state-store file through it: 22–24 ms
-    * per 300-byte file against 0.1–0.8 ms for graft's `java.nio` write
-    * and move (4-core VM), several files per micro-batch. Other schemes
-    * keep Spark's manager.
-    */
-  val CheckpointFileManagerClass =
-    classOf[streaming.LocalCheckpointFileManager].getName
-
-  /** The `file:` filesystem: [[sources.ForkFreeLocalFileSystem]]. The
-    * checkpoint manager above covers only checkpoint files. Every other
-    * local write (a query's parquet output, its `_SUCCESS` marker, each
-    * file's `.crc`, every directory level) goes through the `file:`
-    * filesystem, and Hadoop's runs `chmod` in a new process for each:
-    * 18 processes for one 4-file parquet write, 289 over one 8 s
-    * perfbench detect_batch run (13 passes; JFR `jdk.ProcessStart`).
-    * Measured on a 4-core VM (p10–p90 of 40): `fs.create` 6.1–8.3 ms →
-    * 0.5–0.8 ms, a 3-level `mkdirs` 7.6–18 ms → 0.1–0.2 ms, with the
-    * same file modes. Takes effect only if no `file:` filesystem was
-    * cached in the JVM before the session (see the class's doc).
+  /** The `file:` filesystems, one per Hadoop API: `fs.file.impl`
+    * [[LocalFileSystemClass]] and `fs.AbstractFileSystem.file.impl`
+    * [[LocalFsClass]], both over [[sources.ForkFreeLocalFileSystem]]'s
+    * raw filesystem. Without `libhadoop`, Hadoop's local filesystem runs
+    * `chmod` in a new process for every file and directory it creates,
+    * and its FileContext twin also runs `readlink` for every path it
+    * resolves in a rename.
+    *   - `fs.file.impl` reaches every write through Hadoop's
+    *     `FileSystem` API: a query's parquet output, its `_SUCCESS` marker, each file's
+    *     `.crc`, every directory level. 18 processes for one 4-file
+    *     parquet write, 289 over one 8 s perfbench detect_batch run (13
+    *     passes; JFR `jdk.ProcessStart`). 4-core VM, p10–p90 of 40:
+    *     `fs.create` 6.1–8.3 ms → 0.5–0.8 ms, a 3-level `mkdirs`
+    *     7.6–18 ms → 0.1–0.2 ms, with the same file modes. Takes effect
+    *     only if no `file:` filesystem was cached in the JVM before the
+    *     session (see the class's doc).
+    *   - `fs.AbstractFileSystem.file.impl` reaches Spark's default
+    *     checkpoint manager, which writes every offset-log, commit-log
+    *     and state-store file through FileContext. 1,000 checkpoint
+    *     files of 300 bytes (`createAtomic`, `exists`, `open`; 4-core
+    *     VM, p50 of 2 rounds): 23.8–25.0 ms and 10 processes per file
+    *     (8 `readlink`, 2 `chmod`) over Hadoop's `LocalFs`, 0.39–0.67 ms
+    *     and none here.
     */
   val LocalFileSystemClass = classOf[sources.ForkFreeLocalFileSystem].getName
+  val LocalFsClass = classOf[sources.ForkFreeLocalFileSystem.Fs].getName
 
   /** Broadcast piece size (`spark.broadcast.blockSize`, Spark's default
     * 4m). Every job broadcasts its task binary, and the state store
@@ -76,9 +78,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.stateStore.providerClass",
         RocksDbStateStore)
-      .config(streaming.LocalCheckpointFileManager.ClassKey,
-        CheckpointFileManagerClass)
       .config(sources.ForkFreeLocalFileSystem.ImplKey, LocalFileSystemClass)
+      .config(sources.ForkFreeLocalFileSystem.FsImplKey, LocalFsClass)
       .config("spark.broadcast.blockSize", BroadcastBlockSize)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions())

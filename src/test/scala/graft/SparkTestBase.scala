@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
@@ -20,14 +26,33 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.stateStore.providerClass",
         GraftSession.RocksDbStateStore)
-      .config(graft.streaming.LocalCheckpointFileManager.ClassKey,
-        GraftSession.CheckpointFileManagerClass)
       .config(graft.sources.ForkFreeLocalFileSystem.ImplKey,
         GraftSession.LocalFileSystemClass)
+      .config(graft.sources.ForkFreeLocalFileSystem.FsImplKey,
+        GraftSession.LocalFsClass)
       .config("spark.broadcast.blockSize", GraftSession.BroadcastBlockSize)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The command line of every process the JVM starts while `body` runs
+    * (JFR `jdk.ProcessStart`).
+    */
+  def processStarts(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val dump = Files.createTempFile("graft-procs", ".jfr")
+    try {
+      rec.dump(dump)
+      RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(_.getString("command"))
+    } finally {
+      rec.close()
+      Files.delete(dump)
+    }
   }
 }

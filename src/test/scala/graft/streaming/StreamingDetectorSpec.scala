@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,22 +90,25 @@ class StreamingDetectorSpec extends AnyFunSuite with SparkTestBase {
     Seq(pt("cpu", 5000, 9.0), pt("mem", 3000, 55.0)),
     Seq(pt("cpu", 6000, 1.2), pt("mem", 4000, 12.0), pt("disk", 1000, 3.0)))
 
-  private val graftManager = graft.GraftSession.CheckpointFileManagerClass
-  private val sparkManager =
-    classOf[FileContextBasedCheckpointFileManager].getName
+  /** The Hadoop conf that names the FileContext `file:` filesystem,
+    * through which Spark's checkpoint manager writes.
+    */
+  private val FsKey = "fs.AbstractFileSystem.file.impl"
+  private val graftFs = graft.GraftSession.LocalFsClass
+  private val hadoopFs = classOf[org.apache.hadoop.fs.local.LocalFs].getName
 
   /** One query lifetime of `score` over `batches` of `input`,
-    * checkpointed at `ckpt` through the checkpoint file manager class
-    * `manager`: the scores it emitted, by (series, ts).
+    * checkpointed at `ckpt` through the FileContext filesystem class
+    * `fs`: the scores it emitted, by (series, ts).
     */
   private def run(score: Dataset[SeriesPoint] => Dataset[AnomalyScore])(
       input: MemoryStream[SeriesPoint], ckpt: String,
-      batches: Seq[Seq[SeriesPoint]], manager: String = graftManager)
+      batches: Seq[Seq[SeriesPoint]], fs: String = graftFs)
       : Seq[(String, Long, Double)] = {
     val out = scala.collection.mutable.ArrayBuffer[AnomalyScore]()
     val sink: (Dataset[AnomalyScore], Long) => Unit =
       (ds, _) => out ++= ds.collect()
-    spark.conf.set(LocalCheckpointFileManager.ClassKey, manager)
+    spark.conf.set(FsKey, fs)
     try {
       val q = score(input.toDS()).writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt).start()
@@ -114,7 +116,7 @@ class StreamingDetectorSpec extends AnyFunSuite with SparkTestBase {
         input.addData(b)
         q.processAllAvailable()
       } finally q.stop()
-    } finally spark.conf.set(LocalCheckpointFileManager.ClassKey, graftManager)
+    } finally spark.conf.set(FsKey, graftFs)
     out.map(a => (a.series, a.ts.getTime, a.prob)).toSeq
   }
 
@@ -128,9 +130,9 @@ class StreamingDetectorSpec extends AnyFunSuite with SparkTestBase {
   }
 
   /** `feed` through `score` stopped after batch `k` and resumed on the
-    * same checkpoint, each half under every pair of checkpoint file
-    * managers (graft's throughout, Spark's default then graft's, and
-    * back): every pairing must equal the uninterrupted run.
+    * same checkpoint, each half under every pair of FileContext
+    * filesystems (graft's throughout, Hadoop's `LocalFs` then graft's,
+    * and back): every pairing must equal the uninterrupted run.
     */
   private def restartsEqualWhole(
       score: Dataset[SeriesPoint] => Dataset[AnomalyScore],
@@ -141,15 +143,15 @@ class StreamingDetectorSpec extends AnyFunSuite with SparkTestBase {
     val whole = run(score)(MemoryStream[SeriesPoint](sparkSession),
       s"$root/whole", feed)
     assert(whole.size === feed.map(_.size).sum)
-    Seq(graftManager -> graftManager, sparkManager -> graftManager,
-      graftManager -> sparkManager).foreach { case (m1, m2) =>
-      val ckpt = s"$root/restart-${m1.hashCode}-${m2.hashCode}"
-      val input = MemoryStream[SeriesPoint](sparkSession)
-      val before = run(score)(input, ckpt, feed.take(k), m1)
-      // a fresh query on the same checkpoint resumes offsets and state
-      val after = run(score)(input, ckpt, feed.drop(k), m2)
-      assert((before ++ after).sorted === whole.sorted, s"$m1 then $m2")
-    }
+    Seq(graftFs -> graftFs, hadoopFs -> graftFs, graftFs -> hadoopFs)
+      .foreach { case (fs1, fs2) =>
+        val ckpt = s"$root/restart-${fs1.hashCode}-${fs2.hashCode}"
+        val input = MemoryStream[SeriesPoint](sparkSession)
+        val before = run(score)(input, ckpt, feed.take(k), fs1)
+        // a fresh query on the same checkpoint resumes offsets and state
+        val after = run(score)(input, ckpt, feed.drop(k), fs2)
+        assert((before ++ after).sorted === whole.sorted, s"$fs1 then $fs2")
+      }
     whole
   }
 
@@ -172,8 +174,28 @@ class StreamingDetectorSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a 3-batch scoreTws on a real checkpoint starts no process but " +
+    "RocksDB's rm") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val score = StreamingDetector.scoreTws(_: Dataset[SeriesPoint], conf)
+    withRoot { root =>
+      // one JVM-wide warm-up: Hadoop's Shell class init forks once
+      run(score)(MemoryStream[SeriesPoint](sparkSession), s"$root/warm",
+        feed.take(1))
+      var scores = Seq.empty[(String, Long, Double)]
+      val procs = graft.SparkTestBase.processStarts {
+        scores = run(score)(MemoryStream[SeriesPoint](sparkSession),
+          s"$root/ckpt", feed.take(3))
+      }
+      assert(scores.size === feed.take(3).map(_.size).sum)
+      // Spark's recursive delete of each RocksDB snapshot dir shells out
+      assert(procs.forall(_.startsWith("rm ")), procs)
+    }
+  }
+
   test("scoreTws(idleTtl): restart from a real checkpoint, across a " +
-    "checkpoint-manager switch both ways, == uninterrupted run") {
+    "filesystem switch both ways, == uninterrupted run") {
     val sparkSession = spark
     import sparkSession.implicits._
     // event time rises batch over batch (nothing is late); mem goes
