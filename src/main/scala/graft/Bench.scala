@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.Catalog
 
-/** Benchmark main: runs the headline queries (Catalog.benchNames) on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
+  * prints ONE JSON line with per-query seconds. The bench list, its
+  * fixed core set (timed first) and the heavy ×N tier are declared on
+  * the catalog entries (`Tier.Bench`); this main names no entry.
   * Results are fully materialized through the noop sink so count-only
   * shortcuts can't flatter the numbers.
   *
@@ -37,7 +39,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
       .filter(_.nonEmpty)
-    val unknown = only.toSeq.flatten.filterNot(queries.Catalog.queries.contains)
+    val unknown = only.toSeq.flatten.filterNot(Catalog.queries.contains)
     if (unknown.nonEmpty) {
       System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY names no catalog " +
         s"entry: ${unknown.mkString(", ")}")
@@ -61,16 +63,10 @@ object Bench {
     val xn = sys.env.get("SPARK_GRAFT_BENCH_XN").flatMap(_.toIntOption)
       .filter(_ >= 2)
     val benchDir = xn.fold(sfDir)(ScaleSweep.replica(spark, sfDir, _))
-    // the xN heavy tier: the entries whose sf0.1 medians top the bench
-    // (and whose scale behavior the round-15 items target)
-    val xnTier = Seq("q04_join_multi", "a13_anomaly_perm500_chunked",
-      "a47_quantile_trend", "p34_contam_bloom", "p52_pagerank",
-      "p63_sim_ivfpq", "p99_hybrid_rrf_ann")
 
     def materialize(name: String): Double = {
       val t0 = System.nanoTime()
-      try queries.Catalog.queries(name)(spark, benchDir)
-        .write.format("noop").mode("overwrite").save()
+      try Catalog.consume(Catalog.queries(name)(spark, benchDir))
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -81,9 +77,7 @@ object Bench {
 
     // JVM/session warmup on the smallest SF so the first measured query
     // doesn't pay classloading + codegen compilation
-    try queries.Catalog.queries("q01_agg")(spark, "/root/testdata/sf0.001")
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
+    Catalog.warmup(spark)
 
     // Ambient-noise calibration probe (VERDICT r10 #2): the FIXED
     // shared workload in [[AmbientProbe]]. Untouched queries drifted
@@ -94,6 +88,11 @@ object Bench {
     // list; the summary reports both plus normalized sums
     // (value / (calib / calib_ref)).
     def calibrate(): Double = AmbientProbe.once(spark, cpus)
+    // quiet-host reference for THIS probe, recorded round 11 (median
+    // of three calibBlock() medians on an otherwise-idle 32-core
+    // builder). Re-record ONLY when the probe workload itself changes.
+    val CalibRef = sys.env.get("SPARK_GRAFT_CALIB_REF")
+      .map(_.toDouble).getOrElse(0.55)
     // a calibration failure must never take the bench JSON down with
     // it (the driver's whole round reads that one line): fall back to
     // the reference, i.e. a neutral factor of 1.0
@@ -102,19 +101,12 @@ object Bench {
       calibrate() // warmup (codegen for the probe itself)
       val xs = (1 to 3).map(_ => calibrate())
       val m = xs.sorted.apply(1)
-      if (m > 0 && java.lang.Double.isFinite(m)) m
-      else sys.env.get("SPARK_GRAFT_CALIB_REF").map(_.toDouble)
-        .getOrElse(0.55)
+      if (m > 0 && java.lang.Double.isFinite(m)) m else CalibRef
     } catch {
       case e if scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] calibration failed: ${e.getMessage}")
-        sys.env.get("SPARK_GRAFT_CALIB_REF").map(_.toDouble).getOrElse(0.55)
+        CalibRef
     }
-    // quiet-host reference for THIS probe, recorded round 11 (median
-    // of three calibBlock() medians on an otherwise-idle 32-core
-    // builder). Re-record ONLY when the probe workload itself changes.
-    val CalibRef = sys.env.get("SPARK_GRAFT_CALIB_REF")
-      .map(_.toDouble).getOrElse(0.55)
 
     // per query: one untimed warmup, then `runs` consecutive timed
     // runs. The warmup absorbs the one-off costs a long-lived engine
@@ -124,26 +116,23 @@ object Bench {
     // interleaving nine query plans thrashes the 100-entry codegen
     // class cache and was re-paying compilation inside the measured
     // runs (observed as median ~= 2x min on every query).
-    // the FIXED round-5 query set, so round-over-round totals stay
-    // apples-to-apples as the bench list grows (the r5->r6 headline
-    // went 15s -> 83s purely because the list grew 9 -> 17)
-    val coreSet = Set("q01_agg", "q04_join_multi", "a04_anomaly_ensemble",
-      "a06_anomaly_rank", "a13_anomaly_perm500_chunked",
-      "p03_dedup_ngram_jaccard", "p04_dedup_minhash_lsh", "p07_sim_topk",
-      "p24_contamination")
-    // The fixed core set runs FIRST, in a young clean heap: the heavy
-    // allocators outside it (bigram census, dup-span, PageRank) leave
-    // GC fragmentation behind that otherwise inflates whatever runs
-    // after them on a memory-tight host — the graded core should never
-    // pay for a non-core query's heap damage.
-    val bench = queries.Catalog.benchNames
+    // the bench list, its fixed core set and its xN heavy tier, all
+    // declared on the entries (Tier.Bench)
+    val tiers = Catalog.all.flatMap(e => e.bench.map(e.name -> _))
+    val bench = tiers.map(_._1)
+    val coreSet = tiers.collect { case (n, t) if t.core => n }.toSet
     // SPARK_GRAFT_BENCH_ONLY picks exactly what runs, in either mode
     // (bench names in bench order, then the others as given); unset,
     // xN mode times the heavy tier and the default mode the bench list
     val listed = only match {
       case Some(ns) => bench.filter(ns.contains) ++ ns.filterNot(bench.contains)
-      case None => bench.filter(n => xn.isEmpty || xnTier.contains(n))
+      case None => tiers.collect { case (n, t) if xn.isEmpty || t.heavy => n }
     }
+    // The fixed core set runs FIRST, in a young clean heap: the heavy
+    // allocators outside it (bigram census, dup-span, PageRank) leave
+    // GC fragmentation behind that otherwise inflates whatever runs
+    // after them on a memory-tight host — the graded core should never
+    // pay for a non-core query's heap damage.
     val names = listed.filter(coreSet) ++ listed.filterNot(coreSet)
     // per-BLOCK ambient probe (VERDICT r12 #1): one calibrate() run
     // immediately before each query's block. The run-level
@@ -169,8 +158,7 @@ object Bench {
       // eviction churn / GC pauses mid-measurement (observed as median
       // ~4x min on later queries). The query's own warmup rebuilds its
       // intermediates, so the timed runs measure warm steady state.
-      graft.operators.EntryCaches.releaseAll()
-      spark.catalog.clearCache()
+      Catalog.release(spark)
       System.gc()
       def probeOnce(): Double = try calibrate() catch {
         case e if scala.util.control.NonFatal(e) => CalibRef

@@ -1,15 +1,17 @@
 package graft
 
+import graft.queries.{Catalog, Pipeline, Tier}
+
 /** The composed curation pipeline — the 100 TB usage shape the
   * per-entry catalog contract hides (BASELINE.md "Composed-entry
   * recompute decision"): a production run materializes the shared
   * MinHash-LSH pair list ONCE and feeds every pair-list consumer from
   * it, where the driver's per-entry contract re-derives it per entry.
   *
-  * `runMain graft.CurationPipeline [outDir]` runs the six consumers
-  * (p23 dup clusters, p54 calibration, p66 leak-free split, p67
-  * leakage audit, p71 split contamination, p87 longest common run)
-  * twice on SPARK_GRAFT_SF_DIR:
+  * `runMain graft.CurationPipeline [outDir]` runs the six consumers —
+  * the entries the catalog declares `Tier.LshPairConsumer`: dup
+  * clusters, calibration, leak-free split, leakage audit, split
+  * contamination, longest common run — twice on SPARK_GRAFT_SF_DIR:
   *
   *  - STANDALONE: the catalog contract — caches released between
   *    entries, each consumer rebuilds the LSH pass itself (this is
@@ -29,30 +31,26 @@ package graft
   */
 object CurationPipeline {
 
-  private val Consumers = Seq(
-    "p23_dedup_clusters", "p54_minhash_calibration",
-    "p66_split_leakfree", "p67_leakage_audit",
-    "p71_split_contamination", "p87_longest_common_run")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString).toInt
     val outDir = args.headOption
     val spark = GraftSession.create(s"local[$cpus]", cpus, "graft-curation")
+    val consumers = Catalog.all.filter(_.tier == Tier.LshPairConsumer)
+      .map(_.name)
 
     def materialize(n: String): Double = {
       val t0 = System.nanoTime()
-      val df = queries.Catalog.queries(n)(spark, sfDir)
+      val df = Catalog.queries(n)(spark, sfDir)
       outDir match {
         case Some(d) => df.write.mode("overwrite").parquet(s"$d/$n.parquet")
-        case None => df.write.format("noop").mode("overwrite").save()
+        case None => Catalog.consume(df)
       }
       (System.nanoTime() - t0) / 1e9
     }
     def settle(): Unit = {
-      operators.EntryCaches.releaseAll()
-      spark.catalog.clearCache()
+      Catalog.release(spark)
       System.gc()
     }
 
@@ -69,21 +67,7 @@ object CurationPipeline {
     // means the standalone pass re-absorbs codegen compilation and the
     // reported saving conflates exactly what the warmup excludes, so
     // the exception prints and the JSON carries "warmup_ok":false.
-    val warmupOk = try {
-      queries.Catalog.queries("q01_agg")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      Consumers.foreach { n =>
-        queries.Catalog.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      true
-    } catch {
-      case e if scala.util.control.NonFatal(e) =>
-        System.err.println(s"[curation] WARMUP FAILED (measurement " +
-          s"protocol degraded — standalone pass will absorb codegen " +
-          s"compilation): $e")
-        false
-    }
+    val warmupOk = Catalog.warmup(spark, sfDir, consumers)
 
     // each measured pass carries its own ambient probes (the Bench/
     // StreamBench near-dup/Verify calib discipline): the two passes run
@@ -95,17 +79,17 @@ object CurationPipeline {
     // standalone: the per-entry contract — every consumer pays the
     // full LSH pass itself (cold caches, warm code)
     val (probeS, diskS) = probes()
-    val standalone = Consumers.map { n => settle(); n -> materialize(n) }
+    val standalone = consumers.map { n => settle(); n -> materialize(n) }
 
     // composed: prime the shared pair list, keep caches warm across
     // all six consumers
     settle()
     val (probeC, diskC) = probes()
     val t0 = System.nanoTime()
-    val pairs = queries.Pipeline.sharedLshPairs(spark, sfDir)
+    val pairs = Pipeline.sharedLshPairs(spark, sfDir)
     val nPairs = pairs.count()
     val primerSec = (System.nanoTime() - t0) / 1e9
-    val composed = Consumers.map(n => n -> materialize(n))
+    val composed = consumers.map(n => n -> materialize(n))
     settle()
 
     def obj(kvs: Seq[(String, Double)]): String =

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Catalog
+
 /** Cold-cost breakdown: `runMain graft.DbgPhases <names...>` runs each
   * catalog query once, cold, on SPARK_GRAFT_SF_DIR and splits the wall
   * into `build` (the catalog function call — under AQE this includes
@@ -16,21 +18,19 @@ object DbgPhases {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString).toInt
     val spark = GraftSession.create(s"local[$cpus]", cpus, "graft-dbgphases")
-    try queries.Catalog.queries("q01_agg")(spark, "/root/testdata/sf0.001")
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
+    Catalog.warmup(spark)
     for (n <- args) {
-      operators.EntryCaches.releaseAll(); spark.catalog.clearCache()
+      Catalog.release(spark)
       System.gc()
       val t0 = System.nanoTime()
-      val df = queries.Catalog.queries(n)(spark, sfDir)
+      val df = Catalog.queries(n)(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
       // force analysis + optimization + physical planning (pre-AQE)
       val t1 = System.nanoTime()
       df.queryExecution.executedPlan
       val tPlan = (System.nanoTime() - t1) / 1e9
       val t2 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
+      Catalog.consume(df)
       val tAction = (System.nanoTime() - t2) / 1e9
       println(f"[phases] $n%-28s build=$tBuild%.2f plan=$tPlan%.2f " +
         f"action=$tAction%.2f")

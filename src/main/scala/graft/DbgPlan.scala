@@ -24,8 +24,7 @@ object DbgPlan {
       queries.Catalog.queries(n)(spark, sfDir).explain("formatted")
       // entries persist intermediates while building; drop them per
       // entry as Verify does, so a whole-catalog run stays flat
-      operators.EntryCaches.releaseAll()
-      spark.catalog.clearCache()
+      queries.Catalog.release(spark)
     }
     spark.stop()
   }

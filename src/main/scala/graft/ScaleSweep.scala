@@ -10,40 +10,40 @@ import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.queries.{Catalog, Sweep}
+
 /** Multi-point scale regression gate: times each swept entry at
   * 1×/3×/10×/30× replicated corpora ([[replica]] of the sf0.1
-  * base; a heavy-graded tier adds a 100× point — see [[X100Names]]),
-  * fits the scaling exponent α in t ≈ c·nᵅ by least squares over
-  * (log n, log t), and FAILS (exit 1) when α exceeds the entry's
-  * pinned cap — turning the old one-point "at-or-below linear"
-  * eyeball into a recorded, re-runnable artifact.
+  * base; a heavy-graded tier adds a 100× point), fits the scaling
+  * exponent α in t ≈ c·nᵅ by least squares over (log n, log t), and
+  * FAILS (exit 1) when α exceeds the entry's cap — turning the old
+  * one-point "at-or-below linear" eyeball into a recorded, re-runnable
+  * artifact. What is swept, each entry's cap and its 100× decision are
+  * declared on the catalog entries (`queries.Tier`, `queries.Sweep`):
+  * every bench entry is swept by construction, and a declared cap above
+  * linear carries either the 100× point or its written exclusion.
   *
   * `runMain graft.ScaleSweep [outJson] [name ...]` — defaults:
-  * `SCALE_SWEEP.json` in the cwd, the full graded set; a short name
-  * list is the quick linearity smoke for a plan change. Each point is
-  * the best of 2 timed runs after one warmup (the same discipline as
-  * Bench), with entry caches + the SQL cache cleared between points so
-  * no point rides another's state.
+  * `SCALE_SWEEP.json` in the cwd, every swept entry (bench entries
+  * first); a short name list is the quick linearity smoke for a plan
+  * change. Each point is the best of 2 timed runs after one warmup (the
+  * same discipline as Bench), with the entry boundary released between
+  * points so no point rides another's state.
   *
   * Reading the fit: fixed per-query overhead (session, planning,
   * small-dim scans) deflates α below 1 for sub-second entries — a
   * SAFE bias for a gate that only fires on α ABOVE cap. Exact
   * replication gives every doc N−1 identical twins, so near-dup
   * PAIR OUTPUT grows ~N² by construction for the dedup families —
-  * their caps encode that expectation (see [[Caps]]); the gate still
-  * catches a dedup plan going accidentally all-pairs, because that
-  * blows past even the quadratic-output cap via the candidate side.
+  * their caps encode that expectation (`Sweep.QuadraticCap`).
   *
-  * Two enumeration gates run BEFORE any timing (VERDICT r13 #2 — the
+  * One enumeration gate runs BEFORE any timing (VERDICT r13 #2 — the
   * p28 lesson applied to the sweep itself: a "not in the sweep"
-  * comment is a claim nothing tests):
-  *  - the default sweep list plus [[Excluded]] must cover every bench
-  *    entry and every budget-top entry (sf0.1 Verify budget ≥
-  *    [[BudgetTopThresholdSec]], read from tools/budgets_sf01.json);
-  *  - every declared-cap entry ([[Caps]]) must either time the 100×
-  *    point or carry a documented [[X100Excluded]] reason.
-  * The same checks are pinned in CI (SweepCoverageSpec) so a new
-  * heavy entry fails the build, not just the next sweep run.
+  * comment is a claim nothing tests): every budget-top entry (sf0.1
+  * Verify budget ≥ [[BudgetTopThresholdSec]], read from
+  * tools/budgets_sf01.json) must be swept. The same check is pinned in
+  * CI (SweepCoverageSpec) so a new heavy entry fails the build, not
+  * just the next sweep run.
   */
 object ScaleSweep {
 
@@ -56,123 +56,19 @@ object ScaleSweep {
 
   private val X100Factor = 100
 
-  /** Default fitted-exponent cap: linear plus measurement headroom.
-    * Sub-second entries fit well below 1; anything genuinely linear
-    * lands ≲1.1 even with noisy small-n points.
-    */
-  val DefaultCap = 1.30
-
-  /** Per-entry caps above the default, each with the structural reason
-    * the entry's work/output LEGITIMATELY grows faster than the corpus
-    * under exact ×N replication (N−1 identical twins per doc):
-    * near-dup pair OUTPUT is ~N² for the pair-emitting entries. These
-    * are output-volume facts of the synthetic corpus, not plan
-    * defects — a real corpus does not replicate every document.
-    */
-  val Caps: Map[String, Double] = Map(
-    // emits (doc_a, doc_b) near-dup pairs: each base pair gains ~N²
-    // twin combinations (bounded by the df/occupancy caps, which is
-    // why the observed exponent sits well under 2)
-    "p03_dedup_ngram_jaccard" -> 2.2,
-    "p04_dedup_minhash_lsh" -> 2.2,
-    // span excision joins contaminated spans against their duplicates:
-    // span multiplicity is ~N² under replication
-    "p44_dupspan" -> 2.2,
-    // the two DECLARED brute-force baselines: the query set is a fixed
-    // fraction of the corpus (vec_id % 50), so queries AND corpus both
-    // grow ×N and the exact scan does ~N² work BY DECLARATION — their
-    // scale paths (p15/p63) are swept separately under the linear cap.
-    // Under 1.3 they passed only via fixed-overhead deflation (r11
-    // fits: p07 1.03, p59 1.28 — one noisy point from a false alarm)
-    "p07_sim_topk" -> 2.2,
-    "p59_pq_topk" -> 2.2,
-    // p100's exact arm is the same declared p07-class brute baseline
-    // (an evaluation-time recall panel); its ANN arm is the shipped
-    // p63 serving plan. In the sweep since r14 (VERDICT r13 #1/#2: the
-    // declared-baseline claim was a comment nothing measured).
-    "p100_ivfpq_recall" -> 2.2,
-    // ---- the budget-top tier added in r12 (VERDICT r11 #7): entries
-    // whose work rides the p04 LSH PAIR LIST (components, calibration,
-    // splits, leakage audit, per-pair runs) — pair count inflates ~N²
-    // under exact replication exactly like p04 itself, bounded by the
-    // same df/occupancy caps
-    "p23_dedup_clusters" -> 2.2,
-    "p54_minhash_calibration" -> 2.2,
-    "p66_split_leakfree" -> 2.2,
-    "p67_leakage_audit" -> 2.2,
-    "p71_split_contamination" -> 2.2,
-    "p87_longest_common_run" -> 2.2,
-    // retrieval with a fixed-corpus-fraction query set (doc_id % 100):
-    // queries AND postings both grow ×N, so the (query, doc) score
-    // volume is ~N² BY DECLARATION (the p07/p59 rationale; a real
-    // deployment's query set does not grow with the corpus)
-    "p58_bm25_topk" -> 2.2,
-    "p60_hybrid_rrf" -> 2.2,
-    // perceptual near-dup pairs: same banded-pair-output argument as
-    // p04 — every base pair gains ~N² twin combinations under exact
-    // replication, bounded by the per-(band, value) df cap of 64
-    "p101_image_phash_neardup" -> 2.2
-  )
-
-  /** The heavy-graded tier that also times the 100× point (VERDICT
-    * r13 #1): the budget-table top and the scale-path flagships, two
-    * decades past the base corpus — where spill, skew, or state growth
-    * that a 10× fit cannot see actually shows. Declared-quadratic
-    * entries keep their 2.2 cap at the wider span.
-    */
-  val X100Names: Set[String] = Set(
-    "p99_hybrid_rrf_ann", "a13_anomaly_perm500_chunked",
-    "p03_dedup_ngram_jaccard", "p04_dedup_minhash_lsh", "p44_dupspan",
-    "p07_sim_topk", "p23_dedup_clusters", "p54_minhash_calibration",
-    "p66_split_leakfree", "p67_leakage_audit", "p71_split_contamination",
-    "p87_longest_common_run", "p52_pagerank", "p94_epoch_schedule",
-    "p63_sim_ivfpq", "p80_bpe_apply", "p101_image_phash_neardup")
-
-  /** Declared-cap entries documented OUT of the 100× point, each with
-    * the projected-cost arithmetic that justifies it — an entry must
-    * appear here or in [[X100Names]], never silently in neither (the
-    * enumeration gate enforces it).
-    */
-  val X100Excluded: Map[String, String] = Map(
-    "p58_bm25_topk" -> ("declared ~N^2-work baseline (query set is a " +
-      "fixed corpus fraction); x10 measured 36 s/run, so x100 projects " +
-      ">= 20 min/run x3 runs — the bounded scale path p99 carries the " +
-      "x100 point"),
-    "p60_hybrid_rrf" -> ("declared ~N^2-work baseline fusing p58's " +
-      "arms; x10 measured 49 s/run, x100 projects >= 25 min/run — p99 " +
-      "is its x100-swept scale twin"),
-    "p59_pq_topk" -> ("declared brute PQ baseline; x30 measured " +
-      "105 s/run, x100 projects ~11+ min/run — the serving path p63 " +
-      "times x100 under the LINEAR cap"),
-    "p100_ivfpq_recall" -> ("evaluation-time recall monitor whose " +
-      "exact arm is the p07-class declared-brute scan; p07 carries " +
-      "the declared-tier x100 point and p63 the serving-path one"))
-
-  /** Entries deliberately absent from the default sweep list, with the
-    * reason. Empty = everything bench- or budget-top-graded is swept.
-    */
-  val Excluded: Map[String, String] = Map.empty
-
   /** Budget-table entries at or above this sf0.1 wall (seconds) are
     * "budget-top": heavy enough that their 100 TB behavior must be
-    * fitted, not assumed — the sweep fails fast if one is neither
-    * swept nor excluded with a reason.
+    * fitted, not assumed — the sweep fails fast if one is not swept.
     */
   val BudgetTopThresholdSec = 2.5
 
-  /** The non-bench entries swept anyway (VERDICT r11 #7 + r13 #2): the
-    * top of the Verify budget table, whose 100× behavior the bench-set
-    * sweep never fitted.
+  /** Every swept entry with its fit: the bench entries, then the rest,
+    * each group in catalog order.
     */
-  val ExtraSweepNames: Seq[String] = Seq("p23_dedup_clusters",
-    "p54_minhash_calibration", "p58_bm25_topk", "p60_hybrid_rrf",
-    "p66_split_leakfree", "p67_leakage_audit", "p71_split_contamination",
-    "p87_longest_common_run", "p100_ivfpq_recall", "p80_bpe_apply",
-    "a05_anomaly_enrich", "a52_discord_profile",
-    "p101_image_phash_neardup")
-
-  def defaultNames: Seq[String] = queries.Catalog.benchNames ++
-    ExtraSweepNames.filterNot(queries.Catalog.benchNames.contains)
+  lazy val swept: Seq[(String, Sweep)] = {
+    val (bench, rest) = Catalog.all.partition(_.bench.isDefined)
+    (bench ++ rest).flatMap(e => e.tier.swept.map(e.name -> _))
+  }
 
   /** Parses the flat {"name": seconds} budget file the Verify gate
     * records (tools/check_budgets.py).
@@ -190,35 +86,22 @@ object ScaleSweep {
       .map(_.group(1)).toSeq.sorted
   }
 
-  /** The enumeration gates (VERDICT r13 #2), shared by main() and CI:
+  /** The enumeration gate (VERDICT r13 #2), shared by main() and CI:
     * returns human-readable failures, empty = covered.
     */
   def coverageErrors(budgetPath: String = "tools/budgets_sf01.json")
       : Seq[String] = {
-    val listed = defaultNames.toSet
-    val covered = listed ++ Excluded.keySet
-    val must = (queries.Catalog.benchNames ++ budgetTopNames(budgetPath))
-      .distinct
-    val missing = must.filterNot(covered).sorted.map(n =>
-      s"$n is bench- or budget-top-graded but neither swept nor in " +
-        "ScaleSweep.Excluded")
-    val capsUnswept = Caps.keySet.diff(listed).toSeq.sorted.map(n =>
-      s"$n has a declared cap but is not in the sweep list (the p100 " +
-        "r13 bug class)")
-    val x100Gap = Caps.keySet.diff(X100Names ++ X100Excluded.keySet)
-      .toSeq.sorted.map(n =>
-        s"$n is declared-cap but neither times x100 nor documents an " +
-          "exclusion in ScaleSweep.X100Excluded")
-    val x100Both = X100Names.intersect(X100Excluded.keySet).toSeq.sorted
-      .map(n => s"$n is both in X100Names and X100Excluded")
-    missing ++ capsUnswept ++ x100Gap ++ x100Both
+    val listed = swept.map(_._1).toSet
+    budgetTopNames(budgetPath).filterNot(listed).map(n =>
+      s"$n is budget-top-graded (sf0.1 budget >= " +
+        s"$BudgetTopThresholdSec s) but declares no sweep")
   }
 
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("SCALE_SWEEP.json")
     val names: Seq[String] =
-      if (args.length > 1) args.drop(1).toSeq else defaultNames
-    // enumeration gates fail BEFORE any timing: a sweep that silently
+      if (args.length > 1) args.drop(1).toSeq else swept.map(_._1)
+    // the enumeration gate fails BEFORE any timing: a sweep that silently
     // under-covers must never produce a green artifact
     val cov = coverageErrors()
     if (cov.nonEmpty) {
@@ -230,14 +113,17 @@ object ScaleSweep {
     val spark = GraftSession.create(s"local[$cpus]", cpus, "scale-sweep")
 
     def dirFor(f: Int): String = if (f == 1) base else replica(spark, base, f)
+    // an entry named on the command line that declares no sweep is
+    // fitted under the linear cap
+    def sweepOf(name: String): Sweep =
+      swept.toMap.getOrElse(name, Sweep.Linear)
     def factorsFor(name: String): Seq[Int] =
-      if (X100Names.contains(name)) Factors :+ X100Factor else Factors
+      if (sweepOf(name).x100) Factors :+ X100Factor else Factors
 
     def time(name: String, dir: String): Double = {
       def once(): Double = {
         val t0 = System.nanoTime()
-        queries.Catalog.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
+        Catalog.consume(Catalog.queries(name)(spark, dir))
         (System.nanoTime() - t0) / 1e9
       }
       // settled heap before the warm run: the 10x/30x/100x points of
@@ -245,13 +131,11 @@ object ScaleSweep {
       // inflates the NEXT entry's small-n points (deflating its fitted
       // exponent — the unsafe direction for a gate that fires on alpha
       // ABOVE cap); same discipline as Bench blocks
-      operators.EntryCaches.releaseAll()
-      spark.catalog.clearCache()
+      Catalog.release(spark)
       System.gc()
       once() // warm
       val t = math.min(once(), once())
-      operators.EntryCaches.releaseAll()
-      spark.catalog.clearCache()
+      Catalog.release(spark)
       t
     }
 
@@ -271,7 +155,7 @@ object ScaleSweep {
       try {
         val pts = factorsFor(n).map(f => f -> time(n, dirFor(f)))
         val alpha = fitAlpha(pts)
-        val cap = Caps.getOrElse(n, DefaultCap)
+        val cap = sweepOf(n).cap
         val ok = alpha <= cap
         if (!ok) failed ::= n
         val ptsStr = pts.map { case (f, t) => f"x$f ${t}%6.2f" }
@@ -289,8 +173,8 @@ object ScaleSweep {
           Some(s"""  "$n": {"error":"${e.getClass.getSimpleName}","pass":false}""")
       }
     }
-    def strMap(m: Map[String, String]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) =>
+    def strMap(m: Seq[(String, String)]): String =
+      m.sortBy(_._1).map { case (k, v) =>
         s""""$k": "${v.replace("\"", "'")}"""" }.mkString("{", ", ", "}")
     val pw = new PrintWriter(outJson)
     pw.println("{\n" + rows.mkString(",\n") +
@@ -301,9 +185,10 @@ object ScaleSweep {
       s""",\n  "driver_mem": "${sys.env.getOrElse("SPARK_DRIVER_MEM",
         "8g")}",""" +
       s"""\n  "factors": [${Factors.mkString(",")}],""" +
-      s"""\n  "x100_names": [${X100Names.toSeq.sorted
-        .map("\"" + _ + "\"").mkString(",")}],""" +
-      s"""\n  "x100_excluded": ${strMap(X100Excluded)},""" +
+      s"""\n  "x100_names": [${swept.collect { case (n, w) if w.x100 => n }
+        .sorted.map("\"" + _ + "\"").mkString(",")}],""" +
+      s"""\n  "x100_excluded": ${strMap(swept.collect {
+        case (n, Sweep.QuadraticNoX100(why)) => n -> why })},""" +
       s"""\n  "base": "$base",\n  "failed": [${
         failed.reverse.map("\"" + _ + "\"").mkString(",")}]\n}""")
     pw.close()
@@ -376,7 +261,8 @@ object ScaleSweep {
     * copy — customer/part/supplier stay dimensions and just get N×
     * hotter, which is the realistic fact-grows-dims-don't shape).
     * Exact replication gives every doc N−1 identical twins, so near-dup
-    * pair volume grows ~N² for the dedup families (see [[Caps]]).
+    * pair volume grows ~N² for the dedup families
+    * (`Sweep.QuadraticCap`).
     */
   private def replicate(spark: SparkSession, base: String,
       out: String, factor: Int): Unit = {

@@ -134,11 +134,8 @@ object Verify {
       timings(name) = sec
       System.err.println(f"[verify] $name%-28s $sec%8.2f s")
       // the catalog's persisted intermediates are per-query scoped;
-      // dropping them here keeps a 199-query run's storage memory flat.
-      // releaseAll drops the entry-tracked caches surgically; the
-      // clearCache sweep behind it catches anything untracked
-      graft.operators.EntryCaches.releaseAll()
-      spark.catalog.clearCache()
+      // dropping them here keeps a 206-query run's storage memory flat
+      queries.Catalog.release(spark)
       nDone += 1
       if (nDone % 20 == 0) sampleProbe(nDone)
     }

@@ -253,7 +253,7 @@ case class DoubleDot(left: Expression, right: Expression)
 }
 
 /** Embedding similarity as columns: the fused [[CosineSim]] plus
-  * compositional dot/norm builders, all in DOUBLE.
+  * dot-product builders, all in DOUBLE.
   */
 object VectorOps {
   import org.apache.spark.sql.graft.shims.{column, expression}
@@ -264,9 +264,6 @@ object VectorOps {
   /** Native one-loop Σ a_i·b_i (see [[DoubleDot]]). */
   def dotNative(a: Column, b: Column): Column =
     column(DoubleDot(expression(a), expression(b)))
-
-  def norm2(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
 
   /** Cosine similarity; callers round before comparing across engines. */
   def cosine(a: Column, b: Column): Column =

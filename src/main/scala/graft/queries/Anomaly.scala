@@ -449,7 +449,7 @@ object Anomaly {
     Entry("a04_anomaly_ensemble", (s, dir) =>
       detected(s, dir)
         .select("event_type", "event_id", "prob_ensemble"),
-      Some(ensembleOracle), bench = true),
+      Some(ensembleOracle), tier = Tier.Bench(core = true)),
 
     // a12: the SAME ensemble as a04, but through the chunked scale path
     // (Detectors.withProbsChunked) against the SAME oracle — the driver
@@ -490,14 +490,16 @@ object Anomaly {
              floor((2*sum(${Micro.sql("a.prob_ensemble")}) + count(*))
                    / (2.0*count(*))) / 1e6 AS avg_prob
       FROM anomalous a JOIN customer c ON a.user_id = c.c_custkey
-      GROUP BY a.event_type, c.c_mktsegment""")),
+      GROUP BY a.event_type, c.c_mktsegment"""),
+      tier = Tier.Swept(Sweep.Linear)),
 
     // bootstrap permutation tests: kernel-backed, md5-keyed draws —
     // exact DuckDB oracles replay every permutation (bootstrapOracle);
     // Spark == sequential kernel additionally pinned in AnomalyOpsSpec
     Entry("a06_anomaly_rank", permQuery(Seq("highrank", "lowrank")),
       Some(bootstrapOracle(permConf.permCount,
-        rank = true, diff = false, ks = false)), bench = true),
+        rank = true, diff = false, ks = false)),
+      tier = Tier.Bench(core = true)),
     Entry("a07_anomaly_diff", permQuery(Seq("diff")),
       Some(bootstrapOracle(permConf.permCount,
         rank = false, diff = true, ks = false))),
@@ -522,7 +524,7 @@ object Anomaly {
         .select(col("event_type"), col("event_id"),
           round(col("anomaly_prob"), 6).as("prob")),
       Some(bootstrapOracle(500, rank = true, diff = false, ks = true)),
-      bench = true),
+      tier = Tier.Bench(Sweep.LinearX100, core = true, heavy = true)),
 
     // a09: the deterministic core of the rank/diff tests, SQL-checkable.
     // The bootstrap p-values above resample with a seeded RNG (not
@@ -2806,7 +2808,7 @@ object Anomaly {
              CAST(CASE WHEN q_bucket = 0 THEN 0
                   ELSE CAST(pow(2.0, q_bucket - 1) AS BIGINT) END
                AS BIGINT) / 1e6 AS est
-      FROM hit"""), bench = true)
+      FROM hit"""), tier = Tier.Bench())
   }
 
   /** a43: peaks-over-threshold extreme-tail fit — the EVT operator of
@@ -3190,7 +3192,8 @@ object Anomaly {
              CASE WHEN wq.qb = 0 THEN 0
                   ELSE CAST(pow(2.0, wq.qb - 1) AS BIGINT) END / 1e6
                AS p95_7d
-      FROM dq JOIN wq USING (event_type, day_id)"""), bench = true)
+      FROM dq JOIN wq USING (event_type, day_id)"""),
+      tier = Tier.Bench(heavy = true))
   }
 
   /** a48's error budget: at most 5% of scored hours may alert. The 5%
@@ -3691,7 +3694,8 @@ object Anomaly {
       FROM (SELECT *, row_number() OVER (
               PARTITION BY event_type ORDER BY d1 DESC, pos) AS rk
             FROM nn)
-      WHERE rk <= 3"""))
+      WHERE rk <= 3"""),
+      tier = Tier.Swept(Sweep.Linear))
 
   /** a53: top-3 MOTIFS per series — the closest non-trivial in-horizon
     * window pairs (matrix-profile minima): recurring shapes whose

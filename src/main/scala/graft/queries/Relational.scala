@@ -134,7 +134,7 @@ object Relational {
              count(*) AS count_order
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-      GROUP BY l_returnflag, l_linestatus"""), bench = true),
+      GROUP BY l_returnflag, l_linestatus"""), tier = Tier.Bench(core = true)),
 
     // ---- q02: filter + projection (predicate/column pushdown to parquet)
     Entry("q02_filter", (s, dir) => {
@@ -187,7 +187,8 @@ object Relational {
       JOIN region   ON n_regionkey = r_regionkey
       WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
-      GROUP BY r_name, n_name"""), bench = true),
+      GROUP BY r_name, n_name"""),
+      tier = Tier.Bench(core = true, heavy = true)),
 
     // ---- q05: global top-k with total order (sort + limit)
     Entry("q05_topk", (s, dir) => {

@@ -1,14 +1,17 @@
 package graft
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CI twin of ScaleSweep's run-time enumeration gates (VERDICT r13
-  * #2 — the p28 lesson applied to the sweep itself): the sweep list
-  * plus its documented-exclusion maps must cover every bench and
-  * budget-top entry, and every declared-cap entry must either time
-  * the 100× point or carry a written exclusion. Pinned here so adding
-  * a heavy catalog entry fails `sbt test` immediately, not the next
-  * time someone happens to run the sweep.
+import graft.queries.{Catalog, Sweep}
+
+/** CI twin of ScaleSweep's run-time enumeration gate (VERDICT r13
+  * #2 — the p28 lesson applied to the sweep itself): every budget-top
+  * entry must be swept. Pinned here so adding a heavy catalog entry
+  * fails `sbt test` immediately, not the next time someone happens to
+  * run the sweep. The tier rules the types cannot state are checked
+  * here too.
   */
 class SweepCoverageSpec extends AnyFunSuite {
 
@@ -18,12 +21,30 @@ class SweepCoverageSpec extends AnyFunSuite {
     assert(errs.isEmpty, errs.mkString("\n"))
   }
 
-  test("x100 tier and per-entry caps reference real catalog entries " +
-    "(a stale name would silently gate nothing)") {
-    val known = queries.Catalog.queries.keySet
-    val stale = (ScaleSweep.X100Names ++ ScaleSweep.X100Excluded.keySet ++
-      ScaleSweep.Caps.keySet ++ ScaleSweep.Excluded.keySet ++
-      ScaleSweep.ExtraSweepNames).filterNot(known)
-    assert(stale.isEmpty, s"not in the catalog: $stale")
+  test("the budget-top gate names an unswept entry at or above the " +
+    "threshold, and only that one") {
+    val unswept = Catalog.all.filter(_.tier.swept.isEmpty).map(_.name)
+    assert(unswept.size >= 2)
+    val Seq(heavy, light) = unswept.take(2)
+    val at = ScaleSweep.BudgetTopThresholdSec
+    val budgets = Files.createTempFile("budgets", ".json")
+    try {
+      Files.writeString(budgets,
+        s"""{"$heavy": $at, "$light": ${at - 0.1}}""")
+      val errs = ScaleSweep.coverageErrors(budgets.toString)
+      assert(errs.size === 1, errs.mkString("\n"))
+      assert(errs.head.startsWith(s"$heavy "), errs.head)
+    } finally Files.delete(budgets)
+  }
+
+  test("every x100 exclusion gives a reason") {
+    val blank = ScaleSweep.swept.collect {
+      case (n, Sweep.QuadraticNoX100(why)) if why.trim.isEmpty => n }
+    assert(blank.isEmpty, s"x100 exclusions without a reason: $blank")
+  }
+
+  test("the bench list has a core set and a heavy tier") {
+    val tiers = Catalog.all.flatMap(_.bench)
+    assert(tiers.exists(_.core) && tiers.exists(_.heavy))
   }
 }

@@ -11,12 +11,22 @@ import org.apache.hadoop.fs.{ChecksumException, ChecksumFs, FileAlreadyExistsExc
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSession, SparkTestBase}
 import graft.SparkTestBase.processStarts
 
 class ForkFreeLocalFileSystemSpec extends AnyFunSuite with SparkTestBase {
+
+  // Closing a RocksDB state store deletes its local directory through an
+  // `rm -rf` process, and the maintenance thread closes the stores that
+  // earlier suites' queries left loaded at any moment. Close them all
+  // first, so the JVM-wide process counts below see only this suite.
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    StateStore.stop()
+  }
 
   private def octal(s: String): Int = Integer.parseInt(s, 8)
 
